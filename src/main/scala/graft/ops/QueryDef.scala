@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One registered engine operation: a Spark DataFrame program plus (when
   * SQL-expressible) an equivalent ANSI SQL oracle the driver runs in DuckDB
@@ -95,12 +97,13 @@ object QueryDef {
     * type every downstream query (unix_micros in q_sessionize, streaming
     * watermarks) and every green oracle compare was built against. All
     * entry points run with session tz UTC, so the NTZ→TIMESTAMP cast is
-    * lossless.
+    * lossless. Reads go through the per-session schema cache
+    * ([[readParquet]]).
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       graft.GraftSession.ensurePrepared(spark) // nanos-as-long read conf
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = readParquet(spark, s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", org.apache.spark.sql.functions.expr(
@@ -111,7 +114,49 @@ object QueryDef {
         case _ => raw
       }
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      readParquet(spark, s"$dir/$name.parquet")
+    }
+  }
+
+  /** A parquet file's identity for schema reuse. The nanos-as-long conf is
+    * part of it: it changes the inferred type of a TIMESTAMP(NANOS) column.
+    */
+  private final case class SchemaKey(path: String, length: Long, modified: Long,
+      nanosAsLong: String)
+
+  /** Inferred schemas per session. Weak keys: a stopped session's cache
+    * goes with it.
+    */
+  private val schemaCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]]())
+
+  /** `spark.read.parquet(path)` with the inferred schema cached per
+    * session. Inference is a Spark job (80–200 ms a read); a file with the
+    * same path, length and modification time has the same footer, so a
+    * repeat read supplies the cached schema and runs no job. A directory
+    * is inferred on every read: its own status does not track its files.
+    * A missing path goes straight to Spark, which reports it.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filterNot(_.isDirectory) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
+          spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+        val cache = schemaCache.computeIfAbsent(spark,
+          _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]())
+        Option(cache.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            cache.put(key, df.schema)
+            df
+        }
     }
   }
 }

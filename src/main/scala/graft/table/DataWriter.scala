@@ -246,17 +246,19 @@ object DataWriter {
         modes.get(f.id).forall(_.kind != "none"))
     if (floatFields.isEmpty || files.isEmpty) return files
     import org.apache.spark.sql.functions.{isnan, sum, when}
-    def norm(p: String) = IceScan.pathOnly(p)
+    import org.apache.spark.sql.types.StructType
     val aggs = floatFields.map(f =>
       sum(when(isnan(col(f.name)), 1L).otherwise(0L)).as(s"__nan_${f.id}"))
-    val byFile = spark.read.parquet(files.map(_.filePath): _*)
+    // the float columns only, resolved by field id
+    val byFile = IceScan.readFiles(spark,
+        StructType(floatFields.map(SchemaConv.toSparkField)), files)
       .groupBy(col("_metadata.file_path").as("__fp"))
       .agg(aggs.head, aggs.drop(1): _*)
       .collect()
-      .map(r => norm(r.getAs[String]("__fp")) ->
+      .map(r => IceScan.pathOnly(r.getAs[String]("__fp")) ->
         floatFields.map(f => f.id -> r.getAs[Long](s"__nan_${f.id}")).toMap)
       .toMap
-    files.map(f => byFile.get(norm(f.filePath))
+    files.map(f => byFile.get(graft.meta.FileIO.pathOnly(f.filePath))
       .map(m => f.copy(nanValueCounts = m)).getOrElse(f))
   }
 

@@ -404,10 +404,10 @@ final class IceTable private (
     val expanded = paths.flatMap(expandDir)
     require(expanded.distinct.size == expanded.size,
       "file paths must be unique for addFiles (after directory expansion)")
-    // scheme-insensitive comparison (same norm as DataWriter/positionsOf):
-    // `file:///x` and `/x` are the same file, and a scheme-qualified
-    // re-registration must not slip past the duplicate guard (ADVICE r13)
-    def norm(p: String) = IceScan.pathOnly(p)
+    // scheme-insensitive comparison of Hadoop path strings: `file:///x`
+    // and `/x` are the same file, and a scheme-qualified re-registration
+    // must not slip past the duplicate guard (ADVICE r13)
+    def norm(p: String) = FileIO.pathOnly(p)
     val requested = expanded.map(norm).toSet
     val referenced = currentSnapshot.toSeq
       .flatMap(_ => newScan().planFiles().map(_.file.filePath))
@@ -898,7 +898,7 @@ final class IceTable private (
       t.deletes.nonEmpty || t.eqDeletes.nonEmpty || t.dvDeletes.nonEmpty)
     val source =
       if (hasDeletes || preserveLineage) scan.toDFFor(spark, tasks)
-      else spark.read.schema(schema.toSpark).parquet(oldPaths.toSeq: _*)
+      else IceScan.readFiles(spark, schema.toSpark, tasks.map(_.file))
     // the REAL spec, not Unpartitioned: replacement files registered under
     // a partitioned spec with empty tuples would read back as all-null
     // partition values, and partition-filtered scans would silently prune
@@ -1097,8 +1097,7 @@ final class IceTable private (
     val files =
       if (partial.isEmpty) Nil
       else {
-        val paths = partial.map(_.file.filePath)
-        val matches = spark.read.schema(schemaNow.toSpark).parquet(paths: _*)
+        val matches = IceScan.readFiles(spark, schemaNow.toSpark, partial.map(_.file))
           .withColumn("file_path", IceScan.normalizedMetaPath)
           .withColumn("pos", col("_metadata.row_index"))
           .where(Predicates.toColumn(bound))
@@ -1171,8 +1170,7 @@ final class IceTable private (
       val files =
         if (partial.isEmpty) Nil
         else {
-          val paths = partial.map(_.file.filePath)
-          val matches = spark.read.schema(schemaNow.toSpark).parquet(paths: _*)
+          val matches = IceScan.readFiles(spark, schemaNow.toSpark, partial.map(_.file))
             .withColumn("file_path", IceScan.normalizedMetaPath)
             .withColumn("pos", col("_metadata.row_index"))
             .where(Predicates.toColumn(bound))
@@ -1331,7 +1329,6 @@ final class IceTable private (
     */
   private def eqKilledPositions(spark: SparkSession, scan: IceScan,
       tasks: Seq[FileScanTask]): Option[org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val affected = tasks.filter(_.eqDeletes.nonEmpty)
     if (affected.isEmpty) return None
     val schemaNow = schema
@@ -1363,25 +1360,15 @@ final class IceTable private (
       .map { case (ids, delFiles, groupTasks) =>
         val fields = ids.map(schemaNow.byId(_))
         val names = fields.map(_.name)
-        val keySchema = StructType(fields.map(SchemaConv.toSparkField))
         val dataTasks = groupTasks
-        val seqRows = new java.util.ArrayList[org.apache.spark.sql.Row](dataTasks.size)
-        dataTasks.foreach(t =>
-          seqRows.add(org.apache.spark.sql.Row(t.file.filePath, t.dataSeq)))
-        val seqMap = spark.createDataFrame(seqRows, StructType(Seq(
-          StructField("__sp", StringType, nullable = false),
-          StructField("__seq", LongType, nullable = false))))
+        val seqMap = IceScan.sequenceMap(spark,
+          dataTasks.map(t => t.file.filePath -> t.dataSeq), "__sp", "__seq")
         val data = scan.readTasksProjected(spark, dataTasks,
             IceSchema(-1, fields), stampPathPos = true)
           .withColumnRenamed("__path", "file_path")
           .withColumnRenamed("__pos", "pos")
           .join(broadcast(seqMap), col("file_path") === col("__sp"), "left")
-        val delRows = delFiles.map { case (f, dseq) =>
-          spark.read.schema(keySchema).parquet(f.filePath)
-            .withColumn("__dseq", lit(dseq))
-        }.reduce(_.unionByName(_))
-        val renamed = delRows.select(
-          names.map(n => col(n).as(s"__d_$n")) :+ col("__dseq"): _*)
+        val renamed = IceScan.equalityDeleteRows(spark, fields, delFiles)
         val bytes = delFiles.map(_._1.fileSizeInBytes).sum
         val side =
           if (bytes <= IceScan.DeleteBroadcastMaxBytes) broadcast(renamed) else renamed
@@ -1774,10 +1761,9 @@ final class IceTable private (
             d.properties.getOrElse("null-count", "0").toLong)
         }
       } else {
-        val df = spark.read.schema(
-            org.apache.spark.sql.types.StructType(
-              schema.toSpark.fields.filter(f => cols.exists(_.name == f.name))))
-          .parquet(newTasks.map(_.file.filePath): _*)
+        val df = IceScan.readFiles(spark,
+            StructType(schema.toSpark.fields.filter(f => cols.exists(_.name == f.name))),
+            newTasks.map(_.file))
           .select(cols.map(f => col(f.name)): _*)
         val (fresh, _) = ThetaStats.sketchColumns(df)
         cols.zip(fresh).map { case (f, st) =>
@@ -2737,6 +2723,13 @@ final class IceScan(
   /** Execute over an explicit task subset — rewrite paths (compaction,
     * predicate overwrite) use this to read WITH deletes applied while
     * scoping to the files they rewrite.
+    *
+    * Every file is read from its manifest entry ([[IceScan.readFiles]]):
+    * the data files ([[readTasksProjected]]), ONE scan of all parquet
+    * position-delete files ([[IceScan.positionsOf]]) and ONE scan per
+    * equality-id set ([[IceScan.equalityDeleteRows]]), so building the
+    * frame lists nothing, infers nothing and submits no Spark job, and the
+    * plan holds a scan per file kind instead of one per delete file.
     */
   private[table] def toDFFor(spark: SparkSession, tasks: Seq[FileScanTask]): DataFrame = {
     val schema = scanSchema
@@ -2805,30 +2798,19 @@ final class IceScan(
         col("__path") === col("file_path") && col("__pos") === col("pos"), "left_anti")
     }
     if (needEqDeletes) {
-      // per-row data sequence number, via a metadata-sized (path → seq) map
-      // joined broadcast on the stamped file path — the sequence scoping
-      // cannot be a static filter because one scan unions files of many
-      // sequences
-      val seqRows = new java.util.ArrayList[org.apache.spark.sql.Row](tasks.size)
-      tasks.foreach(t => seqRows.add(org.apache.spark.sql.Row(t.file.filePath, t.dataSeq)))
-      val seqMap = spark.createDataFrame(seqRows, StructType(Seq(
-        StructField("__sp", StringType, nullable = false),
-        StructField("__seq", LongType, nullable = false))))
+      // per-row data sequence number, joined broadcast on the stamped path
+      val seqMap = IceScan.sequenceMap(spark,
+        tasks.map(t => t.file.filePath -> t.dataSeq), "__sp", "__seq")
       df = df.join(broadcast(seqMap), col("__path") === col("__sp"), "left").drop("__sp")
-      // one anti-join per distinct equality-column set; delete rows carry
-      // their file's sequence so a row deletes only strictly older data.
-      // Null-safe equality: a null key value matches null (Iceberg spec)
+      // one scan and one anti-join per distinct equality-column set;
+      // delete rows carry their file's sequence so a row deletes only
+      // strictly older data. Null-safe equality: a null key value matches
+      // null (Iceberg spec)
       eqDeletePairs.groupBy(_._1.equalityIds).toSeq.sortBy(_._1.mkString(","))
         .foreach { case (ids, files) =>
           val fields = ids.map(schema.byId(_))
           val names = fields.map(_.name)
-          val reqSchema = StructType(fields.map(SchemaConv.toSparkField))
-          val delRows = files.map { case (f, seq) =>
-            spark.read.schema(reqSchema).parquet(f.filePath)
-              .withColumn("__dseq", lit(seq))
-          }.reduce(_.unionByName(_))
-          val renamed = delRows.select(
-            names.map(n => col(n).as(s"__d_$n")) :+ col("__dseq"): _*)
+          val renamed = IceScan.equalityDeleteRows(spark, fields, files)
           val bytes = files.map(_._1.fileSizeInBytes).sum
           val side =
             if (bytes <= IceScan.DeleteBroadcastMaxBytes) broadcast(renamed) else renamed
@@ -2865,8 +2847,11 @@ final class IceScan(
   }
 
   /** Raw projected read of the tasks' data files, resolving each file the
-    * way the table's scan does. Files written by us carry parquet field
-    * IDs → ID-based resolution. With an explicit name mapping
+    * way the table's scan does. Each resolution group is one
+    * manifest-backed scan ([[IceScan.readFiles]]) over the tasks' entries
+    * — paths and sizes from the manifests, no listing — so a scan of any
+    * width builds without a Spark job. Files written by us carry parquet
+    * field IDs → ID-based resolution. With an explicit name mapping
     * (`schema.name-mapping.default`, reference `name_mapping.go:30-80`),
     * externally-added files without field IDs are read by NAME under their
     * mapped aliases (a field-ID schema would silently null-fill them) and
@@ -2881,7 +2866,6 @@ final class IceScan(
   private[table] def readTasksProjected(spark: SparkSession, tasks: Seq[FileScanTask],
       readSchema: IceSchema, stampPathPos: Boolean): DataFrame = {
     val schema = scanSchema
-    val paths = tasks.map(_.file.filePath)
     val aliasOf: Map[Int, String] = meta.properties.get(NameMapping.PropertyKey)
       .map(j => NameMapping.aliasById(NameMapping.parse(j))).getOrElse(Map.empty)
     def aliasName(f: NestedField): String = aliasOf.getOrElse(f.id, f.name)
@@ -2895,8 +2879,8 @@ final class IceScan(
     // column presence from the per-column stats keys — so planning opens
     // ZERO data files. Only legacy entries written before the stamp (or
     // stat-less files under defaulted columns) pay a footer sniff.
-    val groups: Seq[((Boolean, Set[Int]), Seq[String])] =
-      if (!needSplit) Seq((true, Set.empty[Int]) -> paths)
+    val groups: Seq[((Boolean, Set[Int]), Seq[DataFile])] =
+      if (!needSplit) Seq((true, Set.empty[Int]) -> tasks.map(_.file))
       else {
         val nameToId = NameMapping.index(table.nameMapping)
         // the stats-key shortcut infers "column absent from file" from
@@ -2918,17 +2902,17 @@ final class IceScan(
               Some((ids, statsIds))
             case _ => None
           }
-          Seq(f.filePath -> fromManifest.getOrElse(
+          Seq(f -> fromManifest.getOrElse(
             ParquetStats.fileColumns(f.filePath, nameToId)))
         }
           .groupBy { case (_, (hasIds, present)) => (hasIds, defaultedIds -- present) }
           .view.mapValues(_.map(_._1).toSeq).toSeq
       }
 
-    def readBranch(ps: Seq[String], schema: org.apache.spark.sql.types.StructType,
+    def readBranch(fs: Seq[DataFile], schema: StructType,
         renames: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]])
         : DataFrame = {
-      var d = spark.read.schema(schema).parquet(ps: _*)
+      var d = IceScan.readFiles(spark, schema, fs)
       // per-file row positions must be stamped before any union hides the
       // per-file _metadata column
       if (stampPathPos) d = d
@@ -2954,10 +2938,10 @@ final class IceScan(
     val foreignSchema = org.apache.spark.sql.types.StructType(readSchema.fields.map(f =>
       org.apache.spark.sql.types.StructField(aliasName(f),
         NameMapping.aliasedSparkType(f.tpe, aliasFn), nullable = !f.required)))
-    val branches = groups.map { case ((hasIds, absentDefaulted), ps) =>
+    val branches = groups.map { case ((hasIds, absentDefaulted), fs) =>
       var d =
-        if (hasIds) readBranch(ps, readSchema.toSpark, None)
-        else readBranch(ps, foreignSchema,
+        if (hasIds) readBranch(fs, readSchema.toSpark, None)
+        else readBranch(fs, foreignSchema,
           Some(readSchema.fields.map(f =>
             (aliasName(f), f.name, IceType.toSpark(f.tpe)))))
       defaultedFields.filter(f => absentDefaulted.contains(f.id)).foreach { f =>
@@ -3081,28 +3065,82 @@ object IceScan {
     * Stripping only `file:` made every MOR delete stop applying on
     * warehouses with a scheme+authority (hdfs://nn:8020, s3a://bucket):
     * the manifest side is bare, the delete side kept the full URI, and
-    * the path equi-joins never matched.
+    * the path equi-joins never matched. The URI is also percent-encoded
+    * while manifests hold the decoded path: a partition directory whose
+    * name carries a `%` (escaped string partition values) never matched
+    * either, so the path is percent-decoded too. `+` is a literal in a URI
+    * path, not a space, so it is protected from the form decoder. This runs
+    * per row: decoding only paths that hold a `%` keeps the common case at
+    * the cost of the scheme strip (an unconditional decode doubled it).
     */
-  def normalizedMetaPath: org.apache.spark.sql.Column =
-    regexp_replace(col("_metadata.file_path"),
+  def normalizedMetaPath: org.apache.spark.sql.Column = {
+    val bare = regexp_replace(col("_metadata.file_path"),
       "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
+    when(bare.contains("%"), url_decode(regexp_replace(bare, "\\+", "%2B")))
+      .otherwise(bare)
+  }
 
-  /** Scala-side twin of [[normalizedMetaPath]]: URI → bare absolute path. */
+  /** Scala-side twin of [[normalizedMetaPath]]: URI → bare, decoded
+    * absolute path. For Hadoop path strings (already decoded) use
+    * [[graft.meta.FileIO.pathOnly]] instead.
+    */
   def pathOnly(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
+    java.net.URLDecoder.decode(
+      p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "").replace("+", "%2B"),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Parquet read of files the manifests already describe. Spark's
+    * path-based reader rediscovers what the entries record: it stats every
+    * path (a listing JOB past 32 paths) and infers a schema when none is
+    * given. Here the relation's file index is the entries themselves —
+    * qualified path and `fileSizeInBytes`, one partition directory, and a
+    * `sizeInBytes` equal to the summed file sizes, so broadcast and join
+    * choices see exactly what a listed read would. Building the frame
+    * touches no storage and submits no Spark job. The schema is made
+    * nullable, as Spark's own reader does with a user schema.
+    */
+  def readFiles(spark: SparkSession, schema: StructType,
+      files: Seq[DataFile]): DataFrame = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fsByRoot = collection.mutable.HashMap
+      .empty[(String, String), org.apache.hadoop.fs.FileSystem]
+    val statuses = files.distinctBy(_.filePath).map { f =>
+      val p = new org.apache.hadoop.fs.Path(f.filePath)
+      val u = p.toUri
+      val fs = fsByRoot.getOrElseUpdate((u.getScheme, u.getAuthority),
+        p.getFileSystem(hadoopConf))
+      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata(
+        new org.apache.hadoop.fs.FileStatus(f.fileSizeInBytes, false, 0, 0L, 0L,
+          fs.makeQualified(p)))
+    }
+    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      ManifestFileIndex(statuses), new StructType(),
+      org.apache.spark.sql.graftshim.GraftShim.asNullable(schema), None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      Map.empty)(spark)
+    spark.baseRelationToDataFrame(relation)
+  }
+
+  /** Fixed read schema of parquet position-delete files (name-resolved:
+    * Spark-written delete files carry no field ids).
+    */
+  private val PositionDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 
   /** (file_path, pos) rows of parquet positional-delete files plus
-    * deletion-vector blobs. DV bitmaps decode EXECUTOR-side — the driver
-    * ships only (puffin, offset, length, ref) pointers, so a multi-GB
-    * accumulated delete set never materializes on the driver.
+    * deletion-vector blobs. The parquet files are read in ONE
+    * manifest-backed scan ([[readFiles]]) with the fixed delete schema, so
+    * no listing or schema-inference job runs. DV bitmaps decode
+    * EXECUTOR-side — the driver ships only (puffin, offset, length, ref)
+    * pointers, so a multi-GB accumulated delete set never materializes on
+    * the driver.
     */
   def positionsOf(spark: SparkSession, parquetDeletes: Seq[DataFile],
       dvs: Seq[DataFile]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val parts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
     if (parquetDeletes.nonEmpty)
-      parts += spark.read.parquet(parquetDeletes.map(_.filePath).distinct: _*)
-        .select(col("file_path"), col("pos"))
+      parts += readFiles(spark, PositionDeleteSchema, parquetDeletes)
     if (dvs.nonEmpty) {
       val refs = dvs.map(f => (f.filePath, f.contentOffset.getOrElse(0L),
         f.contentSizeInBytes.getOrElse(0L), f.referencedDataFile.getOrElse("")))
@@ -3118,6 +3156,36 @@ object IceScan {
     parts.result().reduce(_.unionByName(_))
   }
 
+  /** A metadata-sized (path, data sequence number) frame — the broadcast
+    * join side that gives each scanned row its file's sequence, which no
+    * static filter can when one scan covers files of many sequences.
+    */
+  private[table] def sequenceMap(spark: SparkSession, entries: Seq[(String, Long)],
+      pathCol: String, seqCol: String): DataFrame = {
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](entries.size)
+    entries.foreach { case (p, seq) => rows.add(org.apache.spark.sql.Row(p, seq)) }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField(pathCol, StringType, nullable = false),
+      StructField(seqCol, LongType, nullable = false))))
+  }
+
+  /** Rows of the equality-delete files of ONE equality-id set, projected
+    * to the key columns as `__d_<name>` plus `__dseq`, the delete file's
+    * data sequence number. One manifest-backed scan covers every file of
+    * the set; each row's sequence comes from a metadata-sized
+    * (path → sequence) map joined broadcast on the stamped file path.
+    */
+  private[table] def equalityDeleteRows(spark: SparkSession, keyFields: Seq[NestedField],
+      files: Seq[(DataFile, Long)]): DataFrame = {
+    val seqMap = sequenceMap(spark,
+      files.map { case (f, seq) => FileIO.pathOnly(f.filePath) -> seq }, "__dp", "__dseq")
+    val names = keyFields.map(_.name)
+    readFiles(spark, StructType(keyFields.map(SchemaConv.toSparkField)), files.map(_._1))
+      .withColumn("__dpath", normalizedMetaPath)
+      .join(broadcast(seqMap), col("__dpath") === col("__dp"))
+      .select(names.map(n => col(n).as(s"__d_$n")) :+ col("__dseq"): _*)
+  }
+
   /** All position-delete rows applicable to the given tasks, or None when
     * the tasks carry no positional deletes (used by the DV rewrite).
     */
@@ -3128,6 +3196,27 @@ object IceScan {
     if (parquetDeletes.isEmpty && dvs.isEmpty) None
     else Some(positionsOf(spark, parquetDeletes, dvs))
   }
+}
+
+/** Spark file index over manifest entries: the files a scan planned, with
+  * the sizes the manifests recorded, as one unpartitioned directory.
+  * Listing is a lookup — no storage call — and pruning already happened in
+  * [[IceScan.planFiles]], so the filters Spark passes are ignored.
+  */
+private[table] final case class ManifestFileIndex(
+    files: Seq[org.apache.spark.sql.execution.datasources.FileStatusWithMetadata])
+    extends org.apache.spark.sql.execution.datasources.FileIndex {
+  import org.apache.spark.sql.execution.datasources.PartitionDirectory
+  override def rootPaths: Seq[org.apache.hadoop.fs.Path] = files.map(_.getPath)
+  override def listFiles(
+      partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, files))
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override val sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
 }
 
 /** A create-table staged client-side (reference `StagedTable`,

@@ -47,4 +47,10 @@ object GraftShim {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.flatMap(_.getCheckpointFile)
   }
+
+  /** The schema with every level nullable — what Spark's own file reader
+    * does to a user-supplied schema (`asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }
