@@ -234,14 +234,14 @@ object Ingest {
               (ancestryIds.contains(e.snapshotId) ||
                 meta.snapshotById(e.snapshotId).isEmpty)
           }
-          .map(_.dataFile.filePath)
+          .map(_.dataFile)
       }
     if (newFiles.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         table.schema.toSpark)
     else {
       graft.GraftSession.ensurePrepared(spark)
-      spark.read.schema(table.schema.toSpark).parquet(newFiles: _*)
+      IceScan.readFiles(spark, table.schema.toSpark, newFiles)
     }
   }
 
@@ -311,11 +311,11 @@ object Ingest {
               (ancestryIds.contains(e.snapshotId) ||
                 meta.snapshotById(e.snapshotId).isEmpty)
           }
-          .map(e => (e.sequenceNumber.getOrElse(m.sequenceNumber), e.dataFile.filePath))
+          .map(e => (e.sequenceNumber.getOrElse(m.sequenceNumber), e.dataFile))
       }
       .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
-      .foreach { case (seq, paths) =>
-        parts += spark.read.schema(sparkSchema).parquet(paths: _*)
+      .foreach { case (seq, files) =>
+        parts += IceScan.readFiles(spark, sparkSchema, files)
           .withColumn("change_type", lit("I")).withColumn("change_seq", lit(seq))
       }
     // deletes: each delete snapshot's added (file_path, pos) set, inverted
@@ -353,10 +353,9 @@ object Ingest {
         .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, table.schema)._2
           .filter(e => e.status == graft.meta.ManifestEntryStatus.Deleted &&
             e.snapshotId == s.snapshotId)
-          .map(_.dataFile.filePath))
-        .distinct
+          .map(_.dataFile))
       if (dropped.nonEmpty) {
-        val rows = spark.read.schema(sparkSchema).parquet(dropped: _*)
+        val rows = IceScan.readFiles(spark, sparkSchema, dropped)
           .withColumn("file_path", IceScan.normalizedMetaPath)
           .withColumn("pos", col("_metadata.row_index"))
         val live = dead match {

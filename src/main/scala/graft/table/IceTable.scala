@@ -111,28 +111,36 @@ final class IceTable private (
     newMeta.copy(metadataLog = (meta.metadataLog :+ entry).takeRight(max))
   }
 
-  /** Every metadata CAS goes through here so `metadata-log` stays complete. */
+  /** Every metadata CAS goes through here, so `metadata-log` stays complete
+    * and every commit prunes superseded versions (reference
+    * `table/table.go:220-232`).
+    */
   private def commitMeta(newMeta: TableMetadata): Unit = {
     val logged = withMetadataLog(newMeta)
     version = catalog.commit(name, version, logged)
     meta = logged
+    maintainMetadata()
+  }
+
+  /** Run a commit, rebasing on a CAS conflict: refresh and re-run `body`, at
+    * most 3 more times. `body` rebuilds everything from the refreshed
+    * `meta`; staged deltas ride in as its captured arguments, never as
+    * pre-mutated metadata, which the reload would silently discard.
+    */
+  private def retryOnConflict[A](body: => A): A = synchronized {
+    def attempt(retries: Int): A =
+      try body
+      catch {
+        case _: CommitConflictException if retries > 0 => refresh(); attempt(retries - 1)
+      }
+    attempt(3)
   }
 
   private def commitWithRequirements(reqs: Seq[TableRequirement],
-      update: TableMetadata => TableMetadata, retries: Int = 3): Unit = synchronized {
+      update: TableMetadata => TableMetadata): Unit = retryOnConflict {
     reqs.flatMap(_.validate(meta)) match {
-      case Nil =>
-        val newMeta = update(meta)
-        try {
-          commitMeta(newMeta)
-          maintainMetadata()
-        } catch {
-          case _: CommitConflictException if retries > 0 =>
-            refresh()
-            commitWithRequirements(reqs, update, retries - 1)
-        }
-      case errs =>
-        throw new RequirementFailedException(errs.mkString("; "))
+      case Nil => commitMeta(update(meta))
+      case errs => throw new RequirementFailedException(errs.mkString("; "))
     }
   }
 
@@ -191,54 +199,14 @@ final class IceTable private (
     * branch refs per `table/refs.go`; the WAP pattern itself is the
     * audit-branch workflow Iceberg documents around `wap.branch`.
     */
-  def appendToBranch(df: DataFrame, branch: String, retries: Int = 3): Snapshot =
-    synchronized {
-      val files = DataWriter.write(df, location, schema, spec, sortOrder,
-        meta.properties, avgRowBytesHint = avgRowBytes)
-      def attempt(r: Int): Snapshot = try {
-        val snapId = meta.reserveSnapshotId()
-        val seq = meta.lastSequenceNumber + 1
-        val commitUuid = UUID.randomUUID().toString
-        val entries = files.map(f =>
-          ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-        val mf = ManifestIO.writeManifest(metaPath(s"$commitUuid-m0.avro"),
-            entries, spec, schema, formatVersion = meta.formatVersion)
-          .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-        val parent = meta.refs.get(branch)
-          .flatMap(ref => meta.snapshotById(ref.snapshotId))
-          .orElse(meta.currentSnapshot)
-        val parentManifests =
-          parent.map(s => ManifestIO.readManifestList(s.manifestList)).getOrElse(Nil)
-        val listPath = metaPath(s"snap-$snapId-1-$commitUuid.avro")
-        val (lineaged, lineageEnd) = assignRowLineage(mf +: parentManifests)
-        ManifestIO.writeManifestList(listPath, lineaged, meta.formatVersion)
-        val now = System.currentTimeMillis()
-        val collector = summarizeCommit(Seq(mf))
-        val addedRecords = collector.addedDataRecords
-        val summary = Map("operation" -> "append") ++
-          SnapshotSummary.withTotals(collector.build(),
-            parent.map(_.summary).getOrElse(Map.empty))
-        val firstRowId =
-          if (meta.formatVersion >= 3) Some(meta.nextRowId.getOrElse(0L)) else None
-        val snap = Snapshot(snapId, parent.map(_.snapshotId), seq, now, listPath,
-          summary, meta.currentSchemaId, firstRowId = firstRowId)
-        val branchRef = meta.refs.get(branch).map(_.copy(snapshotId = snapId))
-          .getOrElse(SnapshotRef(snapId, "branch"))
-        // NO currentSnapshotId / main / snapshot-log movement: the stage is
-        // invisible to readers until published
-        commitMeta(meta.copy(
-          lastSequenceNumber = seq,
-          lastUpdatedMs = now,
-          snapshots = meta.snapshots :+ snap,
-          refs = meta.refs + (branch -> branchRef),
-          nextRowId = firstRowId.map(f => math.max(lineageEnd, f + addedRecords))))
-        maintainMetadata()
-        snap
-      } catch {
-        case _: CommitConflictException if r > 0 => refresh(); attempt(r - 1)
-      }
-      attempt(retries)
+  def appendToBranch(df: DataFrame, branch: String): Snapshot = {
+    val files = DataWriter.write(df, location, schema, spec, sortOrder,
+      meta.properties, avgRowBytesHint = avgRowBytes)
+    retryOnConflict {
+      val p = newSnapshot()
+      p.commit("append", p.manifest(files, spec) +: manifestsOf(headOf(branch)), branch)
     }
+  }
 
   /** Write-audit-publish PUBLISH step: fast-forward `main` to `branch`'s
     * head. Requires main's current head to be an ancestor of the branch
@@ -266,9 +234,7 @@ final class IceTable private (
       val now = System.currentTimeMillis()
       m.copy(
         currentSnapshotId = Some(target.snapshotId),
-        refs = m.refs + ("main" -> m.refs.get("main")
-          .map(_.copy(snapshotId = target.snapshotId))
-          .getOrElse(SnapshotRef(target.snapshotId, "branch"))),
+        refs = m.refs + ("main" -> advanceRef(m, "main", target.snapshotId)),
         snapshotLog = m.snapshotLog :+ SnapshotLogEntry(now, target.snapshotId),
         lastUpdatedMs = now)
     })
@@ -316,8 +282,11 @@ final class IceTable private (
           e.snapshotId == snapshotId)
         .map(_.dataFile))
     require(files.nonEmpty, s"snapshot $snapshotId added no data files")
-    commitAddedFiles(files, retries = 3,
-      extraSummary = Map(IceTable.SourceSnapshotIdKey -> snapshotId.toString))
+    retryOnConflict {
+      val p = newSnapshot()
+      p.commit("append", p.onParent(Seq(p.manifest(files, spec))),
+        extraSummary = Map(IceTable.SourceSnapshotIdKey -> snapshotId.toString))
+    }
   }
 
   /** Attach the spec's per-ref retention policy (reference
@@ -349,7 +318,10 @@ final class IceTable private (
   def append(df: DataFrame, extraSummary: Map[String, String] = Map.empty): Snapshot = {
     val files = DataWriter.write(df, location, schema, spec, sortOrder,
       meta.properties, avgRowBytesHint = avgRowBytes)
-    commitAddedFiles(files, retries = 3, extraSummary = extraSummary)
+    retryOnConflict {
+      val p = newSnapshot()
+      p.commit("append", p.onParent(Seq(p.manifest(files, spec))), extraSummary = extraSummary)
+    }
   }
 
   /** Register already-written Parquet files (reference `AddFiles`
@@ -493,9 +465,12 @@ final class IceTable private (
     // flag the table: scans then route ID-less files (stamped per entry by
     // toDataFile from the footer already open for stats) by (mapped) name
     val anyIdLess = files.exists(_.hasFieldIds.contains(false))
-    commitAddedFiles(files, retries = 3,
-      setProps = if (anyIdLess) Map(IceTable.HasIdLessFilesProp -> "true") else Map.empty,
-      extraSummary = snapshotProps)
+    retryOnConflict {
+      val p = newSnapshot()
+      p.commit("append", p.onParent(Seq(p.manifest(files, spec))),
+        setProps = if (anyIdLess) Map(IceTable.HasIdLessFilesProp -> "true") else Map.empty,
+        extraSummary = snapshotProps)
+    }
   }
 
   /** Observed on-disk bytes per row from the running totals the snapshot
@@ -522,51 +497,148 @@ final class IceTable private (
       .map(NameMapping.parse)
       .getOrElse(NameMapping.default(schema))
 
-  private def commitAddedFiles(files: Seq[DataFile], retries: Int,
-      setProps: Map[String, String] = Map.empty,
-      removeProps: Seq[String] = Nil,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = synchronized {
-    try {
-      val snapId = meta.reserveSnapshotId()
-      val seq = meta.lastSequenceNumber + 1
-      val commitUuid = UUID.randomUUID().toString
-      val manifestPath = metaPath(s"$commitUuid-m0.avro")
-      val entries = files.map(f =>
-        ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-      val mf = ManifestIO.writeManifest(manifestPath, entries, spec, schema,
-        formatVersion = meta.formatVersion)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-      commitManifests(Seq(mf), snapId, seq, commitUuid, "append",
-        setProps = setProps, removeProps = removeProps, extraSummary = extraSummary)
-    } catch {
-      case _: CommitConflictException if retries > 0 =>
-        // refresh() reloads meta from the catalog, so any staged property
-        // delta must ride the retry as explicit arguments, not a pre-mutated
-        // meta (which the reload would silently discard)
-        refresh()
-        commitAddedFiles(files, retries - 1, setProps, removeProps, extraSummary)
+  // ------------------------------------------------------ snapshot producer
+  /** Start a snapshot commit: the snapshot id, the next sequence number and
+    * the commit UUID. Callers that stamp them into artifacts written before
+    * the commit (deletion-vector blobs, distributed worker manifests)
+    * reserve them up front and hand them in.
+    */
+  private def newSnapshot(snapId: Long = meta.reserveSnapshotId(),
+      commitUuid: String = UUID.randomUUID().toString): PendingSnapshot =
+    new PendingSnapshot(snapId, meta.lastSequenceNumber + 1, commitUuid)
+
+  /** The one snapshot producer (reference `snapshot_producers.go:420-718`):
+    * every commit writes its manifests here and lands through [[commit]],
+    * the only code that writes a manifest list, builds a summary and a
+    * [[Snapshot]] and CASes it. Used under the table lock.
+    */
+  private final class PendingSnapshot(val snapId: Long, val seq: Long,
+      val commitUuid: String) {
+    private var written = 0
+
+    /** Write `entries` as this commit's next manifest,
+      * `$commitUuid-$tag$N.avro`, stamped with its sequence number and
+      * snapshot id; the minimum sequence number is the lowest live entry's.
+      */
+    def writeManifest(entries: Seq[ManifestEntry], spec: PartitionSpec,
+        content: Int = 0, tag: String = "m"): ManifestFile = {
+      val path = metaPath(s"$commitUuid-$tag$written.avro")
+      written += 1
+      ManifestIO.writeManifest(path, entries, spec, schema,
+          formatVersion = meta.formatVersion, content = content)
+        .copy(sequenceNumber = seq, addedSnapshotId = snapId,
+          minSequenceNumber = entries.filter(_.status != ManifestEntryStatus.Deleted)
+            .flatMap(_.sequenceNumber).minOption.getOrElse(seq))
+    }
+
+    /** A manifest of `files` as Added entries at this commit's sequence. */
+    def manifest(files: Seq[DataFile], spec: PartitionSpec, content: Int = 0): ManifestFile =
+      writeManifest(files.map(f =>
+        ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f)),
+        spec, content)
+
+    /** `newManifests` stacked on the current snapshot's list, merged when
+      * `commit.manifest-merge.enabled`.
+      */
+    def onParent(newManifests: Seq[ManifestFile]): Seq[ManifestFile] =
+      mergeManifestsIfEnabled(newManifests ++ manifestsOf(meta.currentSnapshot), this)
+
+    /** Write `manifests` as this snapshot's list and CAS the snapshot onto
+      * `branch`, whose head is its parent. On `main` the current snapshot
+      * and the snapshot log move too; a branch commit moves only its ref,
+      * so a staged write stays invisible to readers until published.
+      */
+    def commit(operation: String, manifests: Seq[ManifestFile],
+        branch: String = "main", setProps: Map[String, String] = Map.empty,
+        removeProps: Seq[String] = Nil,
+        extraSummary: Map[String, String] = Map.empty): Snapshot = {
+      val parent = headOf(branch)
+      val listPath = metaPath(s"snap-$snapId-1-$commitUuid.avro")
+      val (listed, lineageEnd) = assignRowLineage(manifests)
+      ManifestIO.writeManifestList(listPath, listed, meta.formatVersion)
+      val listedPaths = manifests.map(_.path).toSet
+      val collector = summarizeCommit(manifests.filter(_.addedSnapshotId == snapId),
+        manifestsOf(parent).filter(m => m.content == 1 && !listedPaths(m.path)))
+      val summary = Map("operation" -> operation) ++
+        SnapshotSummary.withTotals(collector.build() ++ extraSummary,
+          parent.map(_.summary).getOrElse(Map.empty))
+      val now = System.currentTimeMillis()
+      // v3 row lineage: the snapshot records the first row ID it assigns and
+      // the table counter advances past every range handed out (reference
+      // `table/snapshots.go:249-258` + metadata `next-row-id`)
+      val firstRowId =
+        if (meta.formatVersion >= 3) Some(meta.nextRowId.getOrElse(0L)) else None
+      val snap = Snapshot(snapId, parent.map(_.snapshotId), seq, now, listPath, summary,
+        meta.currentSchemaId, firstRowId = firstRowId)
+      val advanced = meta.copy(
+        lastSequenceNumber = seq,
+        lastUpdatedMs = now,
+        snapshots = meta.snapshots :+ snap,
+        properties = meta.properties -- removeProps ++ setProps,
+        refs = meta.refs + (branch -> advanceRef(meta, branch, snapId)),
+        nextRowId = firstRowId.map(f => math.max(lineageEnd, f + collector.addedDataRecords)))
+      commitMeta(if (branch != "main") advanced
+        else advanced.copy(currentSnapshotId = Some(snapId),
+          snapshotLog = meta.snapshotLog :+ SnapshotLogEntry(now, snapId)))
+      snap
     }
   }
 
-  /** Collect this commit's file deltas off its freshly-written manifests:
-    * Added entries count as adds, Deleted as removes, Existing are carried
-    * rows a rewrite kept (reference feeds its collector the same way from
-    * the producer's added/deleted sets). Metadata-plane read only.
+  /** Head of `branch`: the current snapshot for `main`; a branch not yet
+    * created starts from main's head.
     */
-  private def summarizeCommit(commitManifests: Seq[ManifestFile]): SnapshotSummary.Collector = {
+  private def headOf(branch: String): Option[Snapshot] =
+    if (branch == "main") meta.currentSnapshot
+    else meta.refs.get(branch).flatMap(r => meta.snapshotById(r.snapshotId))
+      .orElse(meta.currentSnapshot)
+
+  private def manifestsOf(snap: Option[Snapshot]): Seq[ManifestFile] =
+    snap.map(s => ManifestIO.readManifestList(s.manifestList)).getOrElse(Nil)
+
+  /** Move `ref` to `snapId`, PRESERVING any retention policy set on it — a
+    * commit or a rollback must not silently reset `setRefRetention`.
+    */
+  private def advanceRef(m: TableMetadata, ref: String, snapId: Long): SnapshotRef =
+    m.refs.get(ref).map(_.copy(snapshotId = snapId)).getOrElse(SnapshotRef(snapId, "branch"))
+
+  /** Collect a commit's file deltas: Added entries of the manifests it wrote
+    * count as adds, their Deleted entries as removes (Existing are carried
+    * rows a rewrite kept), and every live file of a parent delete manifest
+    * the commit drops counts as removed. Metadata-plane read only.
+    */
+  private def summarizeCommit(own: Seq[ManifestFile],
+      droppedDeletes: Seq[ManifestFile]): SnapshotSummary.Collector = {
     val limit = meta.properties.get(SnapshotSummary.PartitionLimitKey)
       .flatMap(_.toIntOption).getOrElse(SnapshotSummary.PartitionLimitDefault)
     val collector = new SnapshotSummary.Collector(limit)
-    commitManifests.foreach { m =>
-      val mSpec = meta.specs.find(_.specId == m.specId).getOrElse(PartitionSpec.Unpartitioned)
-      ManifestIO.readManifest(m.path, meta.specs, schema)._2.foreach { e =>
-        if (e.status == ManifestEntryStatus.Added) collector.addFile(e.dataFile, mSpec, schema)
-        else if (e.status == ManifestEntryStatus.Deleted)
-          collector.removeFile(e.dataFile, mSpec, schema)
+    def visit(ms: Seq[ManifestFile])(f: (ManifestEntry, PartitionSpec) => Unit): Unit =
+      ms.foreach { m =>
+        val mSpec = meta.specs.find(_.specId == m.specId).getOrElse(PartitionSpec.Unpartitioned)
+        ManifestIO.readManifest(m.path, meta.specs, schema)._2.foreach(f(_, mSpec))
       }
+    visit(own) { (e, mSpec) =>
+      if (e.status == ManifestEntryStatus.Added) collector.addFile(e.dataFile, mSpec, schema)
+      else if (e.status == ManifestEntryStatus.Deleted)
+        collector.removeFile(e.dataFile, mSpec, schema)
+    }
+    visit(droppedDeletes) { (e, mSpec) =>
+      if (e.status != ManifestEntryStatus.Deleted) collector.removeFile(e.dataFile, mSpec, schema)
     }
     collector
   }
+
+  /** `m`'s entries ready to leave it (rewrite, re-pack, merge): v3 lineage
+    * inherited from the manifest's first_row_id is written into each data
+    * file, and each entry carries its data sequence number explicitly —
+    * both would otherwise be lost with the manifest they inherit from.
+    */
+  private def materializedEntries(m: ManifestFile): Seq[ManifestEntry] =
+    IceTable.lineageOf(m, ManifestIO.readManifest(m.path, meta.specs, schema)._2).map {
+      case (e, rid) =>
+        val f = if (rid.isDefined && e.dataFile.firstRowId.isEmpty)
+          e.dataFile.copy(firstRowId = rid) else e.dataFile
+        e.copy(dataFile = f, sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber)))
+    }
 
   /** Merge-append manifest compaction (reference `manifestMergeManager`,
     * `snapshot_producers.go:245-418`): gated on
@@ -584,8 +656,8 @@ final class IceTable private (
     * 100-TB table appending every few minutes accretes thousands of
     * manifests, and planning cost is linear in manifest count.
     */
-  private def mergeManifestsIfEnabled(assembled: Seq[ManifestFile], snapId: Long,
-      seq: Long, commitUuid: String): Seq[ManifestFile] = {
+  private def mergeManifestsIfEnabled(assembled: Seq[ManifestFile],
+      p: PendingSnapshot): Seq[ManifestFile] = {
     val props = meta.properties
     val mergeEnabled = props.getOrElse("commit.manifest-merge.enabled", "false").toBoolean
     if (!mergeEnabled) return assembled
@@ -596,39 +668,23 @@ final class IceTable private (
     val (dataManifests, deleteManifests) = assembled.partition(_.content == 0)
     if (dataManifests.isEmpty) return assembled
     val first = dataManifests.head
-    var binIdx = 0
 
     def mergeBin(specId: Int, bin: Seq[ManifestFile]): Seq[ManifestFile] =
       if (bin.size == 1) bin
       else if (bin.contains(first) && bin.size < minCountToMerge) bin
       else {
         val mSpec = meta.specs.find(_.specId == specId).getOrElse(PartitionSpec.Unpartitioned)
-        val entries = bin.flatMap { m =>
-          // v3 lineage: entries rewritten into the merged manifest carry
-          // their inherited first_row_ids along (this commit's own Added
-          // entries stay null — they inherit from the MERGED manifest's
-          // list-side assignment)
-          IceTable.lineageOf(m,
-              ManifestIO.readManifest(m.path, meta.specs, schema)._2).flatMap {
-            case (e0, rid) =>
-              val e = if (rid.isDefined && e0.dataFile.firstRowId.isEmpty &&
-                  !(e0.status == ManifestEntryStatus.Added && e0.snapshotId == snapId))
-                e0.copy(dataFile = e0.dataFile.copy(firstRowId = rid)) else e0
-              val seqd = e.copy(sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber)))
-              if (e.status == ManifestEntryStatus.Deleted)
-                // only THIS snapshot's deletes ride along; older tombstones drop
-                if (e.snapshotId == snapId) Some(seqd) else None
-              else if (e.status == ManifestEntryStatus.Added && e.snapshotId == snapId) Some(seqd)
-              else Some(seqd.copy(status = ManifestEntryStatus.Existing))
-          }
+        // this commit's own manifests have no first_row_id yet, so their
+        // Added entries stay null-lineage and inherit from the MERGED
+        // manifest's list-side assignment
+        val entries = bin.flatMap(materializedEntries).flatMap { e =>
+          val own = e.snapshotId == p.snapId
+          // only THIS snapshot's deletes ride along; older tombstones drop
+          if (e.status == ManifestEntryStatus.Deleted) Option.when(own)(e)
+          else Some(if (own) e else e.copy(status = ManifestEntryStatus.Existing))
         }
-        binIdx += 1
-        val merged = ManifestIO.writeManifest(metaPath(s"$commitUuid-merged-$binIdx.avro"),
-          entries, mSpec, schema, formatVersion = meta.formatVersion)
-          .copy(sequenceNumber = seq,
-            minSequenceNumber = entries.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-            addedSnapshotId = snapId)
-        Seq(merged)
+        // not `m<N>`: distributed-snapshot workers name their manifests so
+        Seq(p.writeManifest(entries, mSpec, tag = "merged-"))
       }
 
     // PackEnd with lookback 1 (reference `internal.SlicePacker`): bins fill
@@ -680,50 +736,6 @@ final class IceTable private (
     (assigned, next)
   }
 
-  /** Shared commit tail: assemble manifest list (new + parent's), snapshot,
-    * metadata, CAS (reference `snapshot_producers.go:420-718`).
-    */
-  private def commitManifests(newManifests: Seq[ManifestFile], snapId: Long, seq: Long,
-      commitUuid: String, operation: String,
-      attempt: Int = 1, setProps: Map[String, String] = Map.empty,
-      removeProps: Seq[String] = Nil,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = {
-    val parent = meta.currentSnapshot
-    val parentManifests =
-      parent.map(s => ManifestIO.readManifestList(s.manifestList)).getOrElse(Nil)
-    // summarize BEFORE merge: the collector wants this commit's deltas,
-    // which a merge rewrites into mixed Existing manifests
-    val collector = summarizeCommit(newManifests)
-    val assembled = newManifests ++ parentManifests
-    val (finalManifests, lineageEnd) = assignRowLineage(
-      mergeManifestsIfEnabled(assembled, snapId, seq, commitUuid))
-    val listPath = metaPath(s"snap-$snapId-$attempt-$commitUuid.avro")
-    ManifestIO.writeManifestList(listPath, finalManifests, meta.formatVersion)
-    val now = System.currentTimeMillis()
-    val summary = Map("operation" -> operation) ++
-      SnapshotSummary.withTotals(collector.build() ++ extraSummary,
-        parent.map(_.summary).getOrElse(Map.empty))
-    val addedRecords = collector.addedDataRecords
-    // v3 row lineage: the snapshot records the first row ID it assigns and
-    // the table counter advances by the rows added (reference
-    // `table/snapshots.go:249-258` + metadata `next-row-id`)
-    val firstRowId = if (meta.formatVersion >= 3) Some(meta.nextRowId.getOrElse(0L)) else None
-    val snap = Snapshot(snapId, meta.currentSnapshotId, seq, now, listPath, summary,
-      meta.currentSchemaId, firstRowId = firstRowId)
-    val newMeta = meta.copy(
-      lastSequenceNumber = seq,
-      lastUpdatedMs = now,
-      currentSnapshotId = Some(snapId),
-      snapshots = meta.snapshots :+ snap,
-      snapshotLog = meta.snapshotLog :+ SnapshotLogEntry(now, snapId),
-      properties = meta.properties -- removeProps ++ setProps,
-      refs = meta.refs + ("main" -> advanceMain(snapId)),
-      nextRowId = firstRowId.map(f => math.max(lineageEnd, f + addedRecords)))
-    commitMeta(newMeta)
-    maintainMetadata()
-    snap
-  }
-
   // ------------------------------------------------- overwrite / compaction
   /** ReplaceDataFiles (reference `Transaction.ReplaceDataFiles`
     * `transaction.go:408-497`): each TOUCHED parent manifest is rewritten
@@ -734,23 +746,20 @@ final class IceTable private (
     */
   def replaceDataFiles(deletePaths: Set[String], added: Seq[DataFile],
       operation: String = "replace"): Snapshot =
-    replaceDataFiles(deletePaths, added, operation, Nil, None)
+    synchronized(replaceDataFiles(deletePaths, added, operation, Nil, newSnapshot()))
 
   /** Extended form used by the metadata-aware delete paths: `newDeleteFiles`
     * (content=1 positional-delete parquet or puffin DV files, covering the
     * PARTIALLY-matched files) commit in the same snapshot that drops the
-    * fully-matched files as Deleted entries. `reserved` carries a
-    * pre-reserved (snapshotId, sequenceNumber) when the caller already
-    * stamped them into executor-written artifacts (DV blob descriptors).
+    * fully-matched files as Deleted entries. `p` may be reserved early by a
+    * caller that stamped it into executor-written artifacts (DV blob
+    * descriptors).
     */
-  private[graft] def replaceDataFiles(deletePaths: Set[String], added: Seq[DataFile],
-      operation: String, newDeleteFiles: Seq[DataFile],
-      reserved: Option[(Long, Long)]): Snapshot = synchronized {
-    val (snapId, seq) = reserved.getOrElse(
-      (meta.reserveSnapshotId(), meta.lastSequenceNumber + 1))
-    val commitUuid = UUID.randomUUID().toString
+  private def replaceDataFiles(deletePaths: Set[String], added: Seq[DataFile],
+      operation: String, newDeleteFiles: Seq[DataFile], p: PendingSnapshot): Snapshot = {
     val current = meta.currentSnapshot.getOrElse(
       throw new IllegalStateException("cannot replace files in an empty table"))
+    val parentManifests = ManifestIO.readManifestList(current.manifestList)
     // Rewrite ONLY the manifests that actually contain a deleted path;
     // untouched manifests carry forward AS-IS (original file, statuses,
     // sequence numbers). At 100 TB a partition-aligned retention delete
@@ -761,74 +770,51 @@ final class IceTable private (
     // spec's partition tuple against another spec's fields after partition
     // evolution — same-typed fields silently misattribute values,
     // different types crash mid-commit.
-    val toKeepAll = collection.mutable.ArrayBuffer.empty[ManifestEntry]
-    var touched = 0
-    val survivorManifests = ManifestIO.readManifestList(current.manifestList)
-      .filter(_.content == 0)
-      .flatMap { m =>
-        // v3 lineage: materialize inherited first_row_ids BEFORE rewriting
-        // — survivors leave this manifest, losing its inheritance base
-        val live = IceTable.lineageOf(m,
-            ManifestIO.readManifest(m.path, meta.specs, schema)._2)
-          .filter(_._1.status != ManifestEntryStatus.Deleted)
-          .map { case (e0, rid) =>
-            val e = if (rid.isDefined && e0.dataFile.firstRowId.isEmpty)
-              e0.copy(dataFile = e0.dataFile.copy(firstRowId = rid)) else e0
-            e.copy(sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber)))
-          }
-        val (toDelete, toKeep) = live.partition(
-          e => deletePaths.contains(e.dataFile.filePath))
-        toKeepAll ++= toKeep
-        if (toDelete.isEmpty) {
-          // nothing in this manifest changes — carry the file forward
-          // untouched (entry-level seq/snapshotId already select correctly
-          // for incremental reads and the changelog)
-          if (live.isEmpty) None else Some(m)
-        } else {
-          val originSpec = meta.specById(m.specId).getOrElse(
-            throw new IllegalStateException(s"manifest references unknown spec ${m.specId}"))
-          val entries =
-            toKeep.map(_.copy(status = ManifestEntryStatus.Existing)) ++
-            toDelete.map(_.copy(status = ManifestEntryStatus.Deleted, snapshotId = snapId))
-          touched += 1
-          Some(ManifestIO.writeManifest(metaPath(s"$commitUuid-m$touched.avro"),
-              entries, originSpec, schema, formatVersion = meta.formatVersion)
-            .copy(sequenceNumber = seq,
-              minSequenceNumber = toKeep.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-              addedSnapshotId = snapId))
-        }
+    var anySurvivor = false
+    val survivorManifests = parentManifests.filter(_.content == 0).flatMap { m =>
+      // v3 lineage is materialized BEFORE rewriting: survivors leave this
+      // manifest, losing its inheritance base
+      val live = materializedEntries(m).filter(_.status != ManifestEntryStatus.Deleted)
+      val (toDelete, toKeep) = live.partition(e => deletePaths.contains(e.dataFile.filePath))
+      anySurvivor ||= toKeep.nonEmpty
+      if (toDelete.isEmpty) {
+        // nothing in this manifest changes — carry the file forward
+        // untouched (entry-level seq/snapshotId already select correctly
+        // for incremental reads and the changelog)
+        if (live.isEmpty) None else Some(m)
+      } else {
+        val originSpec = meta.specById(m.specId).getOrElse(
+          throw new IllegalStateException(s"manifest references unknown spec ${m.specId}"))
+        Some(p.writeManifest(
+          toKeep.map(_.copy(status = ManifestEntryStatus.Existing)) ++
+            toDelete.map(_.copy(status = ManifestEntryStatus.Deleted, snapshotId = p.snapId)),
+          originSpec))
       }
-    val toKeep = toKeepAll.toSeq
-    val addedEntries = added.map(f =>
-      ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-    val addedManifest =
-      if (addedEntries.isEmpty) None
-      else Some(ManifestIO.writeManifest(metaPath(s"$commitUuid-m0.avro"),
-          addedEntries, spec, schema, formatVersion = meta.formatVersion)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq,
-          addedSnapshotId = snapId))
-    val dataManifests = addedManifest.toSeq ++ survivorManifests
+    }
+    val addedManifest = if (added.isEmpty) None else Some(p.manifest(added, spec))
     // delete manifests still apply to SURVIVING files — carry them forward.
     // A full rewrite (no survivors) leaves nothing they can match: the
     // rewritten files carry this commit's sequence number, past every
     // existing delete (positional: paths gone; equality: strictly-older
     // scoping) — so drop them, releasing the files for orphan cleanup
-    val deleteManifests =
-      if (toKeep.isEmpty) Nil
-      else ManifestIO.readManifestList(current.manifestList).filter(_.content == 1)
+    val deleteManifests = if (anySurvivor) parentManifests.filter(_.content == 1) else Nil
     // this commit's own positional deletes (partial-match files of a
     // metadata-aware deleteWhere) ride in the same snapshot as the drops
     val newDeleteManifest =
       if (newDeleteFiles.isEmpty) None
-      else Some(ManifestIO.writeManifest(metaPath(s"$commitUuid-del0.avro"),
-          newDeleteFiles.map(f =>
-            ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f)),
-          PartitionSpec.GlobalDeletes, schema,
-          formatVersion = meta.formatVersion, content = 1)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId))
-    commitManifestList(dataManifests ++ newDeleteManifest.toSeq ++ deleteManifests,
-      snapId, seq, operation)
+      else Some(p.manifest(newDeleteFiles, PartitionSpec.GlobalDeletes, content = 1))
+    p.commit(operation,
+      addedManifest.toSeq ++ survivorManifests ++ newDeleteManifest ++ deleteManifests)
   }
+
+  /** The schema a rewrite (compaction, z-order, overwrite survivors)
+    * writes under: on v3 the current schema plus the materialized lineage
+    * columns, read through the lineage scan, so rewritten rows keep their
+    * `_row_id` and `_last_updated_sequence_number` (Iceberg v3 spec).
+    */
+  private def rewriteSchema: IceSchema =
+    if (meta.formatVersion >= 3) schema.copy(fields = schema.fields ++ IceTable.LineageFields)
+    else schema
 
   /** Compaction: coalesce the current data files into `targetFileCount`
     * files (bin-packing via repartition), then swap atomically.
@@ -863,14 +849,8 @@ final class IceTable private (
       .flatten.toSeq
     if (chosen.isEmpty) return None
     graft.GraftSession.ensurePrepared(spark)
-    val writeSchema =
-      if (preserveLineage) schema.copy(fields =
-        schema.fields :+ NestedField(IceTable.RowIdFieldId, "_row_id", IceLong)
-          :+ NestedField(IceTable.LastUpdatedSeqFieldId,
-            IceTable.LastUpdatedSeqCol, IceLong))
-      else schema
     val newFiles = DataWriter.write(scan.toDFFor(spark, chosen),
-      location, writeSchema, spec, sortOrder, meta.properties,
+      location, rewriteSchema, spec, sortOrder, meta.properties,
       avgRowBytesHint = avgRowBytes)
     Some(replaceDataFiles(chosen.map(_.file.filePath).toSet, newFiles,
       operation = "replace"))
@@ -903,14 +883,8 @@ final class IceTable private (
     // a partitioned spec with empty tuples would read back as all-null
     // partition values, and partition-filtered scans would silently prune
     // every compacted file
-    val writeSchema =
-      if (preserveLineage) schema.copy(fields =
-        schema.fields :+ NestedField(IceTable.RowIdFieldId, "_row_id", IceLong)
-          :+ NestedField(IceTable.LastUpdatedSeqFieldId,
-            IceTable.LastUpdatedSeqCol, IceLong))
-      else schema
     val newFiles = DataWriter.write(transform(source),
-      location, writeSchema, spec, properties = meta.properties,
+      location, rewriteSchema, spec, properties = meta.properties,
       avgRowBytesHint = avgRowBytes)
     replaceDataFiles(oldPaths, newFiles, operation = "replace")
   }
@@ -960,12 +934,6 @@ final class IceTable private (
     val partial = tasks.filter(t => !Evaluators.fileMustMatch(bound, t.file) &&
       Evaluators.fileMayMatch(bound, t.file))
     graft.GraftSession.ensurePrepared(spark)
-    val survivorSchema =
-      if (preserveLineage) schema.copy(fields =
-        schema.fields :+ NestedField(IceTable.RowIdFieldId, "_row_id", IceLong)
-          :+ NestedField(IceTable.LastUpdatedSeqFieldId,
-            IceTable.LastUpdatedSeqCol, IceLong))
-      else schema
     // survivors = rows where the filter is NOT TRUE. Under SQL three-valued
     // logic `!c` is NULL (not true) when c is NULL, so a bare negation would
     // silently drop rows with null filter columns from the rewritten file —
@@ -976,20 +944,13 @@ final class IceTable private (
       else DataWriter.write(
         scan.toDFFor(spark, partial)
           .where(!coalesce(Predicates.toColumn(bound), lit(false))),
-        location, survivorSchema, spec, properties = meta.properties,
+        location, rewriteSchema, spec, properties = meta.properties,
         avgRowBytesHint = avgRowBytes)
     val addedNew = DataWriter.write(replacement, location, schema, spec,
       properties = meta.properties, avgRowBytesHint = avgRowBytes)
     replaceDataFiles((fullMatch ++ partial).map(_.file.filePath).toSet,
       survivors ++ addedNew, operation = "overwrite")
   }
-
-  /** Advance `main` to the new snapshot, PRESERVING any retention policy
-    * set on it — a commit must not silently reset `setRefRetention`.
-    */
-  private def advanceMain(snapId: Long): SnapshotRef =
-    meta.refs.get("main").map(_.copy(snapshotId = snapId))
-      .getOrElse(SnapshotRef(snapId, "branch"))
 
   /** Rewrite (re-bin-pack) the current snapshot's data manifests into
     * `targetCount` per spec without touching any data file — the manifest
@@ -1000,9 +961,7 @@ final class IceTable private (
     * manifests carry forward untouched, so MOR semantics are unchanged.
     */
   def rewriteManifests(targetCount: Int = 1): Snapshot = synchronized {
-    val snapId = meta.reserveSnapshotId()
-    val seq = meta.lastSequenceNumber + 1
-    val commitUuid = UUID.randomUUID().toString
+    val p = newSnapshot()
     val current = meta.currentSnapshot.getOrElse(
       throw new IllegalStateException("cannot rewrite manifests of an empty table"))
     val all = ManifestIO.readManifestList(current.manifestList)
@@ -1010,63 +969,17 @@ final class IceTable private (
     val packed = all.filter(_.content == 0).groupBy(_.specId).toSeq.sortBy(_._1)
       .flatMap { case (specId, ms) =>
         val sp = meta.specs.find(_.specId == specId).getOrElse(spec)
-        val entries = ms.flatMap { m =>
-          // v3 lineage: materialize inherited first_row_ids before the
-          // entries leave their manifest — re-packed Existing entries have
-          // no inheritance base (a fresh list assignment would NULL their
-          // _row_id on every later scan)
-          IceTable.lineageOf(m, ManifestIO.readManifest(m.path, meta.specs, schema)._2)
-            .filter(_._1.status != ManifestEntryStatus.Deleted)
-            .map { case (e0, rid) =>
-              val e = if (rid.isDefined && e0.dataFile.firstRowId.isEmpty)
-                e0.copy(dataFile = e0.dataFile.copy(firstRowId = rid)) else e0
-              e.copy(status = ManifestEntryStatus.Existing,
-                sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber)))
-            }
-        }
+        // v3 lineage is materialized before the entries leave their
+        // manifest — re-packed Existing entries have no inheritance base (a
+        // fresh list assignment would NULL their _row_id on every later scan)
+        val entries = ms.flatMap(materializedEntries)
+          .filter(_.status != ManifestEntryStatus.Deleted)
+          .map(_.copy(status = ManifestEntryStatus.Existing))
         val groups = math.max(1, math.min(targetCount, entries.size))
         val per = math.max(1, math.ceil(entries.size.toDouble / groups).toInt)
-        entries.grouped(per).zipWithIndex.map { case (grp, i) =>
-          ManifestIO.writeManifest(
-            metaPath(s"$commitUuid-rw$specId-$i.avro"), grp, sp, schema,
-            formatVersion = meta.formatVersion)
-            .copy(sequenceNumber = seq,
-              minSequenceNumber = grp.flatMap(_.sequenceNumber).minOption.getOrElse(seq),
-              addedSnapshotId = snapId)
-        }.toSeq
+        entries.grouped(per).map(p.writeManifest(_, sp)).toSeq
       }
-    commitManifestList(packed ++ all.filter(_.content == 1), snapId, seq,
-      operation = "replace")
-  }
-
-  private def commitManifestList(manifests: Seq[ManifestFile], snapId: Long, seq: Long,
-      operation: String): Snapshot = {
-    val now = System.currentTimeMillis()
-    val parent = meta.currentSnapshot
-    val listPath = metaPath(s"snap-$snapId-1-${UUID.randomUUID()}.avro")
-    val (lineaged, lineageEnd) = assignRowLineage(manifests)
-    ManifestIO.writeManifestList(listPath, lineaged, meta.formatVersion)
-    // the list mixes carried-forward manifests with this commit's rewrites —
-    // only the latter (stamped addedSnapshotId == snapId) hold its deltas
-    val collector = summarizeCommit(manifests.filter(_.addedSnapshotId == snapId))
-    val summary = Map("operation" -> operation) ++
-      SnapshotSummary.withTotals(collector.build(),
-        parent.map(_.summary).getOrElse(Map.empty))
-    val addedRecords = collector.addedDataRecords
-    val firstRowId = if (meta.formatVersion >= 3) Some(meta.nextRowId.getOrElse(0L)) else None
-    val snap = Snapshot(snapId, meta.currentSnapshotId, seq, now, listPath, summary,
-      meta.currentSchemaId, firstRowId = firstRowId)
-    val newMeta = meta.copy(
-      lastSequenceNumber = seq,
-      lastUpdatedMs = now,
-      currentSnapshotId = Some(snapId),
-      snapshots = meta.snapshots :+ snap,
-      snapshotLog = meta.snapshotLog :+ SnapshotLogEntry(now, snapId),
-      refs = meta.refs + ("main" -> advanceMain(snapId)),
-      nextRowId = firstRowId.map(f => math.max(lineageEnd, f + addedRecords)))
-    commitMeta(newMeta)
-    maintainMetadata()
-    snap
+    p.commit("replace", packed ++ all.filter(_.content == 1))
   }
 
   // ------------------------------------------------------------ MOR delete
@@ -1077,63 +990,60 @@ final class IceTable private (
     * (field ids 2147483546/2147483545).
     */
   def deleteWhere(spark: SparkSession, filter: IcePredicate): Option[Snapshot] = synchronized {
-    val scan = newScan(filter)
-    val tasks = scan.planFiles()
-    if (tasks.isEmpty) return None
-    val schemaNow = schema
-    val bound = Predicates.bind(filter, schemaNow)
-    // Metadata-only split (reference `strictMetricsEval`
-    // `table/evaluators.go:1200-1565`, built for exactly this): files whose
-    // footer stats PROVE every row matches drop as whole-file Deleted
-    // manifest entries — zero data-file reads, zero delete rows. At 100 TB
-    // the common production delete (partition-aligned retention, `ts <
-    // cutoff` on a day-partitioned table) is then a metadata commit instead
-    // of an O(corpus) read + positional-delete write. Already-dead rows in
-    // a dropped file don't matter: strict-match means every row — live or
-    // not — satisfies the predicate, so removing the file removes only
-    // rows the delete targets.
-    val (fullMatch, partial) =
-      tasks.partition(t => Evaluators.fileMustMatch(bound, t.file))
-    val files =
-      if (partial.isEmpty) Nil
-      else {
-        val matches = IceScan.readFiles(spark, schemaNow.toSpark, partial.map(_.file))
-          .withColumn("file_path", IceScan.normalizedMetaPath)
-          .withColumn("pos", col("_metadata.row_index"))
-          .where(Predicates.toColumn(bound))
-          .select("file_path", "pos")
-        val stagingDir = s"${locationProvider.dataPath}/deletes-${UUID.randomUUID()}"
-        // range-partition by file_path so (a) a broad predicate fans out over
-        // many writers instead of funnelling every matched row through one
-        // task, and (b) each delete file covers a narrow file_path range,
-        // which the planner's bounds matching then uses to skip it for
-        // unrelated data files
-        matches.repartitionByRange(col("file_path"))
-          .sortWithinPartitions("file_path", "pos")
-          .write.parquet(stagingDir)
-        val deleteSchema = IceSchema(-1, Seq(
-          NestedField(2147483546, "file_path", IceString, required = true),
-          NestedField(2147483545, "pos", IceLong, required = true)))
-        DataWriter.listParquet(stagingDir).map { case (p, len) =>
-          ParquetStats.toDataFile(p, len, deleteSchema, Nil, content = 1,
-            fullBoundsFieldIds = Set(DeleteIndex.PathFieldId))
-        }.filter(_.recordCount > 0)
-      }
-    if (fullMatch.nonEmpty)
-      Some(replaceDataFiles(fullMatch.map(_.file.filePath).toSet, Nil,
-        "delete", files, None))
-    else {
-      val snapId = meta.reserveSnapshotId()
-      val seq = meta.lastSequenceNumber + 1
-      val commitUuid = UUID.randomUUID().toString
-      val manifestPath = metaPath(s"$commitUuid-m0.avro")
-      val entries = files.map(f =>
-        ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-      val mf = ManifestIO.writeManifest(manifestPath, entries, PartitionSpec.GlobalDeletes,
-          schemaNow, formatVersion = meta.formatVersion, content = 1)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-      Some(commitManifests(Seq(mf), snapId, seq, commitUuid, "delete"))
+    val (fullMatch, matches) = splitDelete(spark, filter)
+    val files = matches.toSeq.flatMap { m =>
+      val stagingDir = s"${locationProvider.dataPath}/deletes-${UUID.randomUUID()}"
+      // range-partition by file_path so (a) a broad predicate fans out over
+      // many writers instead of funnelling every matched row through one
+      // task, and (b) each delete file covers a narrow file_path range,
+      // which the planner's bounds matching then uses to skip it for
+      // unrelated data files
+      m.repartitionByRange(col("file_path"))
+        .sortWithinPartitions("file_path", "pos")
+        .write.parquet(stagingDir)
+      val deleteSchema = IceSchema(-1, Seq(
+        NestedField(2147483546, "file_path", IceString, required = true),
+        NestedField(2147483545, "pos", IceLong, required = true)))
+      DataWriter.listParquet(stagingDir).map { case (p, len) =>
+        ParquetStats.toDataFile(p, len, deleteSchema, Nil, content = 1,
+          fullBoundsFieldIds = Set(DeleteIndex.PathFieldId))
+      }.filter(_.recordCount > 0)
     }
+    val p = newSnapshot()
+    if (fullMatch.nonEmpty)
+      Some(replaceDataFiles(fullMatch.map(_.file.filePath).toSet, Nil, "delete", files, p))
+    // no row matched: commit nothing rather than an empty delete manifest
+    // every later list would carry and every scan would read
+    else if (files.isEmpty) None
+    else Some(p.commit("delete",
+      p.onParent(Seq(p.manifest(files, PartitionSpec.GlobalDeletes, content = 1)))))
+  }
+
+  /** The metadata-only split both positional deletes share (reference
+    * `strictMetricsEval` `table/evaluators.go:1200-1565`, built for exactly
+    * this): planned files whose footer stats PROVE every row matches drop
+    * as whole-file Deleted manifest entries — zero data-file reads, zero
+    * delete rows. At 100 TB the common production delete (partition-aligned
+    * retention, `ts < cutoff` on a day-partitioned table) is then a
+    * metadata commit instead of an O(corpus) read + positional-delete
+    * write. Already-dead rows in a dropped file don't matter: strict-match
+    * means every row — live or not — satisfies the predicate, so removing
+    * the file removes only rows the delete targets. Returns those files and
+    * the (file_path, pos) frame of the matching rows of the rest (None when
+    * no other file may match).
+    */
+  private def splitDelete(spark: SparkSession,
+      filter: IcePredicate): (Seq[FileScanTask], Option[DataFrame]) = {
+    val bound = Predicates.bind(filter, schema)
+    val (fullMatch, partial) =
+      newScan(filter).planFiles().partition(t => Evaluators.fileMustMatch(bound, t.file))
+    val matches = Option.when(partial.nonEmpty)(
+      IceScan.readFiles(spark, schema.toSpark, partial.map(_.file))
+        .withColumn("file_path", IceScan.normalizedMetaPath)
+        .withColumn("pos", col("_metadata.row_index"))
+        .where(Predicates.toColumn(bound))
+        .select("file_path", "pos"))
+    (fullMatch, matches)
   }
 
   /** Positional delete recorded as v3 DELETION VECTORS: one roaring bitmap
@@ -1155,33 +1065,16 @@ final class IceTable private (
     */
   def deleteWhereDV(spark: SparkSession, filter: IcePredicate): Option[Snapshot] =
     synchronized {
-      val scan = newScan(filter)
-      val tasks = scan.planFiles()
-      if (tasks.isEmpty) return None
-      val schemaNow = schema
-      val bound = Predicates.bind(filter, schemaNow)
       // same strict-metrics split as [[deleteWhere]]: provably-full files
       // drop as Deleted entries; only partial files earn a deletion vector
-      val (fullMatch, partial) =
-        tasks.partition(t => Evaluators.fileMustMatch(bound, t.file))
-      val snapId = meta.reserveSnapshotId()
-      val seq = meta.lastSequenceNumber + 1
-      val commitUuid = UUID.randomUUID().toString
-      val files =
-        if (partial.isEmpty) Nil
-        else {
-          val matches = IceScan.readFiles(spark, schemaNow.toSpark, partial.map(_.file))
-            .withColumn("file_path", IceScan.normalizedMetaPath)
-            .withColumn("pos", col("_metadata.row_index"))
-            .where(Predicates.toColumn(bound))
-            .select("file_path", "pos")
-          writeDVShards(spark, matches, snapId, seq, commitUuid)
-        }
+      val (fullMatch, matches) = splitDelete(spark, filter)
+      val p = newSnapshot()
+      val files = matches.toSeq.flatMap(writeDVShards(spark, _, p))
       if (fullMatch.nonEmpty)
-        Some(replaceDataFiles(fullMatch.map(_.file.filePath).toSet, Nil,
-          "delete", files, Some((snapId, seq))))
+        Some(replaceDataFiles(fullMatch.map(_.file.filePath).toSet, Nil, "delete", files, p))
       else if (files.isEmpty) None
-      else Some(commitDVFiles(files, snapId, seq, commitUuid))
+      else Some(p.commit("delete",
+        p.onParent(Seq(p.manifest(files, PartitionSpec.GlobalDeletes, content = 1)))))
     }
 
   /** Distributed deletion-vector materialization: one hash shuffle
@@ -1191,10 +1084,11 @@ final class IceTable private (
     * the bitmap bytes stay in the shards).
     */
   private def writeDVShards(spark: SparkSession,
-      positions: org.apache.spark.sql.DataFrame, snapId: Long, seq: Long,
-      commitUuid: String): Seq[DataFile] = {
+      positions: org.apache.spark.sql.DataFrame, p: PendingSnapshot): Seq[DataFile] = {
     import spark.implicits._
     val loc = location
+    // plain locals: the executor closure below must not capture the producer
+    val (snapId, seq, commitUuid) = (p.snapId, p.seq, p.commitUuid)
     // executors run in JVMs whose FileIO never saw configure() — ship the
     // driver's settings so property-registered schemes/credentials resolve
     // identically off-driver
@@ -1245,44 +1139,6 @@ final class IceTable private (
     }
   }
 
-  /** Commit already-materialized deletion-vector entries as a delete
-    * snapshot (or, for the rewrite path, a replace of the positional
-    * delete manifests).
-    */
-  private def commitDVFiles(files: Seq[DataFile], snapId: Long, seq: Long,
-      commitUuid: String, dropDeleteManifests: Boolean = false,
-      dropEqualityManifests: Boolean = false): Snapshot =
-    synchronized {
-    val schemaNow = schema
-    def newMf: ManifestFile = {
-      val entries = files.map(f =>
-        ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-      ManifestIO.writeManifest(metaPath(s"$commitUuid-m0.avro"), entries,
-          PartitionSpec.GlobalDeletes, schemaNow,
-          formatVersion = meta.formatVersion, content = 1)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-    }
-    if (!dropDeleteManifests)
-      commitManifests(Seq(newMf), snapId, seq, commitUuid, "delete")
-    else {
-      // rewrite: the new DV manifest replaces the POSITIONAL delete
-      // manifests; equality-delete manifests are value-based and survive
-      // UNLESS this commit converted them to positions too
-      val current = meta.currentSnapshot.getOrElse(
-        throw new IllegalStateException("empty table"))
-      val all = ManifestIO.readManifestList(current.manifestList)
-      val kept = all.filter { m =>
-        m.content == 0 || (!dropEqualityManifests &&
-          ManifestIO.readManifest(m.path, meta.specs, schemaNow)._2
-            .exists(_.dataFile.content == 2))
-      }
-      // files can be empty when the converted equality deletes kill no
-      // current row — the commit still drops the spent debt
-      commitManifestList(kept ++ (if (files.isEmpty) Nil else Seq(newMf)),
-        snapId, seq, "replace")
-    }
-  }
-
   /** Maintenance: collapse ALL accumulated merge-on-read debt — positional
     * parquet deletes, deletion vectors, AND equality deletes — into ONE
     * deletion vector per referenced data file (the v3 invariant), dropping
@@ -1307,13 +1163,21 @@ final class IceTable private (
     val eqOpt = eqKilledPositions(spark, scan, tasks)
     val positions = (posOpt.toSeq ++ eqOpt.toSeq)
       .reduceOption(_.unionByName(_)).getOrElse(return None)
-    val snapId = meta.reserveSnapshotId()
-    val seq = meta.lastSequenceNumber + 1
-    val commitUuid = UUID.randomUUID().toString
-    val files = writeDVShards(spark, positions, snapId, seq, commitUuid)
+    val p = newSnapshot()
+    val files = writeDVShards(spark, positions, p)
     if (files.isEmpty && eqOpt.isEmpty) return None
-    Some(commitDVFiles(files, snapId, seq, commitUuid, dropDeleteManifests = true,
-      dropEqualityManifests = eqOpt.isDefined))
+    // the new DV manifest replaces the POSITIONAL delete manifests;
+    // equality-delete manifests are value-based and survive UNLESS this
+    // commit converted them to positions too. `files` can be empty when the
+    // converted equality deletes kill no current row — the commit still
+    // drops the spent debt
+    val kept = manifestsOf(meta.currentSnapshot).filter { m =>
+      m.content == 0 || (eqOpt.isEmpty &&
+        ManifestIO.readManifest(m.path, meta.specs, schema)._2.exists(_.dataFile.content == 2))
+    }
+    val dvManifest =
+      Option.when(files.nonEmpty)(p.manifest(files, PartitionSpec.GlobalDeletes, content = 1))
+    Some(p.commit("replace", kept ++ dvManifest))
   }
 
   /** Positions of rows killed by the table's EQUALITY deletes — the
@@ -1404,16 +1268,9 @@ final class IceTable private (
       location, eqSchema, PartitionSpec.Unpartitioned, properties = meta.properties)
       .map(_.copy(content = 2, equalityIds = eqIds))
       .filter(_.recordCount > 0)
-    val snapId = meta.reserveSnapshotId()
-    val seq = meta.lastSequenceNumber + 1
-    val commitUuid = UUID.randomUUID().toString
-    val manifestPath = metaPath(s"$commitUuid-m0.avro")
-    val entries = files.map(f =>
-      ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-    val mf = ManifestIO.writeManifest(manifestPath, entries, PartitionSpec.GlobalDeletes,
-        schemaNow, formatVersion = meta.formatVersion, content = 1)
-      .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-    commitManifests(Seq(mf), snapId, seq, commitUuid, "delete")
+    val p = newSnapshot()
+    p.commit("delete",
+      p.onParent(Seq(p.manifest(files, PartitionSpec.GlobalDeletes, content = 1))))
   }
 
   /** True when every LIVE data file in the current snapshot was written
@@ -1508,22 +1365,10 @@ final class IceTable private (
         .map(f => f.copy(content = 2, equalityIds = eqIds,
           partition = if (scopedDeletes) f.partition else Nil))
         .filter(_.recordCount > 0)
-      val snapId = meta.reserveSnapshotId()
-      val seq = meta.lastSequenceNumber + 1
-      val commitUuid = UUID.randomUUID().toString
-      val dataEntries = dataFiles.map(f =>
-        ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-      val dataMf = ManifestIO.writeManifest(metaPath(s"$commitUuid-m0.avro"),
-          dataEntries, spec, schemaNow, formatVersion = meta.formatVersion)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-      val deleteEntries = deleteFiles.map(f =>
-        ManifestEntry(ManifestEntryStatus.Added, snapId, Some(seq), Some(seq), f))
-      val deleteMf = ManifestIO.writeManifest(metaPath(s"$commitUuid-m1.avro"),
-          deleteEntries, if (scopedDeletes) spec else PartitionSpec.GlobalDeletes,
-          schemaNow, formatVersion = meta.formatVersion, content = 1)
-        .copy(sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = snapId)
-      (written,
-        Some(commitManifests(Seq(dataMf, deleteMf), snapId, seq, commitUuid, "overwrite")))
+      val p = newSnapshot()
+      val manifests = Seq(p.manifest(dataFiles, spec), p.manifest(deleteFiles,
+        if (scopedDeletes) spec else PartitionSpec.GlobalDeletes, content = 1))
+      (written, Some(p.commit("overwrite", p.onParent(manifests))))
     }
 
   // ------------------------------------------------- snapshot management
@@ -1537,7 +1382,7 @@ final class IceTable private (
       require(m.snapshotById(snapshotId).isDefined, s"no snapshot $snapshotId")
       val now = System.currentTimeMillis()
       m.copy(currentSnapshotId = Some(snapshotId),
-        refs = m.refs + ("main" -> SnapshotRef(snapshotId, "branch")),
+        refs = m.refs + ("main" -> advanceRef(m, "main", snapshotId)),
         snapshotLog = m.snapshotLog :+ SnapshotLogEntry(now, snapshotId),
         lastUpdatedMs = now)
     })
@@ -1575,8 +1420,11 @@ final class IceTable private (
       .filter(e => e.status == ManifestEntryStatus.Added && e.snapshotId == snapshotId)
       .map(_.dataFile)
     require(added.nonEmpty, s"snapshot $snapshotId added no data files")
-    commitAddedFiles(added, retries = 3,
-      extraSummary = Map(IceTable.SourceSnapshotIdKey -> snapshotId.toString))
+    retryOnConflict {
+      val p = newSnapshot()
+      p.commit("append", p.onParent(Seq(p.manifest(added, spec))),
+        extraSummary = Map(IceTable.SourceSnapshotIdKey -> snapshotId.toString))
+    }
   }
 
   // -------------------------------------------------- distributed snapshot
@@ -1597,10 +1445,9 @@ final class IceTable private (
     if (meta.currentSnapshotId != ds.parentSnapshotId)
       throw new CommitConflictException(
         s"parent moved: now ${meta.currentSnapshotId}, began at ${ds.parentSnapshotId}")
-    val seq = meta.lastSequenceNumber + 1
-    val stamped = manifests.map(_.copy(
-      sequenceNumber = seq, minSequenceNumber = seq, addedSnapshotId = ds.snapshotId))
-    commitManifests(stamped, ds.snapshotId, seq, ds.commitUuid, "append")
+    val p = newSnapshot(ds.snapshotId, ds.commitUuid)
+    p.commit("append", p.onParent(manifests.map(_.copy(
+      sequenceNumber = p.seq, minSequenceNumber = p.seq, addedSnapshotId = p.snapId))))
   }
 
   // ------------------------------------------------------------ transaction
@@ -1623,7 +1470,11 @@ final class IceTable private (
     // property changes ride the same metadata commit as the new snapshot;
     // passed as a delta so the conflict-retry path re-applies them after
     // its refresh() instead of losing them with the reloaded meta
-    if (files.nonEmpty) { commitAddedFiles(files, retries = 3, setProps, removeProps); () }
+    if (files.nonEmpty) retryOnConflict {
+      val p = newSnapshot()
+      p.commit("append", p.onParent(Seq(p.manifest(files, spec))),
+        setProps = setProps, removeProps = removeProps)
+    }
     else commitWithRequirements(Seq(AssertTableUUID(meta.tableUuid)), m =>
       m.copy(properties = m.properties -- removeProps ++ setProps,
         lastUpdatedMs = System.currentTimeMillis()))
@@ -2481,6 +2332,11 @@ object IceTable {
   val LastUpdatedSeqFieldId = 2147483539
   val LastUpdatedSeqCol = "_last_updated_sequence_number"
 
+  /** The two lineage columns, as rewrites materialize them. */
+  private[table] val LineageFields = Seq(
+    NestedField(RowIdFieldId, "_row_id", IceLong),
+    NestedField(LastUpdatedSeqFieldId, LastUpdatedSeqCol, IceLong))
+
   /** v3 row lineage, read-side inheritance (Iceberg v3 spec §row-lineage):
     * each data entry's effective first_row_id is its explicit value, or —
     * for ADDED entries — inherited from the manifest's first_row_id by
@@ -2767,10 +2623,7 @@ final class IceScan(
     // inheritance fallback fills those from first_row_id + position and
     // the entry's data sequence number respectively
     val readSchema =
-      if (withRowId) IceSchema(readBase.schemaId,
-        readBase.fields :+ NestedField(IceTable.RowIdFieldId, "_row_id", IceLong)
-          :+ NestedField(IceTable.LastUpdatedSeqFieldId,
-            IceTable.LastUpdatedSeqCol, IceLong))
+      if (withRowId) IceSchema(readBase.schemaId, readBase.fields ++ IceTable.LineageFields)
       else readBase
 
     graft.GraftSession.ensurePrepared(spark)

@@ -197,6 +197,24 @@ class ChangelogSpec extends AnyFunSuite with BeforeAndAfterAll {
         (10L until 25L).map(k => (k, "I", 3L)).toSet)
   }
 
+  test("inserts over more than 32 files build from the manifests, with no Spark job") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32) a
+    // path-based read lists the files in a Spark job
+    val t = IceTable.create(catalog, "cdc_wide",
+      SchemaConv.fromSpark(spark.range(1).toDF("id").schema))
+    val s1 = t.append(spark.range(0, 10).toDF("id"))
+    val wide = t.append(spark.range(10, 410, 1, 40).toDF("id"))
+    assert(wide.summary("added-data-files").toInt > 32)
+    t.refresh()
+    val (inserts, insertJobs) =
+      graft.JobCount.during(spark)(Ingest.changesSince(spark, t, s1.snapshotId))
+    val (changelog, changelogJobs) =
+      graft.JobCount.during(spark)(Ingest.changelogSince(spark, t, s1.snapshotId))
+    assert(insertJobs == 0 && changelogJobs == 0, s"$insertJobs / $changelogJobs jobs")
+    assert(inserts.count() == 400)
+    assert(changelog.where("change_type = 'I' AND change_seq = 2").count() == 400)
+  }
+
   test("empty range yields an empty, correctly-shaped frame") {
     val t = IceTable.create(catalog, "cdc_empty", SchemaConv.fromSpark(nation.schema))
     val s1 = t.append(nation)

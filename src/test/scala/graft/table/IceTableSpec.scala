@@ -278,6 +278,21 @@ class IceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] { t.rollbackTo(999999L) }
   }
 
+  test("deleteWhere matching no row commits nothing") {
+    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+    val t = IceTable.create(catalog, "nation_delete_none",
+      SchemaConv.fromSpark(nation.schema))
+    // key 7 lies inside the file's bounds but in no row
+    t.append(nation.where("n_nationkey <> 7").coalesce(1))
+    val before = t.metadata
+    assert(t.deleteWhere(spark, P.equalTo("n_nationkey", 7L)).isEmpty)
+    assert(t.deleteWhereDV(spark, P.equalTo("n_nationkey", 7L)).isEmpty)
+    val after = IceTable.load(catalog, "nation_delete_none").metadata
+    assert(after.snapshots == before.snapshots)
+    assert(after.currentSnapshot.map(_.manifestList) == before.currentSnapshot.map(_.manifestList))
+    assert(t.scan(spark).count() == nation.count() - 1)
+  }
+
   test("v3 deletion vectors: puffin bitmaps delete rows; rewrite collapses to one DV per file") {
     // puffin + DV blob codec round-trips with CRC validation
     val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()

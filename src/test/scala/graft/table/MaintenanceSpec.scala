@@ -191,6 +191,24 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!ids.contains(s1.snapshotId))
   }
 
+  test("rollback keeps main's retention policy") {
+    val region = spark.read.parquet(s"$sfDir/region.parquet")
+    val t = IceTable.create(catalog, "li_rollback_retention",
+      SchemaConv.fromSpark(region.schema))
+    val snaps = (1 to 5).map(_ => t.append(region.limit(1)))
+    t.setRefRetention("main", minSnapshotsToKeep = Some(3))
+    t.rollbackTo(snaps(3).snapshotId)
+    val reloaded = IceTable.load(catalog, "li_rollback_retention")
+    val main = reloaded.metadata.refs("main")
+    assert(main.snapshotId == snaps(3).snapshotId)
+    assert(main.minSnapshotsToKeep.contains(3), s"policy lost by rollback: $main")
+    reloaded.expireSnapshots(System.currentTimeMillis() + 1000, retainLast = 1)
+    val ids = reloaded.metadata.snapshots.map(_.snapshotId).toSet
+    // main's policy keeps 3 ancestors of the rolled-back head (s4, s3, s2);
+    // retainLast keeps the newest snapshot (s5)
+    assert(ids == snaps.drop(1).map(_.snapshotId).toSet, s"got $ids")
+  }
+
   test("rewriteManifests packs manifests per spec without touching data or deletes") {
     val t = IceTable.create(catalog, "li_rw_manifests",
       SchemaConv.fromSpark(lineitem.schema))
@@ -746,10 +764,14 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 4).foreach(_ => t.append(lineitem.limit(10)))
     val metaDir = java.nio.file.Paths.get(
       t.location.stripPrefix("file:"), "metadata")
-    val versions = java.nio.file.Files.list(metaDir).toArray.map(_.toString)
+    def versions = java.nio.file.Files.list(metaDir).toArray.map(_.toString)
       .filter(_.endsWith(".metadata.json")).sorted
     assert(versions.length <= 3, versions.mkString(", "))
     assert(t.scan(spark).count() == 40)
+    // expiry is a metadata commit like any other: it prunes too
+    t.expireSnapshots(System.currentTimeMillis() + 1000, retainLast = 1)
+    assert(t.metadata.snapshots.size == 1)
+    assert(versions.length <= 3, versions.mkString(", "))
   }
 
   test("views: versioned SQL metadata + execution") {
