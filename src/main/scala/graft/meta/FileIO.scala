@@ -1,8 +1,12 @@
 package graft.meta
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile, PositionOutputStream}
 
 /** Object-storage configuration seam (reference `io/io.go` + the
   * property-driven clients `io/s3.go:42-135`, `io/gcs.go:34-60`,
@@ -134,6 +138,53 @@ object FileIO {
     settings.foreach { case (k, v) =>
       if (applied.get(k) != v) { applied.put(k, v); conf.set(k, v) }
     }
+
+  /** True when `path` names the local filesystem: an explicit `file:`
+    * scheme, or no scheme under a local default filesystem.
+    */
+  private def isLocal(path: String, hadoopConf: Configuration): Boolean =
+    Option(new Path(path).toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme) == "file"
+
+  /** The one output seam every table file opens through: data files,
+    * position- and equality-delete files, manifests, manifest lists and
+    * Puffin shards (reference: `io/local.go` behind the scheme dispatch of
+    * `io/io.go:238-289`). Local paths write through java.nio, creating
+    * missing parent directories. Hadoop's local filesystem would instead
+    * write a `.crc` sidecar per file and, without native libhadoop, start a
+    * `chmod` process for the file, its sidecar and every directory it
+    * makes. Every other scheme goes through its Hadoop FileSystem, resolved
+    * with `hadoopConf`.
+    */
+  def outputFile(path: String, hadoopConf: Configuration = conf): OutputFile =
+    if (isLocal(path, hadoopConf)) {
+      val local = Paths.get(new Path(path).toUri.getPath)
+      Files.createDirectories(local.getParent)
+      new LocalOutputFile(local)
+    } else HadoopOutputFile.fromPath(new Path(path), hadoopConf)
+
+  /** Open `path` for writing, replacing any existing file. `getPos` after
+    * the last write is the file's length, so callers need no stat.
+    */
+  def create(path: String): PositionOutputStream =
+    outputFile(path).createOrOverwrite(0L)
+
+  /** Every file under `dir`, recursively; empty when `dir` does not exist,
+    * and `dir` itself when it is a file. The walk uses `listStatus`, never
+    * `listFiles`: the `LocatedFileStatus` that `listFiles` builds copies
+    * each entry's permission, which Hadoop's local filesystem without
+    * native libhadoop loads by running one `ls -ld` process per entry.
+    */
+  def listRecursive(dir: String, hadoopConf: Configuration = conf): Seq[FileStatus] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(hadoopConf)
+    val out = Seq.newBuilder[FileStatus]
+    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
+      if (st.isDirectory) walk(st.getPath) else out += st
+    }
+    if (fs.exists(root)) walk(root)
+    out.result()
+  }
 }
 
 /** Membership over a referenced-file set that is robust to HOW each side

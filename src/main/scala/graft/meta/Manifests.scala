@@ -321,7 +321,6 @@ object ManifestIO {
     require(formatVersion >= 2 || content == 0,
       "v1 manifests cannot carry delete files")
     val avroSchema = entrySchema(partType, formatVersion)
-    val fs = FileSystem.get(new java.net.URI(path), conf)
     val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](avroSchema))
     writer.setMeta("schema", TableMetadataJson.schemaToJson(schema).toString)
     writer.setMeta("schema-id", schema.schemaId.toString)
@@ -329,7 +328,7 @@ object ManifestIO {
     writer.setMeta("partition-spec-id", spec.specId.toString)
     writer.setMeta("format-version", formatVersion.toString)
     writer.setMeta("content", if (content == 0) "data" else "deletes")
-    val out = fs.create(new Path(path), true)
+    val out = FileIO.create(path)
     writer.create(avroSchema, out)
     val dfSchema = avroSchema.getField("data_file").schema()
     val partSchema = dfSchema.getField("partition").schema()
@@ -379,7 +378,7 @@ object ManifestIO {
       writer.append(rec)
     }
     writer.close()
-    val length = fs.getFileStatus(new Path(path)).getLen
+    val length = out.getPos
     val added = entries.filter(_.status == ManifestEntryStatus.Added)
     val existing = entries.filter(_.status == ManifestEntryStatus.Existing)
     val deleted = entries.filter(_.status == ManifestEntryStatus.Deleted)
@@ -413,11 +412,9 @@ object ManifestIO {
   def writeManifestList(path: String, manifests: Seq[ManifestFile],
       formatVersion: Int = 2): Unit = {
     val listSchema = manifestListSchema(formatVersion)
-    val fs = FileSystem.get(new java.net.URI(path), conf)
     val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](listSchema))
     writer.setMeta("format-version", formatVersion.toString)
-    val out = fs.create(new Path(path), true)
-    writer.create(listSchema, out)
+    writer.create(listSchema, FileIO.create(path))
     val partArrayField = listSchema.getField("partitions").schema()
     val partArrSchema = partArrayField.getTypes.asScala.find(_.getType == Schema.Type.ARRAY).get
     val summarySchema = partArrSchema.getElementType

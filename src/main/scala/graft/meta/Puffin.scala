@@ -78,11 +78,11 @@ object Puffin {
   /** Write a Puffin file; returns the descriptors with final offsets plus
     * the footer size in bytes (footer magic + payload + size + flags +
     * trailing magic — what `StatisticsFile.fileFooterSizeInBytes` records).
+    * The file's length is the last blob's end plus that footer size.
     */
   def write(path: String,
       blobs: Seq[(BlobDescriptor, Array[Byte])]): (Seq[BlobDescriptor], Long) = {
-    val fs = FileSystem.get(new java.net.URI(path), conf)
-    val out = fs.create(new Path(path), true)
+    val out = FileIO.create(path)
     // try/finally: a mid-write failure must release the stream (an open
     // lease on HDFS-like systems can make the partial file undeletable
     // until expiry, and executor-side DV shard retries would accumulate

@@ -1,53 +1,89 @@
 package graft.table
 
 import java.util.UUID
-import scala.collection.parallel.CollectionConverters._
+
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path, RemoteIterator}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types.{DataType, Decimal, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core._
-import graft.meta.{DataFile, PartitionSpec, SortOrder}
+import graft.meta.{DataFile, FileIO, PartitionSpec, SortOrder}
 
-/** The append data plane: write a DataFrame as Parquet data files and derive
-  * `DataFile` entries (stats from footers).
+/** The table's write path: rows in; Parquet files at their final
+  * locations and their `DataFile` entries out, in one Spark job. This is
+  * the reference's data-file sink (`parquetFormat.WriteDataFile`,
+  * `table/internal/parquet_files.go:195-279`), and it is how Iceberg's
+  * Spark writer works: each task returns the `DataFile`s it wrote, and
+  * there is no staging directory to commit.
   *
-  * Partitioned writes compute the transform columns with Catalyst
-  * expressions (codegen), shuffle once on the partition tuple
-  * (`repartition`, the fanout of reference
-  * `partitioned_fanout_writer.go:38-229`), and use `partitionBy` on derived
-  * `_p_*` columns so every data column — including partition sources — stays
-  * in the file, as Iceberg requires. Partition values are recovered from the
-  * staged directory names.
+  * The driver projects the frame onto the write schema (Avro-compatible
+  * names, field-ID metadata, write-defaults for omitted columns) and
+  * clusters it:
+  *   - a partitioned write appends the transform values as trailing
+  *     columns computed by Catalyst, shuffles once on them (the fanout of
+  *     reference `partitioned_fanout_writer.go:38-229`, salted by
+  *     `write.fanout.tasks-per-partition`), and sorts each task's rows by
+  *     partition, then by the table sort order;
+  *   - an unpartitioned sorted write range-partitions on the sort key and
+  *     sorts within each range.
   *
-  * 100 TB notes: one shuffle on the partition tuple; file sizing via
-  * `maxRecordsPerFile` session conf; footer-stat collection is metadata-only
-  * and parallelized driver-side.
+  * Each task writes its rows with Spark's `ParquetWriteSupport`,
+  * configured once by `ParquetUtils.prepareWrite`, so the table's codec,
+  * field IDs, bloom filters and row-group settings apply. Files open
+  * through the [[FileIO.outputFile]] seam at
+  * `LocationProvider.newDataLocation`, named
+  * `%05d-<partition>-<attempt>-<write uuid>.parquet`. A file closes when
+  * the partition tuple changes or it holds `maxRecords` rows. Its stats
+  * are folded from the writer's own footer ([[ParquetStats.fromFooter]]),
+  * and its NaN counts are counted as rows pass when
+  * `write.metadata.nan-counts.enabled` is set. The partition tuple comes
+  * from the row's transform values.
+  *
+  * A task that gets no rows opens no file. A failed task attempt deletes
+  * every file it opened, so only files of attempts that `collect` returns
+  * can reach a manifest. If the job fails, the files its successful tasks
+  * wrote stay unreferenced, and `deleteOrphanFiles` reclaims them.
   */
 object DataWriter {
-  private def conf = graft.meta.FileIO.conf
   private val PartPrefix = "_p_"
-  private val HiveNull = "__HIVE_DEFAULT_PARTITION__"
+
+  /** Property gating NaN counting while writing (default off). */
+  val NanCountsEnabledKey = "write.metadata.nan-counts.enabled"
+
+  /** The position-delete file schema (Iceberg spec reserved field ids). */
+  private[table] val PositionDeleteSchema = IceSchema(-1, Seq(
+    NestedField(DeleteIndex.PathFieldId, "file_path", IceString, required = true),
+    NestedField(2147483545, "pos", IceLong, required = true)))
 
   def write(df: DataFrame, location: String, schema: IceSchema,
       spec: PartitionSpec, sortOrder: SortOrder = SortOrder.Unsorted,
       properties: Map[String, String] = Map.empty,
       avgRowBytesHint: Option[Long] = None): Seq[DataFile] = {
-    // location strategy (reference table/locations.go): write.data.path
-    // override + optional object-storage entropy placement
-    val provider = Locations.forTable(location, properties)
-    val staging =
-      if (provider.objectStore) s"${provider.dataPath}/.staging-${UUID.randomUUID()}"
-      else s"${provider.dataPath}/${UUID.randomUUID()}"
     // file sizing: an explicit record cap wins; otherwise translate the
     // reference's byte target (`write.target-file-size-bytes`, 512 MiB
     // default, rolling_data_writer.go:40-48) through the table's own
-    // observed on-disk bytes/row — Spark's writer rolls by record count
-    // only, and footer-derived compressed size is exactly the unit the
-    // byte target is defined over. A fresh table (no history) falls back
-    // to the 1M-row cap until its first commit provides the estimate.
+    // observed on-disk bytes/row — files roll by record count, and
+    // footer-derived compressed size is exactly the unit the byte target
+    // is defined over. A fresh table (no history) falls back to the
+    // 1M-row cap until its first commit provides the estimate.
     val maxRecords = properties.get("write.max-records-per-file").map(_.toLong)
       .getOrElse {
         val target = properties.get("write.target-file-size-bytes")
@@ -55,10 +91,10 @@ object DataWriter {
         avgRowBytesHint.filter(_ > 0)
           .map(b => math.max(1L, target / b)).getOrElse(1048576L)
       }
-    // attach parquet.field.id metadata so Spark's writer stamps Iceberg
-    // field IDs into the files (ID-based column resolution on read); the
-    // cast to the Iceberg-derived Spark type carries NESTED field IDs too
-    // (they live on the StructFields inside the DataType tree)
+    // attach parquet.field.id metadata so the writer stamps Iceberg field
+    // IDs into the files (ID-based column resolution on read); the cast to
+    // the Iceberg-derived Spark type carries NESTED field IDs too (they
+    // live on the StructFields inside the DataType tree).
     // the FILE schema uses Avro-compatible names (reference sanitizes at
     // write, `table/writer.go:106`); reads resolve by field ID, so the
     // table-visible names are untouched
@@ -78,9 +114,9 @@ object DataWriter {
       value.as(wf.name, sf.metadata)
     }: _*)
     // honor the table sort order at write (reference applies SortOrder at
-    // write, `table/sorting.go` + writer): range-partition on the sort key
-    // so files hold disjoint ranges, then sort within each — that is what
-    // tightens per-file min/max bounds and makes stats pruning bite
+    // write, `table/sorting.go` + writer): files then hold contiguous
+    // ranges of the sort key, which is what tightens per-file min/max
+    // bounds and makes stats pruning bite
     val sortCols = sortOrder.fields.map { sf =>
       val src = writeSchema.findById(sf.sourceId).get
       val c = sf.transform.toColumn(col(src.name), src.tpe)
@@ -91,92 +127,242 @@ object DataWriter {
         case (false, false) => c.desc_nulls_last
       }
     }
-    val aligned =
-      if (sortOrder.isUnsorted) withIds
-      else withIds.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
-    if (spec.isUnpartitioned) {
-      aligned.write
-        .options(parquetWriteOptions(properties))
-        .option("maxRecordsPerFile", maxRecords)
-        .parquet(staging)
-      val staged = renameToIceberg(listParquet(staging))
-      val placed =
-        if (provider.objectStore)
-          placeObjectStore(staged, staging, provider).map(t => (t._1, t._2))
-        else staged
-      val out = placed.par.map { case (p, len) =>
-        ParquetStats.toDataFile(p, len, schema, Nil,
-          nameToId = Some(writeSchema.idByName), props = properties)
-      }.seq.toSeq
-      collectNanCounts(df.sparkSession, out, schema, writeSchema, properties)
-    } else {
-      val partCols = spec.fields.map { pf =>
-        val src = writeSchema.findById(pf.sourceId).get
-        val c = pf.transform.toColumn(col(src.name), src.tpe)
-        // STRING-typed partition values go into directory names; url-encode
-        // them so the staged dirs are pure ASCII — Spark's own path escaping
-        // leaves non-ASCII raw, and a JVM whose path charset can't map it
-        // (sun.jnu.encoding=ANSI under LANG=C, the common container locale)
-        // fails the whole write with InvalidPathException. Decoded exactly
-        // in [[parsePartitionDirs]]; every other result type renders ASCII.
-        val rendered =
-          if (pf.transform.resultType(src.tpe) == IceString)
-            org.apache.spark.sql.functions.url_encode(c)
-          else c
-        rendered.as(PartPrefix + pf.name)
-      }
-      val partNames = spec.fields.map(PartPrefix + _.name)
-      // fanout shuffle on the partition tuple; tasks-per-partition > 1
-      // salts the shuffle so one giant partition value cannot pin a single
-      // reducer (the skew escape hatch at 100 TB)
-      val fanout = properties.getOrElse("write.fanout.tasks-per-partition", "1").toInt
-      val shuffleKeys =
-        if (fanout <= 1) partNames.map(col)
-        // WRITE-schema names: the frame being repartitioned was just
-        // projected to the sanitized names, so a salt built from original
-        // schema names fails analysis whenever any name needed sanitizing
-        else partNames.map(col) :+ pmod(
-          hash(writeSchema.fields.map(f => col(f.name)): _*), lit(fanout))
-      // the table sort order is applied AFTER the fanout shuffle (a
-      // pre-shuffle range-sort would be destroyed by the hash repartition
-      // — one full wasted exchange and files with overlapping ranges);
-      // sorting within the fanout partitions keyed (partition, sort...)
-      // gives each written file the tight contiguous bounds the order
-      // exists for
-      val shuffled = withIds
-        .select(writeSchema.fields.map(f => col(f.name)) ++ partCols: _*)
-        .repartition(shuffleKeys: _*)
-      val clustered =
-        if (sortOrder.isUnsorted) shuffled
-        else shuffled.sortWithinPartitions(partNames.map(col) ++ sortCols: _*)
-      clustered
-        .write
-        .options(parquetWriteOptions(properties))
-        .option("maxRecordsPerFile", maxRecords)
-        .partitionBy(partNames: _*).parquet(staging)
-      val partType = spec.partitionType(schema)
-      val staged = renameToIceberg(listParquet(staging))
-      // the partition tuple must be read off the STAGED path — an
-      // object-store placement with partitioned-paths=false erases the
-      // value dirs from the final key (manifests carry the tuple)
-      val placed: Seq[(String, Long, Seq[Any])] =
-        if (provider.objectStore)
-          placeObjectStore(staged, staging, provider).map { case (p, len, dirs) =>
-            (p, len, parsePartitionDirs(dirs, partType))
-          }
-        else staged.map { case (p, len) =>
-          (p, len, parsePartitionPath(p, staging, partType))
+    val clustered =
+      if (spec.isUnpartitioned)
+        if (sortOrder.isUnsorted) withIds
+        else withIds.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
+      else {
+        val partNames = spec.fields.map(PartPrefix + _.name)
+        val partCols = spec.fields.zip(partNames).map { case (pf, name) =>
+          val src = writeSchema.findById(pf.sourceId).get
+          pf.transform.toColumn(col(src.name), src.tpe).as(name)
         }
-      val out = placed.par.map { case (p, len, tuple) =>
-        ParquetStats.toDataFile(p, len, schema, tuple,
-          nameToId = Some(writeSchema.idByName), props = properties)
-      }.seq.toSeq
-      collectNanCounts(df.sparkSession, out, schema, writeSchema, properties)
+        // fanout shuffle on the partition tuple; tasks-per-partition > 1
+        // salts the shuffle so one giant partition value cannot pin a
+        // single reducer (the skew escape hatch at 100 TB). The salt hashes
+        // WRITE-schema names: the frame was just projected to them
+        val fanout = properties.getOrElse("write.fanout.tasks-per-partition", "1").toInt
+        val shuffleKeys =
+          if (fanout <= 1) partNames.map(col)
+          else partNames.map(col) :+ pmod(
+            hash(writeSchema.fields.map(f => col(f.name)): _*), lit(fanout))
+        // partition columns lead the in-task sort, as in Spark's own
+        // partitioned writer: a task then holds one file open at a time.
+        // The table sort order follows (a pre-shuffle range sort would be
+        // destroyed by the hash exchange)
+        withIds
+          .select(writeSchema.fields.map(f => col(f.name)) ++ partCols: _*)
+          .repartition(shuffleKeys: _*)
+          .sortWithinPartitions(partNames.map(col) ++ sortCols: _*)
+      }
+    // NaN counts are opt-in (Parquet footers carry none): top-level
+    // float/double columns whose metrics mode keeps any stats
+    val nanFields =
+      if (!properties.get(NanCountsEnabledKey).exists(_.toBoolean)) Nil
+      else {
+        val modes = ParquetStats.modesFor(schema, properties)
+        writeSchema.fields.zipWithIndex.collect {
+          case (f, i) if (f.tpe == IceFloat || f.tpe == IceDouble) &&
+              modes.get(f.id).forall(_.kind != "none") =>
+            NanField(i, f.id, f.tpe == IceDouble)
+        }
+      }
+    writeFiles(clustered, writeSchema.fields.size, schema, writeSchema.idByName, spec,
+      Locations.forTable(location, properties), maxRecords, properties, content = 0,
+      fullBoundsFieldIds = Set.empty, nanFields)
+  }
+
+  /** Position-delete files from `(file_path, pos, <range>)` rows whose
+    * tasks each hold whole ranges sorted by `(file_path, pos)`. A file
+    * closes at every range change, so each covers one contiguous
+    * `file_path` range, and its path bounds are recorded untruncated for
+    * the planner's delete matching ([[DeleteIndex]]).
+    */
+  private[table] def writePositionDeletes(clustered: DataFrame, rangeCol: String,
+      location: String, properties: Map[String, String]): Seq[DataFile] = {
+    val framed = clustered.select(PositionDeleteSchema.fields.map(f =>
+      col(f.name).as(f.name, SchemaConv.toSparkField(f).metadata)) :+ col(rangeCol): _*)
+    writeFiles(framed, PositionDeleteSchema.fields.size, PositionDeleteSchema,
+      PositionDeleteSchema.idByName, PartitionSpec.Unpartitioned,
+      Locations.forTable(location, properties), Long.MaxValue, properties,
+      content = 1, fullBoundsFieldIds = Set(DeleteIndex.PathFieldId), nanFields = Nil)
+  }
+
+  /** Run one write job over `clustered`: its first `fileColumns` columns
+    * are written, and the rest are the roll key (the partition values of
+    * a partitioned `spec`).
+    */
+  private def writeFiles(clustered: DataFrame, fileColumns: Int, schema: IceSchema,
+      nameToId: Map[String, Int], spec: PartitionSpec,
+      provider: Locations.LocationProvider, maxRecords: Long,
+      properties: Map[String, String], content: Int, fullBoundsFieldIds: Set[Int],
+      nanFields: Seq[NanField]): Seq[DataFile] = {
+    val spark = clustered.sparkSession
+    val sqlConf = spark.sessionState.conf
+    val options = parquetWriteOptions(properties)
+    // Spark's writer stores every column as optional; so does this one
+    val fileSchema = GraftShim.asNullable(StructType(clustered.schema.take(fileColumns)))
+    val ioSettings = FileIO.sparkHadoopSettings
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    ioSettings.foreach { case (k, v) => hadoopConf.set(k, v) }
+    val job = Job.getInstance(hadoopConf)
+    ParquetUtils.prepareWrite(sqlConf, job, fileSchema, new ParquetOptions(options, sqlConf))
+    val task = WriteTask(new SerializableConfiguration(job.getConfiguration), ioSettings,
+      fileSchema, clustered.schema.drop(fileColumns).map(_.dataType), spec, schema,
+      nameToId, provider, UUID.randomUUID().toString, maxRecords, properties, content,
+      fullBoundsFieldIds, nanFields)
+    val qe = clustered.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      qe.toRdd.mapPartitions(task.run).collect().toSeq
     }
   }
 
-  /** Property gating the post-write NaN-count pass (default off). */
-  val NanCountsEnabledKey = "write.metadata.nan-counts.enabled"
+  /** A float/double column whose NaNs are counted: ordinal, field id. */
+  private final case class NanField(ordinal: Int, fieldId: Int, isDouble: Boolean)
+
+  /** Everything one write job's tasks share; [[run]] is the task body. */
+  private final case class WriteTask(
+      conf: SerializableConfiguration,
+      ioSettings: Map[String, String],
+      fileSchema: StructType,
+      keyTypes: Seq[DataType],
+      spec: PartitionSpec,
+      schema: IceSchema,
+      nameToId: Map[String, Int],
+      provider: Locations.LocationProvider,
+      writeId: String,
+      maxRecords: Long,
+      properties: Map[String, String],
+      content: Int,
+      fullBoundsFieldIds: Set[Int],
+      nanFields: Seq[NanField]) {
+
+    def run(rows: Iterator[InternalRow]): Iterator[DataFile] = {
+      // executors run in JVMs whose FileIO never saw configure()
+      FileIO.ensureApplied(ioSettings)
+      val tc = TaskContext.get()
+      val hadoopConf = conf.value
+      val width = fileSchema.size
+      val keyOf =
+        if (keyTypes.isEmpty) null
+        else UnsafeProjection.create(keyTypes.zipWithIndex.map { case (t, i) =>
+          BoundReference(width + i, t, nullable = true)
+        })
+      val view = if (keyTypes.isEmpty) null else ProjectingInternalRow(fileSchema, 0 until width)
+      val nan = nanFields.toArray
+      val nanCounts = new Array[Long](nan.length)
+      val opened = ArrayBuffer.empty[String]
+      val written = ArrayBuffer.empty[DataFile]
+      var writer: ParquetWriter[InternalRow] = null
+      var output: TrackedOutputFile = null
+      var key: UnsafeRow = null
+      var tuple: Seq[Any] = Nil
+      var rowsInFile = 0L
+
+      tc.addTaskFailureListener { (_, _) =>
+        if (writer != null) try writer.close() catch { case NonFatal(_) => () }
+        opened.foreach { target =>
+          val p = new Path(target)
+          try p.getFileSystem(hadoopConf).delete(p, false) catch { case NonFatal(_) => false }
+        }
+      }
+      def close(): Unit = if (writer != null) {
+        writer.close()
+        val f = ParquetStats.fromFooter(writer.getFooter, FileIO.pathOnly(opened.last),
+          output.length, schema, tuple, content, Some(nameToId), fullBoundsFieldIds, properties)
+        written += (if (nan.isEmpty) f
+          else f.copy(nanValueCounts = nan.indices.map(i => nan(i).fieldId -> nanCounts(i)).toMap))
+        writer = null
+      }
+      def open(): Unit = {
+        val name = f"${opened.size}%05d-${tc.partitionId()}-${tc.taskAttemptId()}-$writeId.parquet"
+        val target = provider.newDataLocation(name,
+          Option.when(!spec.isUnpartitioned)(spec.partitionToPath(tuple, schema)))
+        opened += target
+        output = new TrackedOutputFile(FileIO.outputFile(target, hadoopConf))
+        writer = newWriter(output, hadoopConf)
+        rowsInFile = 0L
+        java.util.Arrays.fill(nanCounts, 0L)
+      }
+
+      while (rows.hasNext) {
+        val row = rows.next()
+        if (keyOf != null) {
+          val k = keyOf(row)
+          if (key == null || k != key) {
+            close()
+            key = k.copy()
+            tuple = if (spec.isUnpartitioned) Nil else keyTypes.indices.map(i =>
+              fromCatalyst(key.get(i, keyTypes(i))))
+          }
+        }
+        if (writer == null || rowsInFile >= maxRecords) { close(); open() }
+        if (view == null) writer.write(row)
+        else { view.project(row); writer.write(view) }
+        rowsInFile += 1
+        var i = 0
+        while (i < nan.length) {
+          val o = nan(i).ordinal
+          if (!row.isNullAt(o) &&
+              (if (nan(i).isDouble) row.getDouble(o).isNaN else row.getFloat(o).isNaN))
+            nanCounts(i) += 1
+          i += 1
+        }
+      }
+      close()
+      written.iterator
+    }
+  }
+
+  /** A partition value as Catalyst holds it → the manifest's literal. */
+  private def fromCatalyst(v: Any): Any = v match {
+    case s: UTF8String => s.toString
+    case d: Decimal => d.toJavaBigDecimal
+    case other => other
+  }
+
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
+  }
+
+  /** A Parquet writer set up from a prepared job conf the way
+    * `ParquetOutputFormat.getRecordWriter` reads one.
+    */
+  private def newWriter(file: OutputFile, conf: Configuration): ParquetWriter[InternalRow] = {
+    val b = new RowWriterBuilder(file).withConf(conf)
+      .withCompressionCodec(ParquetOutputFormat.getCompression(conf))
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(ParquetOutputFormat.getPageSize(conf))
+      .withPageRowCountLimit(conf.getInt(ParquetOutputFormat.PAGE_ROW_COUNT_LIMIT,
+        ParquetProperties.DEFAULT_PAGE_ROW_COUNT_LIMIT))
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+      .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+      .withMaxBloomFilterBytes(ParquetOutputFormat.getBloomFilterMaxBytes(conf))
+      .withBloomFilterEnabled(ParquetOutputFormat.getBloomFilterEnabled(conf))
+      .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
+    conf.getPropsWithPrefix(ParquetOutputFormat.BLOOM_FILTER_ENABLED + "#")
+      .forEach { (column, enabled) => b.withBloomFilterEnabled(column, enabled.toBoolean); () }
+    b.build()
+  }
+
+  /** An output file that remembers the length it was written to. */
+  private final class TrackedOutputFile(inner: OutputFile) extends OutputFile {
+    private var stream: PositionOutputStream = _
+    def length: Long = stream.getPos
+    override def create(blockSizeHint: Long): PositionOutputStream = {
+      stream = inner.create(blockSizeHint); stream
+    }
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = {
+      stream = inner.createOrOverwrite(blockSizeHint); stream
+    }
+    override def supportsBlockSize(): Boolean = inner.supportsBlockSize()
+    override def defaultBlockSize(): Long = inner.defaultBlockSize()
+    override def getPath: String = inner.getPath
+  }
 
   /** Iceberg parquet write properties → parquet-hadoop writer options
     * (reference `parquet_files.go:46-64` write property surface). Defaults
@@ -224,164 +410,11 @@ object DataWriter {
     b.result()
   }
 
-  /** Populate `nanValueCounts` for float/double columns with one
-    * column-pruned scan of the just-written files, grouped per file.
-    *
-    * Parquet footers carry no NaN statistics, and Spark's writer cannot
-    * count them inline the way the reference's own file writer could — so
-    * this is a genuine extra pass over the float columns (narrow,
-    * distributed, map-side-combined, driver sees files×columns longs) and
-    * is OPT-IN per table. Without it the table stays exactly as the
-    * reference writes it (`parquet_files.go` declares nan_value_counts
-    * but never fills it from parquet metadata): `IsNaN`/`NotNaN` simply
-    * never prune, which the evaluators handle conservatively.
+  /** Data parquet files under a directory some other writer filled (a
+    * foreign Spark job's output, registered through `addFiles`), skipping
+    * uncommitted `_temporary` attempts.
     */
-  private def collectNanCounts(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[DataFile], schema: IceSchema, writeSchema: IceSchema,
-      properties: Map[String, String]): Seq[DataFile] = {
-    if (!properties.get(NanCountsEnabledKey).exists(_.toBoolean)) return files
-    val modes = ParquetStats.modesFor(schema, properties)
-    val floatFields = writeSchema.fields.filter(f =>
-      (f.tpe == IceFloat || f.tpe == IceDouble) &&
-        modes.get(f.id).forall(_.kind != "none"))
-    if (floatFields.isEmpty || files.isEmpty) return files
-    import org.apache.spark.sql.functions.{isnan, sum, when}
-    import org.apache.spark.sql.types.StructType
-    val aggs = floatFields.map(f =>
-      sum(when(isnan(col(f.name)), 1L).otherwise(0L)).as(s"__nan_${f.id}"))
-    // the float columns only, resolved by field id
-    val byFile = IceScan.readFiles(spark,
-        StructType(floatFields.map(SchemaConv.toSparkField)), files)
-      .groupBy(col("_metadata.file_path").as("__fp"))
-      .agg(aggs.head, aggs.drop(1): _*)
-      .collect()
-      .map(r => IceScan.pathOnly(r.getAs[String]("__fp")) ->
-        floatFields.map(f => f.id -> r.getAs[Long](s"__nan_${f.id}")).toMap)
-      .toMap
-    files.map(f => byFile.get(graft.meta.FileIO.pathOnly(f.filePath))
-      .map(m => f.copy(nanValueCounts = m)).getOrElse(f))
-  }
-
-  /** Move staged files to their entropy-prefixed object-storage keys and
-    * drop the staging dir. A rename is metadata-only on HDFS-like file
-    * systems; a real S3 deployment writes data directly to the final key
-    * (the provider computes it before the upload) — staging-then-rename
-    * here only exists because Spark's parquet committer owns the staged
-    * names until the job finishes.
-    */
-  private def placeObjectStore(files: Seq[(String, Long)], staging: String,
-      provider: Locations.LocationProvider): Seq[(String, Long, String)] = {
-    val fs = FileSystem.get(new java.net.URI(staging), conf)
-    val out = files.map { case (p, len) =>
-      val rel = p.stripPrefix(staging).stripPrefix("/")
-      val slash = rel.lastIndexOf('/')
-      val (dirs, name) =
-        if (slash < 0) ("", rel) else (rel.substring(0, slash), rel.substring(slash + 1))
-      val target = provider.newDataLocation(name, Option(dirs).filter(_.nonEmpty))
-      val tp = new Path(target)
-      fs.mkdirs(tp.getParent)
-      require(fs.rename(new Path(p), tp), s"failed to place $p at $target")
-      (target, len, dirs)
-    }
-    fs.delete(new Path(staging), true): Unit
-    out
-  }
-
-  /** Rename staged part-files to the reference's data-file convention
-    * `%05d-{task}-{uuid}.parquet` (reference `table/writer.go:41-45`),
-    * keeping partition directories intact. Metadata-only (FS rename).
-    */
-  private def renameToIceberg(files: Seq[(String, Long)]): Seq[(String, Long)] = {
-    // Path.toUri escapes characters a raw URI constructor rejects (identity
-    // timestamp partition dirs contain spaces)
-    val fs = FileSystem.get(
-      new Path(files.headOption.map(_._1).getOrElse("/")).toUri, conf)
-    files.zipWithIndex.map { case ((p, len), i) =>
-      val dir = p.substring(0, p.lastIndexOf('/'))
-      val target = f"$dir/$i%05d-$i-${UUID.randomUUID()}.parquet"
-      if (fs.rename(new Path(p), new Path(target))) (target, len) else (p, len)
-    }
-  }
-
-  /** Recursively list data parquet files under a staging dir. */
-  def listParquet(dir: String): Seq[(String, Long)] = {
-    val fs = FileSystem.get(new java.net.URI(dir), conf)
-    val out = Seq.newBuilder[(String, Long)]
-    val it: RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] =
-      fs.listFiles(new Path(dir), true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toUri.getPath
-      if (p.endsWith(".parquet") && !p.contains("_temporary")) out += p -> st.getLen
-    }
-    out.result()
-  }
-
-  /** Parse `_p_name=value/...` segments back into a typed partition tuple. */
-  private[table] def parsePartitionPath(file: String, staging: String,
-      partType: IceStructType): Seq[Any] = {
-    val rel = file.stripPrefix(staging).stripPrefix("/")
-    val slash = rel.lastIndexOf('/')
-    parsePartitionDirs(if (slash < 0) "" else rel.substring(0, slash), partType)
-  }
-
-  /** Same, from the bare `_p_name=value/...` directory string. */
-  private[table] def parsePartitionDirs(dirs: String,
-      partType: IceStructType): Seq[Any] = {
-    val kv = dirs.split('/').iterator.filter(_.contains('=')).map { seg =>
-      val i = seg.indexOf('=')
-      seg.substring(0, i).stripPrefix(PartPrefix) -> unescape(seg.substring(i + 1))
-    }.toMap
-    partType.fields.map { f =>
-      kv.get(f.name) match {
-        case None | Some(HiveNull) => null
-        // string-typed values were url-encoded before Spark's partitionBy
-        // (see the write side) — decode AFTER undoing Spark's own escaping
-        case Some(s) if f.tpe == IceString =>
-          java.net.URLDecoder.decode(s, "UTF-8")
-        case Some(s) => parseValue(f.tpe, s)
-      }
-    }
-  }
-
-  private def parseValue(t: IceType, s: String): Any = t match {
-    case IceInt => s.toInt
-    case IceLong => s.toLong
-    case IceDate =>
-      if (s.matches("-?\\d+")) s.toInt // day-transform output: raw epoch days
-      else java.time.LocalDate.parse(s).toEpochDay.toInt
-    case IceTimestamp | IceTimestampTz =>
-      val norm = s.replace(' ', 'T')
-      // full-fraction epoch micros: toEpochMilli would truncate sub-ms values
-      // and the manifest partition tuple would disagree with the true value
-      val i = java.time.Instant.parse(if (norm.endsWith("Z")) norm else norm + "Z")
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case IceTimestampNs | IceTimestampTzNs =>
-      if (s.matches("-?\\d+")) s.toLong // LongType surrogate writes raw nanos
-      else {
-        val norm = s.replace(' ', 'T')
-        val i = java.time.Instant.parse(if (norm.endsWith("Z")) norm else norm + "Z")
-        i.getEpochSecond * 1000000000L + i.getNano
-      }
-    case IceString | IceUUID => s
-    case IceDouble => s.toDouble
-    case IceFloat => s.toFloat
-    case IceBoolean => s.toBoolean
-    case IceDecimal(_, sc) => new java.math.BigDecimal(s).setScale(sc)
-    case other => throw new IllegalArgumentException(s"cannot parse partition value of $other")
-  }
-
-  /** Undo Hive path escaping (%xx sequences). */
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length + 1 && i + 3 <= s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  def listParquet(dir: String): Seq[(String, Long)] =
+    FileIO.listRecursive(dir).map(st => st.getPath.toUri.getPath -> st.getLen)
+      .filter { case (p, _) => p.endsWith(".parquet") && !p.contains("_temporary") }
 }

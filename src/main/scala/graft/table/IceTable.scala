@@ -359,16 +359,12 @@ final class IceTable private (
       val hp = new org.apache.hadoop.fs.Path(p)
       if (!fs.getFileStatus(hp).isDirectory) Seq(p)
       else {
-        val out = Seq.newBuilder[String]
-        val it = fs.listFiles(hp, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          if (st.isFile && n.endsWith(".parquet") &&
-              !n.startsWith("_") && !n.startsWith("."))
-            out += st.getPath.toString
-        }
-        val files = out.result().sorted
+        val files = FileIO.listRecursive(p).map(_.getPath)
+          .filter { fp =>
+            val n = fp.getName
+            n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+          }
+          .map(_.toString).sorted
         require(files.nonEmpty, s"no parquet data files under directory $p")
         files
       }
@@ -990,24 +986,29 @@ final class IceTable private (
     * (field ids 2147483546/2147483545).
     */
   def deleteWhere(spark: SparkSession, filter: IcePredicate): Option[Snapshot] = synchronized {
-    val (fullMatch, matches) = splitDelete(spark, filter)
+    val (fullMatch, partial, matches) = splitDelete(spark, filter)
     val files = matches.toSeq.flatMap { m =>
-      val stagingDir = s"${locationProvider.dataPath}/deletes-${UUID.randomUUID()}"
-      // range-partition by file_path so (a) a broad predicate fans out over
-      // many writers instead of funnelling every matched row through one
-      // task, and (b) each delete file covers a narrow file_path range,
-      // which the planner's bounds matching then uses to skip it for
-      // unrelated data files
-      m.repartitionByRange(col("file_path"))
-        .sortWithinPartitions("file_path", "pos")
-        .write.parquet(stagingDir)
-      val deleteSchema = IceSchema(-1, Seq(
-        NestedField(2147483546, "file_path", IceString, required = true),
-        NestedField(2147483545, "pos", IceLong, required = true)))
-      DataWriter.listParquet(stagingDir).map { case (p, len) =>
-        ParquetStats.toDataFile(p, len, deleteSchema, Nil, content = 1,
-          fullBoundsFieldIds = Set(DeleteIndex.PathFieldId))
-      }.filter(_.recordCount > 0)
+      // cut the candidate files' sorted paths into contiguous ranges on the
+      // driver, which already holds them, and route each position to its
+      // range: (a) a broad predicate fans out over many writers instead of
+      // funnelling every matched row through one task, and (b) each delete
+      // file covers one narrow file_path range, which the planner's bounds
+      // matching then uses to skip it for unrelated data files. Sampling
+      // for the cut points (`repartitionByRange`) would cost a job that
+      // scans the matched files a second time
+      val paths = partial.map(_.file.filePath).distinct.sorted.toArray
+      val ranges = math.min(paths.length, spark.sessionState.conf.numShufflePartitions)
+      val per = (paths.length + ranges - 1) / ranges
+      val starts = paths.grouped(per).map(g => g.head: AnyRef).toArray
+      val rangeOf = udf { (path: String) =>
+        val i = java.util.Arrays.binarySearch(starts, path)
+        if (i >= 0) i else math.max(0, -i - 2)
+      }
+      DataWriter.writePositionDeletes(
+        m.withColumn("__range", rangeOf(col("file_path")))
+          .repartition(starts.length, col("__range"))
+          .sortWithinPartitions("file_path", "pos"),
+        "__range", location, meta.properties)
     }
     val p = newSnapshot()
     if (fullMatch.nonEmpty)
@@ -1032,8 +1033,8 @@ final class IceTable private (
     * the (file_path, pos) frame of the matching rows of the rest (None when
     * no other file may match).
     */
-  private def splitDelete(spark: SparkSession,
-      filter: IcePredicate): (Seq[FileScanTask], Option[DataFrame]) = {
+  private def splitDelete(spark: SparkSession, filter: IcePredicate)
+      : (Seq[FileScanTask], Seq[FileScanTask], Option[DataFrame]) = {
     val bound = Predicates.bind(filter, schema)
     val (fullMatch, partial) =
       newScan(filter).planFiles().partition(t => Evaluators.fileMustMatch(bound, t.file))
@@ -1043,7 +1044,7 @@ final class IceTable private (
         .withColumn("pos", col("_metadata.row_index"))
         .where(Predicates.toColumn(bound))
         .select("file_path", "pos"))
-    (fullMatch, matches)
+    (fullMatch, partial, matches)
   }
 
   /** Positional delete recorded as v3 DELETION VECTORS: one roaring bitmap
@@ -1067,7 +1068,7 @@ final class IceTable private (
     synchronized {
       // same strict-metrics split as [[deleteWhere]]: provably-full files
       // drop as Deleted entries; only partial files earn a deletion vector
-      val (fullMatch, matches) = splitDelete(spark, filter)
+      val (fullMatch, _, matches) = splitDelete(spark, filter)
       val p = newSnapshot()
       val files = matches.toSeq.flatMap(writeDVShards(spark, _, p))
       if (fullMatch.nonEmpty)
@@ -1121,10 +1122,8 @@ final class IceTable private (
               Map("referenced-data-file" -> ref,
                 "cardinality" -> bm.getLongCardinality.toString)) -> Puffin.encodeDV(bm)
           }
-          val (placed, _) = Puffin.write(puffinPath, blobs)
-          val fileLen = org.apache.hadoop.fs.FileSystem
-            .get(new java.net.URI(puffinPath), graft.meta.FileIO.conf)
-            .getFileStatus(new org.apache.hadoop.fs.Path(puffinPath)).getLen
+          val (placed, footerLen) = Puffin.write(puffinPath, blobs)
+          val fileLen = placed.last.offset + placed.last.length + footerLen
           placed.zip(sorted).iterator.map { case (d, (ref, bm)) =>
             (puffinPath, ref, d.offset, d.length, bm.getLongCardinality, fileLen)
           }
@@ -1326,16 +1325,9 @@ final class IceTable private (
       val dataFiles = DataWriter.write(rows, location, schemaNow, spec, sortOrder,
         meta.properties, avgRowBytesHint = avgRowBytes)
       val written = dataFiles.map(_.recordCount).sum
-      if (skipEmptyCommit && written == 0L) {
-        // nothing to retire, nothing to add: drop any zero-row staged files
-        // and leave the table metadata untouched (no no-op snapshot)
-        dataFiles.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f.filePath)
-          try { p.getFileSystem(graft.meta.FileIO.conf).delete(p, false); () }
-          catch { case _: java.io.IOException => () }
-        }
-        return (0L, None)
-      }
+      // nothing to retire, nothing to add (and no file was written): leave
+      // the table metadata untouched (no no-op snapshot)
+      if (skipEmptyCommit && written == 0L) return (0L, None)
       // the data files DOUBLE as full-row equality-delete files (the spec
       // allows columns beyond `equality_ids` in a delete file — readers
       // project the key fields): one write job per upsert instead of two.
@@ -2238,12 +2230,8 @@ final class IceTable private (
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(location), graft.meta.FileIO.conf)
     val orphans = Seq.newBuilder[(String, org.apache.hadoop.fs.Path)]
-    def walk(dir: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(path)) return
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val st = it.next()
+    def walk(dir: String): Unit =
+      FileIO.listRecursive(dir).foreach { st =>
         val base = st.getPath.getName
         // hidden/marker files (_SUCCESS, .crc) are committer artifacts; the
         // catalog's own files are out of scope
@@ -2255,7 +2243,6 @@ final class IceTable private (
             st.getModificationTime < olderThanMs)
           orphans += st.getPath.toUri.getPath -> st.getPath
       }
-    }
     // walk the provider's roots: with write.data.path / write.metadata.path
     // overrides (or object-storage entropy prefixes) table files live
     // there, not under $location — and the default provider resolves to

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 
@@ -17,9 +18,9 @@ import graft.meta.DataFile
   * single-value codec, string bounds truncated to 16 units (metrics mode
   * `truncate(16)`).
   *
-  * Spark writes the data; reading footers driver-side keeps stats collection
-  * out of the row path — at scale this is one footer read per file, not a
-  * data scan (executed with parallel collections over the file list).
+  * The writing task folds the footer of each file it closes
+  * ([[fromFooter]]); `addFiles` opens the footers of the files it registers
+  * ([[toDataFile]]). Both are metadata-only: no data page is read.
   */
 object ParquetStats {
   private def conf = graft.meta.FileIO.conf
@@ -95,99 +96,116 @@ object ParquetStats {
       nameToId: Option[Map[String, Int]] = None,
       fullBoundsFieldIds: Set[Int] = Set.empty,
       props: Map[String, String] = Map.empty): DataFile = {
-    val modes = modesFor(schema, props)
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(filePath), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val recordCount = blocks.map(_.getRowCount).sum
-      // stamp field-ID presence while the footer is open: scan planning
-      // reads it from the manifest instead of re-opening the file
-      val msgFields = reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
-      val fileHasIds = msgFields.nonEmpty && msgFields.forall(_.getId != null)
-      val colSizes = collection.mutable.Map[Int, Long]()
-      val valueCounts = collection.mutable.Map[Int, Long]()
-      val nullCounts = collection.mutable.Map[Int, Long]()
-      val mins = collection.mutable.Map[Int, Any]()
-      val maxs = collection.mutable.Map[Int, Any]()
-      val statsValid = collection.mutable.Map[Int, Boolean]().withDefaultValue(true)
-      val splitOffsets = blocks.map(_.getStartingPos).sorted
+    try fromFooter(reader.getFooter, filePath, fileSize, schema, partition, content,
+      nameToId, fullBoundsFieldIds, props)
+    finally reader.close()
+  }
 
-      val resolve: String => Option[Int] =
-        nameToId.map(m => (n: String) => m.get(n)).getOrElse(schema.idByName.get _)
-      for (block <- blocks; col <- block.getColumns.asScala) {
-        val name = col.getPath.toDotString
-        resolve(name).filter(schema.byId.contains)
-          // none: no stats at all — EXCEPT for fullBoundsFieldIds (the
-          // partition-source columns of an addFiles inference): without
-          // their counts/bounds the inference cannot tell "column absent"
-          // from "stats suppressed" and would register a wrong null
-          // partition
-          .filter(id =>
-            fullBoundsFieldIds(id) || modes.get(id).forall(_.kind != "none"))
-          .foreach { id =>
-          val t = schema.byId(id).tpe
-          val wantBounds = modes.get(id).forall(m =>
-            m.kind == "truncate" || m.kind == "full") || fullBoundsFieldIds(id)
-          colSizes(id) = colSizes.getOrElse(id, 0L) + col.getTotalSize
-          valueCounts(id) = valueCounts.getOrElse(id, 0L) + col.getValueCount
-          val st = col.getStatistics
-          if (st == null) statsValid(id) = false
-          else {
-            if (st.isNumNullsSet) nullCounts(id) = nullCounts.getOrElse(id, 0L) + st.getNumNulls
-            else statsValid(id) = false
-            if (st.hasNonNullValue && wantBounds) {
-              (decodeStat(t, st.genericGetMin().asInstanceOf[AnyRef]),
-                  decodeStat(t, st.genericGetMax().asInstanceOf[AnyRef])) match {
-                case (Some(mn), Some(mx)) =>
-                  mins(id) = mins.get(id) match {
-                    case Some(cur) if Bounds.compare(t, cur, mn) <= 0 => cur
-                    case _ => mn
-                  }
-                  maxs(id) = maxs.get(id) match {
-                    case Some(cur) if Bounds.compare(t, cur, mx) >= 0 => cur
-                    case _ => mx
-                  }
-                case _ => statsValid(id) = false
-              }
+  /** The fold behind [[toDataFile]], over a footer already in hand: the
+    * writing task passes `ParquetWriter.getFooter` of the file it just
+    * closed, so written and registered files share one stats path.
+    */
+  def fromFooter(
+      footer: ParquetMetadata,
+      filePath: String,
+      fileSize: Long,
+      schema: IceSchema,
+      partition: Seq[Any],
+      content: Int,
+      nameToId: Option[Map[String, Int]],
+      fullBoundsFieldIds: Set[Int],
+      props: Map[String, String]): DataFile = {
+    val modes = modesFor(schema, props)
+    val blocks = footer.getBlocks.asScala.toSeq
+    val recordCount = blocks.map(_.getRowCount).sum
+    // stamp field-ID presence from the footer: scan planning reads it
+    // from the manifest instead of re-opening the file
+    val msgFields = footer.getFileMetaData.getSchema.getFields.asScala.toSeq
+    val fileHasIds = msgFields.nonEmpty && msgFields.forall(_.getId != null)
+    val colSizes = collection.mutable.Map[Int, Long]()
+    val valueCounts = collection.mutable.Map[Int, Long]()
+    val nullCounts = collection.mutable.Map[Int, Long]()
+    val mins = collection.mutable.Map[Int, Any]()
+    val maxs = collection.mutable.Map[Int, Any]()
+    val statsValid = collection.mutable.Map[Int, Boolean]().withDefaultValue(true)
+    val splitOffsets = blocks.map(_.getStartingPos).sorted
+
+    val resolve: String => Option[Int] =
+      nameToId.map(m => (n: String) => m.get(n)).getOrElse(schema.idByName.get _)
+    for (block <- blocks; col <- block.getColumns.asScala) {
+      val name = col.getPath.toDotString
+      resolve(name).filter(schema.byId.contains)
+        // none: no stats at all — EXCEPT for fullBoundsFieldIds (the
+        // partition-source columns of an addFiles inference): without
+        // their counts/bounds the inference cannot tell "column absent"
+        // from "stats suppressed" and would register a wrong null
+        // partition
+        .filter(id =>
+          fullBoundsFieldIds(id) || modes.get(id).forall(_.kind != "none"))
+        .foreach { id =>
+        val t = schema.byId(id).tpe
+        val wantBounds = modes.get(id).forall(m =>
+          m.kind == "truncate" || m.kind == "full") || fullBoundsFieldIds(id)
+        colSizes(id) = colSizes.getOrElse(id, 0L) + col.getTotalSize
+        valueCounts(id) = valueCounts.getOrElse(id, 0L) + col.getValueCount
+        val st = col.getStatistics
+        if (st == null) statsValid(id) = false
+        else {
+          if (st.isNumNullsSet) nullCounts(id) = nullCounts.getOrElse(id, 0L) + st.getNumNulls
+          else statsValid(id) = false
+          if (st.hasNonNullValue && wantBounds) {
+            (decodeStat(t, st.genericGetMin().asInstanceOf[AnyRef]).map(widenZero(_, -1)),
+                decodeStat(t, st.genericGetMax().asInstanceOf[AnyRef]).map(widenZero(_, 1))) match {
+              case (Some(mn), Some(mx)) =>
+                mins(id) = mins.get(id) match {
+                  case Some(cur) if Bounds.compare(t, cur, mn) <= 0 => cur
+                  case _ => mn
+                }
+                maxs(id) = maxs.get(id) match {
+                  case Some(cur) if Bounds.compare(t, cur, mx) >= 0 => cur
+                  case _ => mx
+                }
+              case _ => statsValid(id) = false
             }
           }
         }
       }
+    }
 
-      // drop bounds for columns where any row group lacked usable stats
-      def widthFor(id: Int): Int =
-        if (fullBoundsFieldIds(id)) Int.MaxValue
-        else modes.get(id) match {
-          case Some(MetricsMode("full", _)) => Int.MaxValue
-          case Some(MetricsMode("truncate", w)) => w
-          case _ => TruncateWidth
-        }
-      val lowerBounds = mins.toMap.collect {
-        case (id, v) if statsValid(id) =>
-          val t = schema.byId(id).tpe
-          id -> Bounds.encode(t, Bounds.truncateLower(t, v, widthFor(id)))
+    // drop bounds for columns where any row group lacked usable stats
+    def widthFor(id: Int): Int =
+      if (fullBoundsFieldIds(id)) Int.MaxValue
+      else modes.get(id) match {
+        case Some(MetricsMode("full", _)) => Int.MaxValue
+        case Some(MetricsMode("truncate", w)) => w
+        case _ => TruncateWidth
       }
-      val upperBounds = maxs.toMap.flatMap {
-        case (id, v) if statsValid(id) =>
-          val t = schema.byId(id).tpe
-          Bounds.truncateUpper(t, v, widthFor(id)).map(u => id -> Bounds.encode(t, u))
-        case _ => None
-      }
-      DataFile(
-        content = content,
-        filePath = filePath,
-        fileFormat = "PARQUET",
-        partition = partition,
-        recordCount = recordCount,
-        fileSizeInBytes = fileSize,
-        columnSizes = colSizes.toMap,
-        valueCounts = valueCounts.toMap,
-        nullValueCounts = nullCounts.toMap.filter { case (id, _) => statsValid(id) },
-        lowerBounds = lowerBounds,
-        upperBounds = upperBounds,
-        splitOffsets = splitOffsets,
-        hasFieldIds = Some(fileHasIds))
-    } finally reader.close()
+    val lowerBounds = mins.toMap.collect {
+      case (id, v) if statsValid(id) =>
+        val t = schema.byId(id).tpe
+        id -> Bounds.encode(t, Bounds.truncateLower(t, v, widthFor(id)))
+    }
+    val upperBounds = maxs.toMap.flatMap {
+      case (id, v) if statsValid(id) =>
+        val t = schema.byId(id).tpe
+        Bounds.truncateUpper(t, v, widthFor(id)).map(u => id -> Bounds.encode(t, u))
+      case _ => None
+    }
+    DataFile(
+      content = content,
+      filePath = filePath,
+      fileFormat = "PARQUET",
+      partition = partition,
+      recordCount = recordCount,
+      fileSizeInBytes = fileSize,
+      columnSizes = colSizes.toMap,
+      valueCounts = valueCounts.toMap,
+      nullValueCounts = nullCounts.toMap.filter { case (id, _) => statsValid(id) },
+      lowerBounds = lowerBounds,
+      upperBounds = upperBounds,
+      splitOffsets = splitOffsets,
+      hasFieldIds = Some(fileHasIds))
   }
 
   /** Plan-time footer opens via [[fileColumns]] — a test hook: after
@@ -218,6 +236,18 @@ object ParquetStats {
         else fields.flatMap(f => nameToId.get(f.getName)).toSet
       (hasIds, present)
     } finally reader.close()
+  }
+
+  /** A zero float bound widened to the signed zero on its side (`sign` -1
+    * for a lower bound, 1 for an upper one), as parquet-mr does when it
+    * reads a footer back: a file's `0.0` rows may include `-0.0`. The
+    * writer's in-memory footer holds the unwidened value, and the same
+    * rule makes both folds agree.
+    */
+  private def widenZero(v: Any, sign: Int): Any = v match {
+    case d: Double if d == 0.0 => if (sign < 0) -0.0d else 0.0d
+    case f: Float if f == 0.0f => if (sign < 0) -0.0f else 0.0f
+    case other => other
   }
 
   /** Parquet footer stat value → our JVM literal rep for the Iceberg type. */
