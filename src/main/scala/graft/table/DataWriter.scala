@@ -65,6 +65,11 @@ import graft.meta.{DataFile, FileIO, PartitionSpec, SortOrder}
 object DataWriter {
   private val PartPrefix = "_p_"
 
+  /** Row cap per written file when `write.max-records-per-file` is unset
+    * and no average row size is known yet.
+    */
+  val DefaultMaxRecordsPerFile: Long = 1048576L
+
   /** Property gating NaN counting while writing (default off). */
   val NanCountsEnabledKey = "write.metadata.nan-counts.enabled"
 
@@ -89,7 +94,7 @@ object DataWriter {
         val target = properties.get("write.target-file-size-bytes")
           .flatMap(_.toLongOption).getOrElse(512L * 1024 * 1024)
         avgRowBytesHint.filter(_ > 0)
-          .map(b => math.max(1L, target / b)).getOrElse(1048576L)
+          .map(b => math.max(1L, target / b)).getOrElse(DefaultMaxRecordsPerFile)
       }
     // attach parquet.field.id metadata so the writer stamps Iceberg field
     // IDs into the files (ID-based column resolution on read); the cast to

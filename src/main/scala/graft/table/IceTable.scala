@@ -981,9 +981,10 @@ final class IceTable private (
   // ------------------------------------------------------------ MOR delete
   /** Positional-delete (merge-on-read) of rows matching the filter: records
     * (file_path, pos) pairs in a delete Parquet + a deletes manifest
-    * (content=1). Read-side applies them as an anti-join. Reference
-    * semantics: `table/arrow_scanner.go:50-190`, delete schema per spec
-    * (field ids 2147483546/2147483545).
+    * (content=1). Scans drop the positions inside their tasks
+    * ([[DeleteFilter]]). Reference semantics:
+    * `table/arrow_scanner.go:50-190`, delete schema per spec (field ids
+    * 2147483546/2147483545).
     */
   def deleteWhere(spark: SparkSession, filter: IcePredicate): Option[Snapshot] = synchronized {
     val (fullMatch, partial, matches) = splitDelete(spark, filter)
@@ -995,19 +996,30 @@ final class IceTable private (
       // file covers one narrow file_path range, which the planner's bounds
       // matching then uses to skip it for unrelated data files. Sampling
       // for the cut points (`repartitionByRange`) would cost a job that
-      // scans the matched files a second time
+      // scans the matched files a second time. The candidates' record
+      // counts bound the positions, so a range holds at most the table's
+      // per-file record cap and a small delete is one range: one task
+      // sorts it, with no exchange, and the delete runs one job
       val paths = partial.map(_.file.filePath).distinct.sorted.toArray
-      val ranges = math.min(paths.length, spark.sessionState.conf.numShufflePartitions)
+      val perRange = meta.properties.get("write.max-records-per-file").map(_.toLong)
+        .getOrElse(DataWriter.DefaultMaxRecordsPerFile)
+      val records = partial.map(_.file.recordCount).sum
+      val ranges = Seq(paths.length.toLong,
+        spark.sessionState.conf.numShufflePartitions.toLong,
+        (records + perRange - 1) / perRange).min.max(1L).toInt
       val per = (paths.length + ranges - 1) / ranges
       val starts = paths.grouped(per).map(g => g.head: AnyRef).toArray
-      val rangeOf = udf { (path: String) =>
-        val i = java.util.Arrays.binarySearch(starts, path)
-        if (i >= 0) i else math.max(0, -i - 2)
-      }
-      DataWriter.writePositionDeletes(
-        m.withColumn("__range", rangeOf(col("file_path")))
-          .repartition(starts.length, col("__range"))
-          .sortWithinPartitions("file_path", "pos"),
+      val clustered =
+        if (starts.length == 1) m.withColumn("__range", lit(0)).coalesce(1)
+        else {
+          val rangeOf = udf { (path: String) =>
+            val i = java.util.Arrays.binarySearch(starts, path)
+            if (i >= 0) i else math.max(0, -i - 2)
+          }
+          m.withColumn("__range", rangeOf(col("file_path")))
+            .repartition(starts.length, col("__range"))
+        }
+      DataWriter.writePositionDeletes(clustered.sortWithinPartitions("file_path", "pos"),
         "__range", location, meta.properties)
     }
     val p = newSnapshot()
@@ -1036,14 +1048,15 @@ final class IceTable private (
   private def splitDelete(spark: SparkSession, filter: IcePredicate)
       : (Seq[FileScanTask], Seq[FileScanTask], Option[DataFrame]) = {
     val bound = Predicates.bind(filter, schema)
+    val scan = newScan(filter)
     val (fullMatch, partial) =
-      newScan(filter).planFiles().partition(t => Evaluators.fileMustMatch(bound, t.file))
+      scan.planFiles().partition(t => Evaluators.fileMustMatch(bound, t.file))
+    // read with the scan's per-file resolution: a name-mapped file without
+    // field ids matches by its aliases instead of as all-null columns
     val matches = Option.when(partial.nonEmpty)(
-      IceScan.readFiles(spark, schema.toSpark, partial.map(_.file))
-        .withColumn("file_path", IceScan.normalizedMetaPath)
-        .withColumn("pos", col("_metadata.row_index"))
+      scan.readTasksProjected(spark, partial, schema, stampPathPos = true)
         .where(Predicates.toColumn(bound))
-        .select("file_path", "pos"))
+        .select(col("__path").as("file_path"), col("__pos").as("pos")))
     (fullMatch, partial, matches)
   }
 
@@ -1143,10 +1156,10 @@ final class IceTable private (
     * deletion vector per referenced data file (the v3 invariant), dropping
     * the superseded delete manifests. Read-side planning then matches at
     * most one DV per data file, and long-running upsert/CDC streams stop
-    * paying one anti-join per accumulated equality-delete set on every
-    * scan (Iceberg's convert-equality-deletes maintenance; the equality
-    * kill set is resolved ONCE here, against only the affected files, with
-    * the same strictly-older sequence scoping as the read path). (One DV
+    * matching every accumulated equality-delete file on every scan
+    * (Iceberg's convert-equality-deletes maintenance; the kill set is
+    * resolved ONCE here, against only the affected files, by the read
+    * path's own delete predicate, sequence scoping included). (One DV
     * per file, not one Puffin container: shards write executor-side, like
     * [[deleteWhereDV]].)
     *
@@ -1158,20 +1171,18 @@ final class IceTable private (
   def rewritePositionDeletes(spark: SparkSession): Option[Snapshot] = synchronized {
     val scan = newScan()
     val tasks = scan.planFiles()
-    val posOpt = IceScan.deletePositionsDF(spark, tasks)
-    val eqOpt = eqKilledPositions(spark, scan, tasks)
-    val positions = (posOpt.toSeq ++ eqOpt.toSeq)
-      .reduceOption(_.unionByName(_)).getOrElse(return None)
+    val positions = killedPositions(spark, scan, tasks).getOrElse(return None)
+    val hasEq = tasks.exists(_.eqDeletes.nonEmpty)
     val p = newSnapshot()
     val files = writeDVShards(spark, positions, p)
-    if (files.isEmpty && eqOpt.isEmpty) return None
+    if (files.isEmpty && !hasEq) return None
     // the new DV manifest replaces the POSITIONAL delete manifests;
     // equality-delete manifests are value-based and survive UNLESS this
     // commit converted them to positions too. `files` can be empty when the
     // converted equality deletes kill no current row — the commit still
     // drops the spent debt
     val kept = manifestsOf(meta.currentSnapshot).filter { m =>
-      m.content == 0 || (eqOpt.isEmpty &&
+      m.content == 0 || (!hasEq &&
         ManifestIO.readManifest(m.path, meta.specs, schema)._2.exists(_.dataFile.content == 2))
     }
     val dvManifest =
@@ -1179,67 +1190,30 @@ final class IceTable private (
     Some(p.commit("replace", kept ++ dvManifest))
   }
 
-  /** Positions of rows killed by the table's EQUALITY deletes — the
-    * conversion read for [[rewritePositionDeletes]]. Reads ONLY the
-    * affected data files, projected to each id-set's key columns, and
-    * semi-joins the delete rows under the exact read-path condition:
-    * null-safe key equality AND the delete's sequence strictly newer than
-    * the data file's. Rows already dead positionally may appear again —
-    * the DV bitmaps dedupe on insert. Data files read through the scan's
+  /** (file_path, pos) of every live data file's rows that its deletes kill
+    * — the conversion read for [[rewritePositionDeletes]], or None when no
+    * planned file carries a delete. Reads ONLY the affected data files,
+    * projected to the equality key columns, and keeps the rows the scan's
+    * own delete predicate ([[DeleteFilter]]) drops: the same per-file
+    * position, deletion-vector and sequence-scoped equality rules as every
+    * read. Data files read through the scan's
     * [[IceScan.readTasksProjected]], so id-less name-mapped files resolve
     * their key columns by alias exactly like a scan would (delete files
     * are always our own writes — canonical names + field ids).
     */
-  private def eqKilledPositions(spark: SparkSession, scan: IceScan,
+  private def killedPositions(spark: SparkSession, scan: IceScan,
       tasks: Seq[FileScanTask]): Option[org.apache.spark.sql.DataFrame] = {
-    val affected = tasks.filter(_.eqDeletes.nonEmpty)
+    val affected = tasks.filter(t =>
+      t.deletes.nonEmpty || t.dvDeletes.nonEmpty || t.eqDeletes.nonEmpty)
     if (affected.isEmpty) return None
     val schemaNow = schema
     graft.GraftSession.ensurePrepared(spark)
-    // group by the data file's (SPEC ID, PARTITION TUPLE): tasks of one
-    // partition share their applicable delete-file universe (that
-    // partition's scoped files + the globals) -- a scoped delete from
-    // another partition OR another spec epoch never enters the group, so
-    // the union can't over-kill -- and the strictly-newer `__dseq > __seq`
-    // guard below scopes sequences per row, exactly like the read path.
-    // The spec id in the key mirrors the read-side index exactly
-    // (DeleteIndex keys scoped entries by (specId, tuple)) instead of
-    // leaning on the write-side gate's sequencing argument. Grouping by
-    // partition, NOT by each task's exact seq-suffix delete set, keeps
-    // the conversion at O(partitions) joins instead of O(upsert rounds):
-    // an exact-set key split a 32-round unpartitioned history into 32
-    // overlapping joins (EqDebtProbe: conversion 9 to 80 s before this
-    // was caught).
-    val parts = affected
-      .groupBy(t => (t.specId, DeleteIndex.tupleKey(t.file.partition))).toSeq
-      .sortBy { case ((sid, tup), _) => (sid, tup.mkString(" ")) }
-      .map(_._2)
-      .flatMap { groupTasks =>
-        groupTasks.flatMap(_.eqDeletes).distinctBy(_._1.filePath)
-          .groupBy(_._1.equalityIds).toSeq.sortBy(_._1.mkString(","))
-          .map { case (ids, delFiles) => (ids, delFiles,
-            groupTasks.filter(_.eqDeletes.exists(_._1.equalityIds == ids))) }
-      }
-      .map { case (ids, delFiles, groupTasks) =>
-        val fields = ids.map(schemaNow.byId(_))
-        val names = fields.map(_.name)
-        val dataTasks = groupTasks
-        val seqMap = IceScan.sequenceMap(spark,
-          dataTasks.map(t => t.file.filePath -> t.dataSeq), "__sp", "__seq")
-        val data = scan.readTasksProjected(spark, dataTasks,
-            IceSchema(-1, fields), stampPathPos = true)
-          .withColumnRenamed("__path", "file_path")
-          .withColumnRenamed("__pos", "pos")
-          .join(broadcast(seqMap), col("file_path") === col("__sp"), "left")
-        val renamed = IceScan.equalityDeleteRows(spark, fields, delFiles)
-        val bytes = delFiles.map(_._1.fileSizeInBytes).sum
-        val side =
-          if (bytes <= IceScan.DeleteBroadcastMaxBytes) broadcast(renamed) else renamed
-        val cond = names.map(n => col(n) <=> col(s"__d_$n")).reduce(_ && _) &&
-          col("__dseq") > col("__seq")
-        data.join(side, cond, "left_semi").select("file_path", "pos")
-      }
-    Some(parts.reduce(_.unionByName(_)))
+    val keyFields = affected.flatMap(_.eqDeletes).flatMap(_._1.equalityIds).distinct
+      .map(schemaNow.byId)
+    Some(scan.readTasksProjected(spark, affected, IceSchema(-1, keyFields),
+        stampPathPos = true, deletes = DeleteFilter(spark, affected, schemaNow),
+        killed = true)
+      .select(col("__path").as("file_path"), col("__pos").as("pos")))
   }
 
   /** Equality-delete (merge-on-read): record the KEY VALUES of rows to
@@ -2558,8 +2532,8 @@ final class IceScan(
   @volatile private[table] var lastPlanRangedChecks: Long = -1L
 
   /** Execute as a DataFrame: one Spark parquet scan over the planned files,
-    * deletes applied via broadcast anti-join on (file_path, row position),
-    * residual filter + projection pushed to Catalyst.
+    * deletes applied inside the scan task ([[DeleteFilter]]), residual
+    * filter + projection pushed to Catalyst.
     */
   def toDF(spark: SparkSession): DataFrame = toDFFor(spark, planFiles())
 
@@ -2567,12 +2541,14 @@ final class IceScan(
     * predicate overwrite) use this to read WITH deletes applied while
     * scoping to the files they rewrite.
     *
-    * Every file is read from its manifest entry ([[IceScan.readFiles]]):
-    * the data files ([[readTasksProjected]]), ONE scan of all parquet
-    * position-delete files ([[IceScan.positionsOf]]) and ONE scan per
-    * equality-id set ([[IceScan.equalityDeleteRows]]), so building the
-    * frame lists nothing, infers nothing and submits no Spark job, and the
-    * plan holds a scan per file kind instead of one per delete file.
+    * The data files are read from their manifest entries
+    * ([[readTasksProjected]]) and every merge-on-read delete applies in
+    * the same scan task: the tasks' position deletes, deletion vectors and
+    * equality deletes, as planning matched them, ship to the executors in
+    * a broadcast variable and one predicate ([[ApplyDeletes]]) drops the
+    * rows they kill. Building the frame lists nothing, infers nothing and
+    * submits no Spark job, and a read or rewrite is one scan stage: the
+    * plan holds one file scan and no join for any delete.
     */
   private[table] def toDFFor(spark: SparkSession, tasks: Seq[FileScanTask]): DataFrame = {
     val schema = scanSchema
@@ -2591,7 +2567,7 @@ final class IceScan(
 
     val bound = Predicates.bind(filter, schema, caseSensitive)
     // equality-delete key columns must be scanned even when projected away:
-    // the anti-join needs them before the final projection
+    // the delete predicate reads them before the final projection
     val eqColNames = tasks.flatMap(_.eqDeletes).flatMap(_._1.equalityIds).distinct
       .flatMap(id => schema.byId.get(id).map(_.name))
     // read schema = projection ∪ filter-referenced columns (column pruning
@@ -2614,52 +2590,8 @@ final class IceScan(
       else readBase
 
     graft.GraftSession.ensurePrepared(spark)
-    val deleteDataFiles = tasks.flatMap(_.deletes).distinctBy(_.filePath)
-    val dvFiles = tasks.flatMap(_.dvDeletes)
-      .distinctBy(f => (f.filePath, f.contentOffset))
-    val eqDeletePairs = tasks.flatMap(_.eqDeletes).distinctBy(_._1.filePath)
-    val needPosDeletes = deleteDataFiles.nonEmpty || dvFiles.nonEmpty
-    val needEqDeletes = eqDeletePairs.nonEmpty
-    val needDeletes = needPosDeletes || needEqDeletes
-
-    var df = readTasksProjected(spark, tasks, readSchema,
-      stampPathPos = needDeletes || withRowId)
-
-    if (needPosDeletes) {
-      val deletes = IceScan.positionsOf(spark, deleteDataFiles, dvFiles)
-      // broadcast only while the accumulated positional deletes are small;
-      // past the threshold a broadcast OOMs the driver at scale, so fall
-      // back to a shuffled anti-join on (path, pos)
-      val deleteBytes = deleteDataFiles.map(_.fileSizeInBytes).sum +
-        dvFiles.flatMap(_.contentSizeInBytes).sum
-      val deletesSide =
-        if (deleteBytes <= IceScan.DeleteBroadcastMaxBytes) broadcast(deletes) else deletes
-      df = df.join(deletesSide,
-        col("__path") === col("file_path") && col("__pos") === col("pos"), "left_anti")
-    }
-    if (needEqDeletes) {
-      // per-row data sequence number, joined broadcast on the stamped path
-      val seqMap = IceScan.sequenceMap(spark,
-        tasks.map(t => t.file.filePath -> t.dataSeq), "__sp", "__seq")
-      df = df.join(broadcast(seqMap), col("__path") === col("__sp"), "left").drop("__sp")
-      // one scan and one anti-join per distinct equality-column set;
-      // delete rows carry their file's sequence so a row deletes only
-      // strictly older data. Null-safe equality: a null key value matches
-      // null (Iceberg spec)
-      eqDeletePairs.groupBy(_._1.equalityIds).toSeq.sortBy(_._1.mkString(","))
-        .foreach { case (ids, files) =>
-          val fields = ids.map(schema.byId(_))
-          val names = fields.map(_.name)
-          val renamed = IceScan.equalityDeleteRows(spark, fields, files)
-          val bytes = files.map(_._1.fileSizeInBytes).sum
-          val side =
-            if (bytes <= IceScan.DeleteBroadcastMaxBytes) broadcast(renamed) else renamed
-          val cond = names.map(n => col(n) <=> col(s"__d_$n")).reduce(_ && _) &&
-            col("__dseq") > col("__seq")
-          df = df.join(side, cond, "left_anti")
-        }
-      df = df.drop("__seq")
-    }
+    var df = readTasksProjected(spark, tasks, readSchema, stampPathPos = withRowId,
+      deletes = DeleteFilter(spark, tasks, schema))
     if (withRowId) {
       // per-file (first_row_id, data sequence) via ONE metadata-sized
       // broadcast map; the materialized columns (rewrite-preserved) win
@@ -2676,9 +2608,8 @@ final class IceScan(
           coalesce(col("_row_id"), col("__frid") + col("__pos")))
         .withColumn(IceTable.LastUpdatedSeqCol,
           coalesce(col(IceTable.LastUpdatedSeqCol), col("__fseq")))
-        .drop("__rp", "__frid", "__fseq")
+        .drop("__rp", "__frid", "__fseq", "__path", "__pos")
     }
-    if (needDeletes || withRowId) df = df.drop("__path", "__pos")
     if (bound != AlwaysTrue) df = df.where(Predicates.toColumn(bound))
     df = df.select(projected.fields.map(f => col(f.name)) ++
       (if (withRowId) Seq(col("_row_id"), col(IceTable.LastUpdatedSeqCol))
@@ -2697,14 +2628,19 @@ final class IceScan(
     * mapped aliases (a field-ID schema would silently null-fill them) and
     * cast-renamed back to the canonical schema; columns added with an
     * initial-default fill with the default, not null, in files that
-    * predate them. `stampPathPos` adds `__path`/`__pos` (normalized file
-    * path + row index) BEFORE the branch union hides the per-file
-    * _metadata column. Shared by the MOR scan ([[toDFFor]]) and the eq→DV
-    * conversion read ([[IceTable.rewritePositionDeletes]]) so name-mapped
-    * tables convert under exactly the resolution rules scans read with.
+    * predate them. `deletes` applies the tasks' merge-on-read deletes in
+    * each branch, directly over its file relation, with the key columns
+    * cast to their canonical types; `killed` keeps the rows the deletes
+    * kill instead of the live ones. `stampPathPos` adds `__path`/`__pos`
+    * (normalized file path + row index) BEFORE the branch union hides the
+    * per-file _metadata column. Shared by the MOR scan ([[toDFFor]]) and
+    * the delete→DV conversion read ([[IceTable.rewritePositionDeletes]])
+    * so name-mapped tables convert under exactly the resolution rules
+    * scans read with.
     */
   private[table] def readTasksProjected(spark: SparkSession, tasks: Seq[FileScanTask],
-      readSchema: IceSchema, stampPathPos: Boolean): DataFrame = {
+      readSchema: IceSchema, stampPathPos: Boolean, deletes: Option[DeleteFilter] = None,
+      killed: Boolean = false): DataFrame = {
     val schema = scanSchema
     val aliasOf: Map[Int, String] = meta.properties.get(NameMapping.PropertyKey)
       .map(j => NameMapping.aliasById(NameMapping.parse(j))).getOrElse(Map.empty)
@@ -2749,12 +2685,21 @@ final class IceScan(
           .view.mapValues(_.map(_._1).toSeq).toSeq
       }
 
-    def readBranch(fs: Seq[DataFile], schema: StructType,
+    def readBranch(fs: Seq[DataFile], schema: StructType, absentDefaulted: Set[Int],
         renames: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]])
         : DataFrame = {
       var d = IceScan.readFiles(spark, schema, fs)
-      // per-file row positions must be stamped before any union hides the
-      // per-file _metadata column
+      // deletes and per-file row positions apply before any union hides
+      // the per-file _metadata column
+      deletes.foreach { dl =>
+        val live = dl.live { f =>
+          val tpe = IceType.toSpark(f.tpe)
+          if (absentDefaulted.contains(f.id)) lit(f.initialDefault.get).cast(tpe)
+          else if (renames.isDefined) col(aliasName(f)).cast(tpe)
+          else col(f.name)
+        }
+        d = d.where(if (killed) !live else live)
+      }
       if (stampPathPos) d = d
         .withColumn("__path", IceScan.normalizedMetaPath)
         .withColumn("__pos", col("_metadata.row_index"))
@@ -2780,8 +2725,8 @@ final class IceScan(
         NameMapping.aliasedSparkType(f.tpe, aliasFn), nullable = !f.required)))
     val branches = groups.map { case ((hasIds, absentDefaulted), fs) =>
       var d =
-        if (hasIds) readBranch(fs, readSchema.toSpark, None)
-        else readBranch(fs, foreignSchema,
+        if (hasIds) readBranch(fs, readSchema.toSpark, absentDefaulted, None)
+        else readBranch(fs, foreignSchema, absentDefaulted,
           Some(readSchema.fields.map(f =>
             (aliasName(f), f.name, IceType.toSpark(f.tpe)))))
       defaultedFields.filter(f => absentDefaulted.contains(f.id)).foreach { f =>
@@ -2794,11 +2739,11 @@ final class IceScan(
 }
 
 object IceScan {
-  /** Positional-delete sets up to this many bytes are broadcast on the MOR
-    * read path; larger sets use a shuffled anti-join (a driver-side
-    * broadcast of an unbounded delete set is a scale-killer).
+  /** (hits, misses) of the JVM-wide delete-file cache ([[DeleteCache]])
+    * since JVM start: a repeated merge-on-read scan should add hits only,
+    * and misses grow only with delete files no task of this JVM decoded.
     */
-  val DeleteBroadcastMaxBytes: Long = 64L * 1024 * 1024
+  def deleteCacheStats: (Long, Long) = (DeleteCache.hits.get, DeleteCache.misses.get)
 
   /** Manifest count at or above which [[IceScan.planFiles]] ships
     * per-manifest entry pruning to executors instead of evaluating every
@@ -2941,17 +2886,11 @@ object IceScan {
     */
   def readFiles(spark: SparkSession, schema: StructType,
       files: Seq[DataFile]): DataFrame = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val fsByRoot = collection.mutable.HashMap
-      .empty[(String, String), org.apache.hadoop.fs.FileSystem]
+    val qualify = qualifier(spark.sessionState.newHadoopConf())
     val statuses = files.distinctBy(_.filePath).map { f =>
-      val p = new org.apache.hadoop.fs.Path(f.filePath)
-      val u = p.toUri
-      val fs = fsByRoot.getOrElseUpdate((u.getScheme, u.getAuthority),
-        p.getFileSystem(hadoopConf))
       org.apache.spark.sql.execution.datasources.FileStatusWithMetadata(
         new org.apache.hadoop.fs.FileStatus(f.fileSizeInBytes, false, 0, 0L, 0L,
-          fs.makeQualified(p)))
+          qualify(f.filePath)))
     }
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       ManifestFileIndex(statuses), new StructType(),
@@ -2961,14 +2900,25 @@ object IceScan {
     spark.baseRelationToDataFrame(relation)
   }
 
-  /** Fixed read schema of parquet position-delete files (name-resolved:
-    * Spark-written delete files carry no field ids).
+  /** Qualifies manifest paths against their filesystems, resolving each
+    * (scheme, authority) once.
     */
-  private val PositionDeleteSchema = StructType(Seq(
-    StructField("file_path", StringType), StructField("pos", LongType)))
+  private[table] def qualifier(hadoopConf: org.apache.hadoop.conf.Configuration)
+      : String => org.apache.hadoop.fs.Path = {
+    val fsByRoot = collection.mutable.HashMap
+      .empty[(String, String), org.apache.hadoop.fs.FileSystem]
+    path => {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val u = p.toUri
+      fsByRoot.getOrElseUpdate((u.getScheme, u.getAuthority), p.getFileSystem(hadoopConf))
+        .makeQualified(p)
+    }
+  }
 
   /** (file_path, pos) rows of parquet positional-delete files plus
-    * deletion-vector blobs. The parquet files are read in ONE
+    * deletion-vector blobs — for the streaming changelog, which emits
+    * positions as rows (scans and rewrites apply deletes in the scan task,
+    * [[DeleteFilter]]). The parquet files are read in ONE
     * manifest-backed scan ([[readFiles]]) with the fixed delete schema, so
     * no listing or schema-inference job runs. DV bitmaps decode
     * EXECUTOR-side — the driver ships only (puffin, offset, length, ref)
@@ -2980,7 +2930,7 @@ object IceScan {
     import spark.implicits._
     val parts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
     if (parquetDeletes.nonEmpty)
-      parts += readFiles(spark, PositionDeleteSchema, parquetDeletes)
+      parts += readFiles(spark, DeleteFilter.PositionDeleteSchema, parquetDeletes)
     if (dvs.nonEmpty) {
       val refs = dvs.map(f => (f.filePath, f.contentOffset.getOrElse(0L),
         f.contentSizeInBytes.getOrElse(0L), f.referencedDataFile.getOrElse("")))
@@ -2994,47 +2944,6 @@ object IceScan {
         }.toDF("file_path", "pos")
     }
     parts.result().reduce(_.unionByName(_))
-  }
-
-  /** A metadata-sized (path, data sequence number) frame — the broadcast
-    * join side that gives each scanned row its file's sequence, which no
-    * static filter can when one scan covers files of many sequences.
-    */
-  private[table] def sequenceMap(spark: SparkSession, entries: Seq[(String, Long)],
-      pathCol: String, seqCol: String): DataFrame = {
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](entries.size)
-    entries.foreach { case (p, seq) => rows.add(org.apache.spark.sql.Row(p, seq)) }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField(pathCol, StringType, nullable = false),
-      StructField(seqCol, LongType, nullable = false))))
-  }
-
-  /** Rows of the equality-delete files of ONE equality-id set, projected
-    * to the key columns as `__d_<name>` plus `__dseq`, the delete file's
-    * data sequence number. One manifest-backed scan covers every file of
-    * the set; each row's sequence comes from a metadata-sized
-    * (path → sequence) map joined broadcast on the stamped file path.
-    */
-  private[table] def equalityDeleteRows(spark: SparkSession, keyFields: Seq[NestedField],
-      files: Seq[(DataFile, Long)]): DataFrame = {
-    val seqMap = sequenceMap(spark,
-      files.map { case (f, seq) => FileIO.pathOnly(f.filePath) -> seq }, "__dp", "__dseq")
-    val names = keyFields.map(_.name)
-    readFiles(spark, StructType(keyFields.map(SchemaConv.toSparkField)), files.map(_._1))
-      .withColumn("__dpath", normalizedMetaPath)
-      .join(broadcast(seqMap), col("__dpath") === col("__dp"))
-      .select(names.map(n => col(n).as(s"__d_$n")) :+ col("__dseq"): _*)
-  }
-
-  /** All position-delete rows applicable to the given tasks, or None when
-    * the tasks carry no positional deletes (used by the DV rewrite).
-    */
-  def deletePositionsDF(spark: SparkSession,
-      tasks: Seq[FileScanTask]): Option[org.apache.spark.sql.DataFrame] = {
-    val parquetDeletes = tasks.flatMap(_.deletes).distinctBy(_.filePath)
-    val dvs = tasks.flatMap(_.dvDeletes).distinctBy(f => (f.filePath, f.contentOffset))
-    if (parquetDeletes.isEmpty && dvs.isEmpty) None
-    else Some(positionsOf(spark, parquetDeletes, dvs))
   }
 }
 

@@ -48,6 +48,13 @@ object GraftShim {
     }.flatMap(_.getCheckpointFile)
   }
 
+  /** `e` with floating values normalized the way Spark normalizes join
+    * keys: `-0.0` becomes `0.0` and every NaN one NaN, nested levels
+    * included (`normalize` is `private[sql]`).
+    */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** The schema with every level nullable — what Spark's own file reader
     * does to a user-supplied schema (`asNullable` is `private[spark]`).
     */

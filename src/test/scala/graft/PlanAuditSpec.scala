@@ -67,13 +67,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"residual did not reach the scan:\n$p")
   }
 
-  test("equality-delete scan: anti-joins stay broadcast, never a fact shuffle") {
+  test("equality-delete scan: deletes apply in the scan task, no join, no shuffle") {
     val p = plan("ice_eq_delete_scan")
-    // the (path → sequence) map and each delete-key set are metadata/KB
-    // sized; at 100 TB a shuffled anti-join here would dominate the scan
-    assert(!p.contains("SortMergeJoin"), s"delete application shuffled the scan:\n$p")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-      s"no broadcast delete application:\n$p")
+    // the delete-key sets reach the scan's tasks through a broadcast
+    // variable; at 100 TB any join or exchange here would dominate the scan
+    assert(p.contains("apply_deletes"), s"no in-scan delete predicate:\n$p")
+    assert(!p.contains("Join") && !p.contains("Exchange"),
+      s"delete application joined or shuffled the scan:\n$p")
   }
 
   test("row-lineage scan: rid map broadcasts, the fact side never shuffles") {

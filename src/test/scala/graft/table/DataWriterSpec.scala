@@ -221,6 +221,8 @@ class DataWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.append(df)
     val dataPaths = liveFiles(t, 0).map(_.filePath).sorted
     assert(dataPaths.size === 8)
+    // 800 candidate rows at 200 per range: the record bound allows 4 ranges
+    t.updateProperties(set = Map("write.max-records-per-file" -> "200"))
     val (_, jobs) = graft.JobCount.during(spark)(t.deleteWhere(spark, P.equalTo("v", 0L)))
     // the shuffle-map job and the write job; no range-sampling job
     assert(jobs <= 2, s"deleteWhere ran $jobs jobs")
@@ -240,5 +242,24 @@ class DataWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(lo === range.head && hi === range.last,
         s"delete file [$lo, $hi] must cover exactly the range $range")
     }
+  }
+
+  test("a small position delete writes one file in one job") {
+    val df = spark.range(0, 800, 1, 8).select(col("id"), (col("id") % 2).as("v"))
+    val t = IceTable.create(catalog, "w_one_range", SchemaConv.fromSpark(df.schema))
+    t.append(df)
+    val dataPaths = liveFiles(t, 0).map(_.filePath).sorted
+    assert(dataPaths.size === 8)
+    // 800 candidate rows are far below the default per-file record cap:
+    // one range, sorted in one task with no exchange
+    val (_, jobs) = graft.JobCount.during(spark)(t.deleteWhere(spark, P.equalTo("v", 0L)))
+    assert(jobs === 1, s"deleteWhere ran $jobs jobs")
+    t.refresh()
+    assert(t.scan(spark).count() === 400L)
+    val deletes = liveFiles(t, 1)
+    assert(deletes.size === 1)
+    val d = deletes.head
+    assert(new String(d.lowerBounds(DeleteIndex.PathFieldId), "UTF-8") === dataPaths.head)
+    assert(new String(d.upperBounds(DeleteIndex.PathFieldId), "UTF-8") === dataPaths.last)
   }
 }

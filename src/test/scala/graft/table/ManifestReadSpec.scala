@@ -15,8 +15,8 @@ import graft.meta.FileCatalog
   * DataFrame of a wide scan — more data files and more equality-delete
   * files than Spark's parallel-listing threshold (32), plus position
   * deletes and deletion vectors — submits no Spark job (no listing, no
-  * schema inference), and the executed plan holds one file scan for the
-  * data, one for the position deletes and one per equality-id set.
+  * schema inference), and the executed plan holds exactly one file scan,
+  * the data's: every delete applies inside that scan's tasks.
   */
 class ManifestReadSpec extends AnyFunSuite with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
@@ -38,7 +38,7 @@ class ManifestReadSpec extends AnyFunSuite with BeforeAndAfterAll
 
   private def jobsDuring[A](body: => A): (A, Int) = graft.JobCount.during(spark)(body)
 
-  test("a wide MOR scan builds with zero jobs and one file scan per delete kind") {
+  test("a wide MOR scan builds with zero jobs and one file scan") {
     val s = spark
     import s.implicits._
     val catalog = new FileCatalog(Files.createTempDirectory("graft-manifest-read").toString)
@@ -75,8 +75,8 @@ class ManifestReadSpec extends AnyFunSuite with BeforeAndAfterAll
     val fileScans = collect(scan.queryExecution.executedPlan) {
       case f: FileSourceScanExec => f
     }
-    // data + position deletes + the {k} and {txt} equality sets
-    assert(fileScans.size == 4, s"file scans:\n${fileScans.mkString("\n")}")
+    // the data; position, DV and both equality sets apply inside its tasks
+    assert(fileScans.size == 1, s"file scans:\n${fileScans.mkString("\n")}")
   }
 
   test("a manifest-backed read reports the manifest file sizes to the optimizer") {
