@@ -37,6 +37,13 @@ object Bench {
     }
   }
 
+  /** Runs one untimed warm-up step. A failure is reported on stderr, as a
+    * failed query is, and the run goes on.
+    */
+  private def warmUp(step: String)(body: => Any): Unit =
+    timed { body; () }.left.foreach(e =>
+      System.err.println(s"[bench] warm-up $step FAILED: ${e.toString.take(300)}"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -57,24 +64,26 @@ object Bench {
     // plus the shared Iceberg fixture tables (append/MOR/compaction/DV setup
     // is test scaffolding — charging it to whichever ice_* query happens to
     // run first misattributes write-path setup as scan cost)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    try SparkEntry.queries.get("ice_time_travel")
-      .foreach(_.apply(spark, sfDir).count()) catch { case _: Throwable => }
+    warmUp("entry") { SparkEntry.entry(spark).count() }
+    warmUp("ice_time_travel") {
+      SparkEntry.queries.get("ice_time_travel").foreach(_.apply(spark, sfDir).count())
+    }
     // curation-table setup (addFiles + token-moment ANALYZE + first-use IVF
     // codebook fit) is one-time scaffolding a deployment amortizes across
     // every later query — charging it to whichever dedup/sim query runs
     // first would time table builds, not plans
-    try { graft.ops.IceQueries.curation(spark, sfDir); () } catch { case _: Throwable => }
+    warmUp("curation") { graft.ops.IceQueries.curation(spark, sfDir) }
     // the materialized pair-graph artifact is the same class of accumulated
     // state as the ANALYZE blob and the incremental fixture's band-bucket
     // table: pair generation writes it once per snapshot, downstream
     // consumers (clustering) read it. dedup_jaccard_pairs still times the
     // pair-generation plan itself every round
-    try { graft.ops.IceQueries.pairGraph(spark, sfDir); () } catch { case _: Throwable => }
-    try { graft.ops.IceQueries.lshCandidates(spark, sfDir); () } catch { case _: Throwable => }
-    try { graft.ops.IceQueries.incremental(spark, sfDir); () } catch { case _: Throwable => }
-    try SparkEntry.queries.get("sim_ann_ivf")
-      .foreach(_.apply(spark, sfDir).count()) catch { case _: Throwable => }
+    warmUp("pairGraph") { graft.ops.IceQueries.pairGraph(spark, sfDir) }
+    warmUp("lshCandidates") { graft.ops.IceQueries.lshCandidates(spark, sfDir) }
+    warmUp("incremental") { graft.ops.IceQueries.incremental(spark, sfDir) }
+    warmUp("sim_ann_ivf") {
+      SparkEntry.queries.get("sim_ann_ivf").foreach(_.apply(spark, sfDir).count())
+    }
     graft.ops.CacheRegistry.releaseAll()
     // a query that throws is recorded as FAILED (see [[timed]]) — keep
     // timing the rest, and put the failed names on the output line

@@ -469,11 +469,6 @@ banded AS (SELECT doc_id, source, b.band,
     * exactly one uniform label per component: its minimum id.
     */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_DEBUG_CLUSTERS") ||
-      sys.props.contains("graft.debug.clusters")
-    val tStart = System.nanoTime()
-    def mark(label: String): Unit = if (dbg)
-      println(f"[clusters] $label at ${(System.nanoTime() - tStart) / 1e9}%.2f s")
     val spark = pairs.sparkSession
     // Each round's RESULT frame is EAGERLY checkpointed: iterative lineage
     // grows a level per round, and relying on cache substitution to cut it
@@ -510,7 +505,6 @@ banded AS (SELECT doc_id, source, b.band,
           struct(col("doc_a").as("src"), col("doc_b").as("dst")),
           struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    mark("pairs materialized")
     // Cost-based plan choice. The pair graph a dedup pass emits is orders
     // of magnitude smaller than its corpus — pairs are the near-dup fringe,
     // not the data — so it routinely fits a single task even when the
@@ -534,7 +528,6 @@ banded AS (SELECT doc_id, source, b.band,
       // can be reclaimed — it reads from them
       val out = ckpt(solved)
       dropCkptFiles(edges)
-      mark("local union-find solve done")
       return out
     }
     var labels: DataFrame = null
@@ -581,12 +574,10 @@ banded AS (SELECT doc_id, source, b.band,
       // extra round (two shuffles + an eager checkpoint) after the real
       // fixpoint.
       changed = next.where(col("cluster_id") =!= col("prev")).count()
-      mark(s"round=$rounds changed=$changed")
       labels = next.select("doc_id", "cluster_id")
       rounds += 1
     }
     dropCkptFiles(edges)
-    mark("loop done")
     labels
   }
 

@@ -2449,7 +2449,10 @@ final class IceScan(
       snapshot.flatMap(s => meta.schemaById(s.schemaId)).getOrElse(meta.currentSchema)
     else meta.currentSchema
 
-  /** Driver-side file planning with manifest/partition/stats pruning. */
+  /** Driver-side file planning with manifest/partition/stats pruning: every
+    * manifest is read and pruned on [[boundedPar]]'s pool, and no Spark job
+    * is submitted.
+    */
   def planFiles(): Seq[FileScanTask] = snapshot match {
     case None => Nil
     case Some(snap) =>
@@ -2467,48 +2470,44 @@ final class IceScan(
           (Predicates.bind(projected, ps, caseSensitive), ps)
         })
 
-      val dataManifests = manifests.filter(_.content == 0).filter { m =>
-        val (pf, ps) = partFilter(m.specId)
-        Evaluators.manifestMayMatch(pf, ps, m)
-      }
-      val minDataSeq = dataManifests.map(_.minSequenceNumber).minOption.getOrElse(0L)
+      // each manifest paired with its spec's filter here, on the calling
+      // thread: the pool below only reads them
+      def mayMatch(content: Int) = manifests.filter(_.content == content)
+        .map(m => (m, partFilter(m.specId)))
+        .filter { case (m, (pf, ps)) => Evaluators.manifestMayMatch(pf, ps, m) }
+      val dataManifests = mayMatch(0)
+      val minDataSeq = dataManifests.map(_._1.minSequenceNumber).minOption.getOrElse(0L)
       // delete manifests/entries prune under the SAME projected partition
       // filter as data: a delete file scoped to a partition the filter
       // excludes can only kill rows in data files this plan already pruned
       // (global delete manifests carry no summaries → always pass)
-      val deleteManifests = manifests.filter(m =>
-        m.content == 1 && m.sequenceNumber >= minDataSeq).filter { m =>
-        val (pf, ps) = partFilter(m.specId)
-        Evaluators.manifestMayMatch(pf, ps, m)
-      }
+      val deleteManifests = mayMatch(1).filter(_._1.sequenceNumber >= minDataSeq)
 
-      // per-manifest entry pruning: driver-parallel (boundedPar) below the
-      // distribution threshold; shipped to executors above it, where the
-      // driver would otherwise stall reading+evaluating millions of entries
-      // single-process (r20 verdict item 1 — 1.7 s at 100k files is fine,
-      // 10M-file metadata is not). Both paths run the same static kernels.
-      val dataWork = dataManifests.map { m =>
-        val (pf, ps) = partFilter(m.specId); (m, pf, ps)
-      }
-      val deleteWork = deleteManifests.map { m =>
-        val (pf, ps) = partFilter(m.specId)
-        (m, pf, ps, meta.specById(m.specId).exists(_.fields.nonEmpty))
-      }
-      val (dataEntries, deleteEntries) =
-        IceScan.sessionForPlanning(maxConcurrency,
-            dataWork.size + deleteWork.size) match {
-          case Some(spark) =>
-            IceScan.pruneOnExecutors(spark, dataWork, deleteWork,
-              meta.specs, schema, bound)
-          case None =>
-            (boundedPar(dataWork) { case (m, pf, ps) =>
-              IceScan.pruneDataManifest(m, pf, ps, meta.specs, schema, bound)
-            },
-             boundedPar(deleteWork) { case (m, pf, ps, partitioned) =>
-               IceScan.pruneDeleteManifest(m, pf, ps, partitioned,
-                 meta.specs, schema)
-             })
+      // per-manifest entry pruning on the bounded planner pool
+      val specs = meta.specs
+      val dataEntries = boundedPar(dataManifests) { case (m, (pf, ps)) =>
+        val (_, entries) = ManifestIO.readManifest(m.path, specs, schema)
+        // v3 lineage inheritance runs BEFORE pruning: a pruned entry still
+        // consumes its record-count slice of the manifest's row-id range
+        IceTable.lineageOf(m, entries).filter { case (e, _) =>
+          e.status != ManifestEntryStatus.Deleted &&
+          Evaluators.partitionMayMatch(pf, ps, e.dataFile.partition) &&
+          Evaluators.fileMayMatch(bound, e.dataFile)
+        }.map { case (e, rid) =>
+          (e.copy(sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber))),
+            m.specId, rid)
         }
+      }
+      val deleteEntries = boundedPar(deleteManifests) { case (m, (pf, ps)) =>
+        val partitioned = specs.find(_.specId == m.specId).exists(_.fields.nonEmpty)
+        val (_, entries) = ManifestIO.readManifest(m.path, specs, schema)
+        entries.filter(e => e.status != ManifestEntryStatus.Deleted &&
+          (!partitioned || e.dataFile.partition.isEmpty ||
+            Evaluators.partitionMayMatch(pf, ps, e.dataFile.partition)))
+          .map(e => DeleteIndex.Keyed(
+            e.copy(sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber))),
+            m.specId, partitioned))
+      }
       // indexed matching (hash by path, binary search by sequence number)
       // instead of the naive dataFiles×deleteFiles nested loop — planning
       // 10⁵ data × 10⁴ delete files must not stall the driver (reference
@@ -2744,105 +2743,6 @@ object IceScan {
     * and misses grow only with delete files no task of this JVM decoded.
     */
   def deleteCacheStats: (Long, Long) = (DeleteCache.hits.get, DeleteCache.misses.get)
-
-  /** Manifest count at or above which [[IceScan.planFiles]] ships
-    * per-manifest entry pruning to executors instead of evaluating every
-    * entry on the driver. Planning 100k files across a few manifests is a
-    * 1-2 s driver task (PlanningStress); at 10M-file metadata the entry
-    * evaluation + lineage inheritance become a single-process driver stall,
-    * while per-manifest pruning is embarrassingly parallel and
-    * survivor-sized on the collect side. The default keeps every
-    * bench/oracle table (tens of manifests at most) on the driver path —
-    * byte-identical plans — and engages only at metadata scales where a
-    * Spark job's submission overhead (~10 ms) is noise. Override via
-    * `-Dgraft.planning.distribute.threshold=N` (probes set it low to force
-    * the executor path on synthetic metadata).
-    */
-  private[table] def distributeThreshold: Int =
-    sys.props.get("graft.planning.distribute.threshold")
-      .flatMap(_.toIntOption).getOrElse(64)
-
-  /** The session used for executor-side manifest pruning, or None for the
-    * driver path: distribution needs an active session, a manifest count
-    * clearing [[distributeThreshold]], and no caller-bounded local
-    * concurrency (an explicit maxConcurrency is a request to plan on a
-    * dedicated local pool — honoring it keeps the WithMaxConcurrency
-    * contract exact).
-    */
-  private[table] def sessionForPlanning(maxConcurrency: Option[Int],
-      nManifests: Int): Option[SparkSession] =
-    if (maxConcurrency.isEmpty && nManifests >= distributeThreshold)
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    else None
-
-  /** Executor-safe data-manifest pruning kernel: read, inherit lineage,
-    * evaluate partition + file stats — exactly the per-manifest body the
-    * driver path runs. Static (captures nothing scan-local) so the
-    * distributed closure stays serializable.
-    */
-  private[table] def pruneDataManifest(m: ManifestFile, pf: IcePredicate,
-      ps: IceSchema, specs: Seq[PartitionSpec], schema: IceSchema,
-      bound: IcePredicate): Seq[(ManifestEntry, Int, Option[Long])] = {
-    val (_, entries) = ManifestIO.readManifest(m.path, specs, schema)
-    // v3 lineage inheritance runs BEFORE pruning: a pruned entry still
-    // consumes its record-count slice of the manifest's row-id range
-    IceTable.lineageOf(m, entries).filter { case (e, _) =>
-      e.status != ManifestEntryStatus.Deleted &&
-      Evaluators.partitionMayMatch(pf, ps, e.dataFile.partition) &&
-      Evaluators.fileMayMatch(bound, e.dataFile)
-    }.map { case (e, rid) =>
-      (e.copy(sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber))),
-        m.specId, rid)
-    }
-  }
-
-  /** Executor-safe delete-manifest pruning kernel (see
-    * [[pruneDataManifest]]).
-    */
-  private[table] def pruneDeleteManifest(m: ManifestFile, pf: IcePredicate,
-      ps: IceSchema, partitioned: Boolean, specs: Seq[PartitionSpec],
-      schema: IceSchema): Seq[DeleteIndex.Keyed] = {
-    val (_, entries) = ManifestIO.readManifest(m.path, specs, schema)
-    entries.filter(e => e.status != ManifestEntryStatus.Deleted &&
-      (!partitioned || e.dataFile.partition.isEmpty ||
-        Evaluators.partitionMayMatch(pf, ps, e.dataFile.partition)))
-      .map(e => DeleteIndex.Keyed(
-        e.copy(sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber))),
-        m.specId, partitioned))
-  }
-
-  /** Distributed manifest-entry pruning: one Spark job over (manifest,
-    * bound partition filter) descriptors, each task reading its manifests
-    * from shared storage and returning only SURVIVING entries — the driver
-    * ships a few hundred bytes per manifest and collects survivor-sized
-    * results instead of touching every entry. Result order equals the
-    * driver path's (parallelize + collect preserve input order), so
-    * downstream task lists are identical.
-    */
-  private[table] def pruneOnExecutors(spark: SparkSession,
-      dataWork: Seq[(ManifestFile, IcePredicate, IceSchema)],
-      deleteWork: Seq[(ManifestFile, IcePredicate, IceSchema, Boolean)],
-      specs: Seq[PartitionSpec], schema: IceSchema, bound: IcePredicate)
-      : (Seq[(ManifestEntry, Int, Option[Long])], Seq[DeleteIndex.Keyed]) = {
-    val sc = spark.sparkContext
-    val work: Seq[Either[(ManifestFile, IcePredicate, IceSchema),
-                         (ManifestFile, IcePredicate, IceSchema, Boolean)]] =
-      dataWork.map(Left(_)) ++ deleteWork.map(Right(_))
-    val slices = math.max(1, math.min(work.size, sc.defaultParallelism * 2))
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(
-      s"iceplan: prune ${dataWork.size} data + ${deleteWork.size} delete manifests")
-    try {
-      val pruned = sc.parallelize(work, slices).map {
-        case Left((m, pf, ps)) =>
-          Left(pruneDataManifest(m, pf, ps, specs, schema, bound))
-        case Right((m, pf, ps, partitioned)) =>
-          Right(pruneDeleteManifest(m, pf, ps, partitioned, specs, schema))
-      }.collect()
-      (pruned.iterator.collect { case Left(xs) => xs }.flatten.toSeq,
-        pruned.iterator.collect { case Right(xs) => xs }.flatten.toSeq)
-    } finally sc.setJobDescription(prevDesc)
-  }
 
   /** `_metadata.file_path` is a URI; normalize to a bare absolute path so
     * it compares equal to the paths recorded in manifests (which
