@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Times one action, or returns the error if it threw. A failure must
     * never surface as a timing (r9: six broken queries were reported as
@@ -41,10 +41,46 @@ object Bench {
     * failed query is, and the run goes on.
     */
   private def warmUp(step: String)(body: => Any): Unit =
-    timed { body; () }.left.foreach(e =>
+    timed { graft.ops.QueryScope.run(body); () }.left.foreach(e =>
       System.err.println(s"[bench] warm-up $step FAILED: ${e.toString.take(300)}"))
 
+  /** Prints each query's formatted plan before and after one execution.
+    * The run goes through the query's own QueryExecution (`toRdd`), so the
+    * second print is the final adaptive plan.
+    */
+  private def explainAll(spark: SparkSession, sfDir: String,
+      selected: Seq[(String, (SparkSession, String) => DataFrame)]): Unit =
+    selected.foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      timed {
+        graft.ops.QueryScope.run {
+          val qe = fn(spark, sfDir).queryExecution
+          def plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+          println(s"---- formatted plan, before execution ----\n$plan")
+          val rows = qe.toRdd.count()
+          println(s"---- formatted plan, after one execution (rows=$rows) ----\n$plan")
+        }
+      }.left.foreach(e =>
+        System.err.println(s"[bench] $name FAILED: ${e.toString.take(300)}"))
+    }
+
+  /** usage: `runMain graft.Bench [--explain] [query ...]`
+    *
+    * With no query names, times every registered query and writes
+    * `BENCH_LOCAL.json`. Names restrict the run to those queries, and such
+    * a run leaves `BENCH_LOCAL.json` alone; an unknown name exits nonzero.
+    * `--explain` prints plans (see [[explainAll]]) instead of timing.
+    */
   def main(args: Array[String]): Unit = {
+    val explain = args.contains("--explain")
+    val names = args.filterNot(_ == "--explain").distinct.toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown query: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => names.isEmpty || names.contains(name) }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.prepare(SparkSession.builder()
@@ -55,8 +91,8 @@ object Bench {
       // ~90 queries in one JVM: shuffle/broadcast cleanup is GC-driven, and
       // the default 30-min periodic GC lets dead blocks pile onto the
       // BlockManager for the whole run (r9: unchanged queries measured
-      // 6-14x slower ONLY inside the shared bench session — TimeQuery
-      // isolation showed every one at its r8 speed)
+      // 6-14x slower ONLY inside the shared bench session — isolated
+      // single-query runs showed every one at its r8 speed)
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
@@ -84,7 +120,7 @@ object Bench {
     warmUp("sim_ann_ivf") {
       SparkEntry.queries.get("sim_ann_ivf").foreach(_.apply(spark, sfDir).count())
     }
-    graft.ops.CacheRegistry.releaseAll()
+    if (explain) { explainAll(spark, sfDir, selected); spark.stop(); return }
     // a query that throws is recorded as FAILED (see [[timed]]) — keep
     // timing the rest, and put the failed names on the output line
     val failed = scala.collection.mutable.LinkedHashSet[String]()
@@ -98,11 +134,14 @@ object Bench {
     // flush warm-up/fixture task events so the first query's counter
     // starts clean (the listener bus is async)
     graft.tools.ProbeMetrics.drainListenerBus(spark)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       def once(): Double = {
         val counter = new graft.tools.ProbeMetrics.ShuffleFullCounter
         spark.sparkContext.addSparkListener(counter)
-        val dt = timed { fn(spark, sfDir).count(); () } match {
+        // builder-internal caches are per-query scratch: the scope releases
+        // them after the timed action, so ~160 queries never accumulate
+        // MEMORY_AND_DISK blocks in one session
+        val dt = graft.ops.QueryScope.run(timed { fn(spark, sfDir).count(); () }) match {
           case Right(sec) => sec
           case Left(e) =>
             failed += name
@@ -119,9 +158,6 @@ object Bench {
           shufBytes(name) = math.min(
             shufBytes.getOrElse(name, Long.MaxValue), counter.bytes.get)
         }
-        // builder-internal caches are per-query scratch; holding them across
-        // ~60 queries accumulates MEMORY_AND_DISK blocks in one session
-        graft.ops.CacheRegistry.releaseAll()
         // untimed between-query reclamation (dt is already captured): drop
         // any stray persisted RDDs and run one full GC so the ContextCleaner
         // actually frees shuffle files and broadcasts BEFORE the next query
@@ -308,7 +344,8 @@ object Bench {
     val shufJson =
       s""","shuffle_records":${longMap(shufRecs)}""" +
         s""","shuffle_bytes":${longMap(shufBytes)}"""
-    try java.nio.file.Files.writeString(
+    // a restricted run is not a board: it leaves the board record alone
+    if (names.isEmpty) try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
       line(f2, timings, valueLast = false).dropRight(1) +
         s""","policy":"min2_over_1s","value_first":${f2(firstRunTotal)}""" +

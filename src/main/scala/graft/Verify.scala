@@ -25,13 +25,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(name.contains) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.ops.QueryScope.run(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         failed ::= name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally graft.ops.CacheRegistry.releaseAll()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

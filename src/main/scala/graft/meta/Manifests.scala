@@ -488,7 +488,10 @@ object ManifestIO {
     *
     * Bounding is entry-weighted, not file-counted: one compacted table can
     * hold a 10⁵-entry manifest next to hundreds of tiny ones, so the LRU
-    * evicts by total cached entry count (≈ tens of MB at the cap).
+    * evicts by total cached entry count. An entry costs about 550 B of
+    * heap, so the 1,000,000-entry cap holds about 550 MB: a re-read of a
+    * 1,024-manifest × 1,024-entry snapshot left 575 MB retained after GC
+    * for ~1.05M cached entries (the 2026-10 ROADMAP re-anchor, table (a)).
     */
   private object ManifestCache {
     private final case class ManifestVal(

@@ -156,7 +156,7 @@ object Analytics {
     val ev = QueryDef.spread(t(s, dir, "events"))
       .select(col("user_id"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast(LongType).as("k"))
-    val edges = CacheRegistry.persist(
+    val edges = QueryScope.persist(
       ev.withColumn("nk", lead("k", 1).over(byUser))
         .where(col("nk").isNotNull && col("nk") =!= col("k"))
         .groupBy(col("k").as("src"), col("nk").as("dst"))
@@ -164,7 +164,7 @@ object Analytics {
     val eNorm = edges.join(
         edges.groupBy("src").agg(sum("w").as("ow")), "src")
       .select(col("src"), col("dst"), col("w"), col("ow"))
-    val nodes = CacheRegistry.persist(ev.select(col("k").as("node")).distinct())
+    val nodes = QueryScope.persist(ev.select(col("k").as("node")).distinct())
     val n = nodes.agg(count(lit(1)).cast(LongType).as("n_nodes"))
     val base = nodes.crossJoin(n)
     var r: DataFrame = base.select(col("node"),
@@ -236,7 +236,7 @@ object Analytics {
     * driver only ever sees k×64 partial means per iteration.
     */
   private[ops] def kmeansCorpus(s: SparkSession, dir: String): DataFrame = {
-    val emb = CacheRegistry.persist(
+    val emb = QueryScope.persist(
       t(s, dir, "embeddings").select(col("vec_id"),
         transform(col("embedding"),
           x => round(x.cast(DoubleType) * lit(KmScale)).cast(LongType)).as("m")))
@@ -299,7 +299,7 @@ object Analytics {
     // persisted intermediate (strictly activity-sized), and dau/bounds
     // read it too, so `activity` itself is computed exactly once
     val byUser = Window.partitionBy("user_id").orderBy("day")
-    val lagged = CacheRegistry.persist(activity
+    val lagged = QueryScope.persist(activity
       .withColumn("prev_day", lag(col("day"), 1).over(byUser))
       .withColumn("next_day", lead(col("day"), 1).over(byUser)))
     val bounds = lagged.agg(min("day").as("d0"), max("day").as("d1"))
@@ -366,7 +366,7 @@ object Analytics {
       events: graft.table.IceTable, index: graft.table.IceTable,
       watermark: Long): DataFrame = {
     import graft.core.{Predicates => P}
-    val newUD = CacheRegistry.persist(
+    val newUD = QueryScope.persist(
       graft.streaming.Ingest.changesSince(s, events, watermark)
         .select(col("user_id"), expr(s"unix_micros(ts) div $DayUs").as("day"))
         .distinct())
@@ -446,7 +446,7 @@ object Analytics {
     val ev = QueryDef.spread(t(s, dir, "events"))
       .select(col("user_id"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast(LongType).as("k"))
-    val e = CacheRegistry.persist(
+    val e = QueryScope.persist(
       ev.withColumn("nk", lead("k", 1).over(byUser))
         .where(col("nk").isNotNull && col("nk") =!= col("k"))
         .select(least(col("k"), col("nk")).as("a"),
@@ -576,7 +576,7 @@ object Analytics {
     // the tokenize — the widening exchange lost on the board (+0.38 s)
     val words = t(s, dir, "documents").select(col("doc_id"),
       Tok.words(col("text")).as("ws"))
-    val uni = CacheRegistry.persist(words
+    val uni = QueryScope.persist(words
       .select(explode(col("ws")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c")))
     val n = uni.agg(sum("c").cast(LongType).as("n_tokens"))

@@ -229,13 +229,12 @@ mh_cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     AND b.doc_id - a.doc_id <= $windowDocs),
 $minhashVerifyCte"""
 
-  /** The signature pass + salted band self-join shared by
-    * [[minhashCandidates]] and [[graft.tools.DedupScaleProbe]] (the probe
-    * measures THIS stage — the one the hot-bucket gate bounds — without
-    * the verify join's signature payload): persisted signatures, salted
-    * bands ([[saltBands]], computed once for both join sides), distinct
-    * (doc_a, doc_b) candidates. Returns (sigs, pairs); callers release via
-    * [[CacheRegistry]].
+  /** The signature pass + salted band self-join of [[minhashCandidates]]:
+    * the stage the hot-bucket gate bounds (BENCH_NOTES.md "MinHash-LSH
+    * hot-bucket gate probe" measured it without the verify join's signature
+    * payload): persisted signatures, salted bands ([[saltBands]], computed
+    * once for both join sides), distinct (doc_a, doc_b) candidates. Returns
+    * (sigs, pairs); the caller's [[QueryScope]] releases the persists.
     */
   private[graft] def minhashCandidateStage(spark: SparkSession, dir: String,
       bucketCap: Int): (DataFrame, DataFrame) = {
@@ -244,11 +243,11 @@ $minhashVerifyCte"""
     val docs = QueryDef.spread(t(spark, dir, "documents"))
     val sigs = docs.select(col("doc_id"), col("source"),
         minhashSig(wordSet(col("text"))).as("sig"))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     // hot-bucket sub-bucketing (BandBucketCap): the salted frame is
     // persisted so the count-aggregation and salt fold run ONCE, not once
     // per self-join side
-    val bands = CacheRegistry.persist(saltBands(bandsOf(sigs), bucketCap))
+    val bands = QueryScope.persist(saltBands(bandsOf(sigs), bucketCap))
     val pairs = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") &&
         col("a.band_hash") === col("b.band_hash") &&
@@ -300,7 +299,7 @@ $minhashVerifyCte"""
     // self-join would otherwise run the signature UDF once per side
     val sh = docsWithSource.select(col("doc_id"), col("source"),
         simhash(wordSet(col("text"))).as("simhash"))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     // band value = the unsigned 16-bit slice. `% 65536` here would be WRONG
     // for band 0 of a negative simhash (Java % keeps the sign, so a negative
     // and a positive hash with identical low bits get different band values
@@ -416,7 +415,7 @@ banded AS (SELECT doc_id, source, b.band,
     */
   private[ops] def tokensPersisted(docsWithTokens: DataFrame): DataFrame =
     docsWithTokens.withColumn("sz", size(col("ws")))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
 
   /** Row-capped unbiased estimate of Σ C(df,2): a pair of documents
     * survives an independent p-sample with probability p², so
@@ -702,7 +701,8 @@ banded AS (SELECT doc_id, source, b.band,
     * t ≥ 0.75 → prefix) was tuned when the count-join's tokenize/join
     * stages ran on a single core (single-split input, see
     * [[graft.ops.QueryDef.spread]]); with that fixed,
-    * [[ContainmentPlanProbe]] measured the count-join STRICTLY faster
+    * a containment plan probe (OPTIMIZATION_r21.md "Containment cost
+    * chooser") measured the count-join STRICTLY faster
     * across the whole window the early flip governed — min-of-2 walls on
     * doc_id-shifted replicated corpora at t=0.9, identical output rows:
     * est 1.1e7 → 3.37 s vs 5.70 s, est 1.0e8 → 3.08 s vs 11.50 s, and even
@@ -912,7 +912,7 @@ banded AS (SELECT doc_id, source, b.band,
   def sharedSpanStats(spark: SparkSession, dir: String, n: Int): DataFrame = {
     // spread before the span shingle transform — single-split input rationale
     val exploded = spanRows(QueryDef.spread(t(spark, dir, "documents")), n)
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     val spanDf = exploded.groupBy("span").agg(count(lit(1)).as("df"))
     spanStatsRollup(exploded.join(spanDf, "span"))
   }
@@ -1110,7 +1110,7 @@ banded AS (SELECT doc_id, source, b.band,
     val nChunks = floor((size(col("w")) + lit(chunkWords - 1)) /
       lit(chunkWords.toDouble)).cast(IntegerType)
     // tokenized once, read by BOTH the chunk-hash pass and the rebuild join
-    val docsW = CacheRegistry.persist(documents.select(col("doc_id"), w.as("w")))
+    val docsW = QueryScope.persist(documents.select(col("doc_id"), w.as("w")))
     val chunks = docsW
       .select(col("doc_id"), posexplode(transform(sequence(lit(0), nChunks - 1),
         i => md5(concat_ws(" ",

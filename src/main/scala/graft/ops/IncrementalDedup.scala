@@ -107,7 +107,7 @@ object IncrementalDedup {
   private def incrementalSharedTokens(spark: SparkSession, docsTable: IceTable,
       indexTable: IceTable, sinceSnapshotId: Long): DataFrame = {
     val newDocs = Ingest.changesSince(spark, docsTable, sinceSnapshotId)
-    val newTokens = CacheRegistry.persist(
+    val newTokens = QueryScope.persist(
       tokenIndexOf(newDocs).withColumn("is_new", lit(true)))
     // anti-join the increment's ids out of the stored index: if a pipeline
     // retry runs with a stale watermark AFTER extendIndex already appended
@@ -174,7 +174,7 @@ object IncrementalDedup {
   def incrementalSpanStats(spark: SparkSession, docsTable: IceTable,
       spanTable: IceTable, sinceSnapshotId: Long, n: Int = 5): DataFrame = {
     val newDocs = Ingest.changesSince(spark, docsTable, sinceSnapshotId)
-    val newSpans = CacheRegistry.persist(Dedup.spanRows(newDocs, n))
+    val newSpans = QueryScope.persist(Dedup.spanRows(newDocs, n))
     val newIds = newSpans.select(col("doc_id")).distinct()
     val deltaSpans = newSpans.select(col("span")).distinct()
     val allSpans = spanTable.scan(spark)
@@ -226,10 +226,10 @@ object IncrementalDedup {
       sigTable: IceTable, sinceSnapshotId: Long,
       estThreshold: Double, bucketCap: Int = Dedup.BandBucketCap): DataFrame = {
     val newDocs = Ingest.changesSince(spark, docsTable, sinceSnapshotId)
-    val newSigs = CacheRegistry.persist(
+    val newSigs = QueryScope.persist(
       signaturesOf(newDocs).withColumn("is_new", lit(true)))
     val newIds = newSigs.select(col("doc_id")).distinct()
-    val allSigs = CacheRegistry.persist(
+    val allSigs = QueryScope.persist(
       sigTable.scan(spark)
         .select(col("doc_id"), col("source"), col("sig"))
         .join(broadcast(newIds), Seq("doc_id"), "left_anti")
@@ -268,10 +268,10 @@ object IncrementalDedup {
     // corpus-band semi-join a second time when the salted output
     // materializes (VERDICT r15 What's-wrong #3) — the probe now warms the
     // cache the pairing join reads
-    val touched = CacheRegistry.persist(allBands.join(broadcast(newKeys),
+    val touched = QueryScope.persist(allBands.join(broadcast(newKeys),
       Seq("band", "band_hash", "source"), "left_semi"))
     // still persisted itself: the pairing below is a SELF-join (two reads)
-    val salted = CacheRegistry.persist(Dedup.saltBands(touched, bucketCap))
+    val salted = QueryScope.persist(Dedup.saltBands(touched, bucketCap))
     salted.where(col("is_new")).as("a").join(salted.as("b"),
         col("a.band") === col("b.band") &&
         col("a.band_hash") === col("b.band_hash") &&
@@ -308,9 +308,9 @@ object IncrementalDedup {
       sinceSnapshotId: Long, estThreshold: Double,
       bucketCap: Int = Dedup.BandBucketCap): DataFrame = {
     val newDocs = Ingest.changesSince(spark, docsTable, sinceSnapshotId)
-    val newSigs = CacheRegistry.persist(signaturesOf(newDocs))
+    val newSigs = QueryScope.persist(signaturesOf(newDocs))
     val newIds = newSigs.select(col("doc_id")).distinct()
-    val newBands = CacheRegistry.persist(
+    val newBands = QueryScope.persist(
       Dedup.bandsOf(newSigs).withColumn("is_new", lit(true)))
     val allBands = bandTable.scan(spark)
       .select(col("doc_id"), col("source"), col("band"), col("band_hash"))
@@ -318,7 +318,7 @@ object IncrementalDedup {
       .withColumn("is_new", lit(false))
       .unionByName(newBands)
     val cand = saltedIncrementJoin(allBands, bucketCap)
-    val allSigs = CacheRegistry.persist(
+    val allSigs = QueryScope.persist(
       sigTable.scan(spark)
         .select(col("doc_id"), col("source"), col("sig"))
         .join(broadcast(newIds), Seq("doc_id"), "left_anti")
@@ -361,7 +361,7 @@ object IncrementalDedup {
       embTable: IceTable, bucketTable: IceTable,
       sinceSnapshotId: Long): DataFrame = {
     val newEmb = Ingest.changesSince(spark, embTable, sinceSnapshotId)
-    val newBuckets = CacheRegistry.persist(
+    val newBuckets = QueryScope.persist(
       Similarity.bucketRows(newEmb).withColumn("is_new", lit(true)))
     val newIds = newBuckets.select(col("vec_id")).distinct()
     val allBuckets = bucketTable.scan(spark)
@@ -376,7 +376,7 @@ object IncrementalDedup {
     // the Δ join inherits the same hot-bucket bound. Only the tiny counts
     // frame is cached; each side salts via a broadcast join with it
     val saltKeys = Seq("tbl", "bucket", "label")
-    val counts = CacheRegistry.persist(
+    val counts = QueryScope.persist(
       Similarity.bucketCounts(allBuckets, saltKeys))
     val hot = Similarity.hasHotBucket(counts, Similarity.VecBucketCap)
     val aSide = Similarity.saltWith(newBuckets, counts,
@@ -428,7 +428,7 @@ object IncrementalDedup {
   def incrementalKnn(spark: SparkSession, embTable: IceTable,
       bucketTable: IceTable, sinceSnapshotId: Long, k: Int): DataFrame = {
     val newEmb = Ingest.changesSince(spark, embTable, sinceSnapshotId)
-    val newBuckets = CacheRegistry.persist(
+    val newBuckets = QueryScope.persist(
       Similarity.bucketRows(newEmb).withColumn("is_new", lit(true)))
     val newIds = newBuckets.select(col("vec_id")).distinct()
     val allBuckets = bucketTable.scan(spark)
@@ -440,7 +440,7 @@ object IncrementalDedup {
     // sets) equal [[Similarity.knnGraph]]'s — the spec's bit-identity
     // against the batch graph restricted to increment queries depends on
     // it. Counts-only caching, as in [[incrementalEmbeddingCandidates]]
-    val counts = CacheRegistry.persist(Similarity.bucketCounts(allBuckets))
+    val counts = QueryScope.persist(Similarity.bucketCounts(allBuckets))
     val hot = Similarity.hasHotBucket(counts, Similarity.VecBucketCap)
     val aSide = Similarity.saltWith(newBuckets, counts,
       Similarity.VecBucketCap, Seq("tbl", "bucket"), hot)
@@ -491,7 +491,7 @@ object IncrementalDedup {
       chunkTable: IceTable, sinceSnapshotId: Long,
       chunkWords: Int): DataFrame = {
     val newDocs = Ingest.changesSince(spark, docsTable, sinceSnapshotId)
-    val newChunks = CacheRegistry.persist(Dedup.chunkRows(newDocs, chunkWords))
+    val newChunks = QueryScope.persist(Dedup.chunkRows(newDocs, chunkWords))
     val newIds = newChunks.select(col("doc_id")).distinct()
     val deltaH = newChunks.select(col("h")).distinct()
     val stored = chunkTable.scan(spark)
@@ -528,9 +528,9 @@ object IncrementalDedup {
       chunkTable: IceTable, sinceSnapshotId: Long,
       chunkWords: Int): DataFrame = {
     import org.apache.spark.sql.types.{BinaryType, LongType}
-    val newDocs = CacheRegistry.persist(
+    val newDocs = QueryScope.persist(
       Ingest.changesSince(spark, docsTable, sinceSnapshotId))
-    val newChunks = CacheRegistry.persist(Dedup.chunkRows(newDocs, chunkWords))
+    val newChunks = QueryScope.persist(Dedup.chunkRows(newDocs, chunkWords))
     val newIds = newChunks.select(col("doc_id")).distinct()
     val deltaH = newChunks.select(col("h")).distinct()
     val stored = chunkTable.scan(spark)
@@ -601,7 +601,7 @@ object IncrementalDedup {
       sinceSnapshotId: Long, threshold: Double): DataFrame = {
     import org.apache.spark.sql.types.{BinaryType, LongType}
     val newDocs = Ingest.changesSince(spark, docsTable, sinceSnapshotId)
-    val newHashed = CacheRegistry.persist(newDocs.select(col("doc_id"),
+    val newHashed = QueryScope.persist(newDocs.select(col("doc_id"),
       md5(col("text").cast(BinaryType)).as("h")))
     val newIds = newHashed.select(col("doc_id")).distinct()
     val deltaH = newHashed.select(col("h")).distinct()

@@ -142,7 +142,7 @@ c AS (
     // the cache the codes evaluate twice per row
     val emb = withInt8Codes(t(spark, dir, "embeddings"))
       .withColumn("buckets", lshBuckets(col("codes")))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     val banded = emb.select(col("vec_id"), col("embedding"),
       posexplode(col("buckets")).as(Seq("tbl", "bucket")))
     val queries = banded.where(col("vec_id") < nQueries)
@@ -239,11 +239,11 @@ c AS (
     */
   def knnGraph(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val emb = withInt8Codes(t(spark, dir, "embeddings"))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     // persist the BANDED frame (not just emb): both sides of the self-join
     // read it, and unpersisted each side would re-run the 4-table x 16-plane
     // x 64-dim integer projections per corpus row
-    val banded = CacheRegistry.persist(saltBuckets(
+    val banded = QueryScope.persist(saltBuckets(
       emb.select(col("vec_id"),
         posexplode(lshBuckets(col("codes"))).as(Seq("tbl", "bucket"))),
       VecBucketCap))
@@ -273,12 +273,12 @@ c AS (
     */
   def embeddingNearDupLSH(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val emb = withInt8Codes(t(spark, dir, "embeddings"))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     // candidate generation is ID-only: a pair surfaces once per shared
     // bucket, so dedup BEFORE attaching the 64-float vectors — the distinct
     // then shuffles slim (id, id, label) rows, not array payloads
     // persisted for the same both-sides-of-the-self-join reason as knnGraph
-    val banded = CacheRegistry.persist(saltBuckets(emb
+    val banded = QueryScope.persist(saltBuckets(emb
       .select(col("vec_id"), col("label"),
         posexplode(lshBuckets(col("codes"))).as(Seq("tbl", "bucket"))),
       VecBucketCap, Seq("tbl", "bucket", "label")))
@@ -402,7 +402,7 @@ c AS (
     // whole-stage codegen (PlanAuditSpec asserts no UDF node in this plan)
     import graft.functions.IvfExprs.{ivfAssign, ivfProbe}
     val assigned = emb.withColumn("cell", ivfAssign(col("embedding"), centers))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     val queries = assigned.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         explode(ivfProbe(col("embedding"), centers, nProbe)).as("cell"))
@@ -467,7 +467,7 @@ c AS (
       threshold: Double, blockCap: Int = 4096): DataFrame = {
     import graft.functions.IvfExprs.ivfAssign
     val emb = emb0.withColumn("cell", ivfAssign(col("embedding"), centers))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     val pairs = gridPairs(gridKeyed(emb, blockCap, "cell"), "cell", threshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val clusters = Dedup.duplicateClusters(pairs)
@@ -525,7 +525,7 @@ c AS (
       .select(col("vec_id"),
         transform(col("codes"), _.cast(DoubleType)).as("codesd"),
         (array_max(transform(col("codes"), x => abs(x))) === 0L).as("qzero"))
-      .transform(CacheRegistry.persist(_))
+      .transform(QueryScope.persist(_))
     val queries = coded.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("codesd").as("qcodes"),
         col("qzero").as("q_zero"))

@@ -605,7 +605,8 @@ object StreamingOps {
       bucketCap: Int = StreamBucketCap): (DataFrame, Seq[Long]) = {
     // r21 A/B note: an 8-partition state width was trialled (the bucket
     // state fn does real per-group compute that serializes on two cores,
-    // and a quiet-JVM StreamCommitProbe showed staging 3.56 → 3.17 s) but
+    // and a quiet-JVM commit probe showed staging 3.56 → 3.17 s;
+    // OPTIMIZATION_r21.md "Streaming LSH: probed, trialled, REVERTED") but
     // REVERTED: in bench-board context two consecutive boards measured the
     // 8-store variant consistently slower than this 2-store shape (state
     // commit + checkpoint overhead per trigger outweighs the parallel
@@ -620,9 +621,9 @@ object StreamingOps {
       s2.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(srcDir)
-        // NOT repartitioned before the signature select: StreamCommitProbe
-        // A/B'd a per-batch repartition(defaultParallelism) here and it did
-        // NOT pay (staging 3.87 s vs 3.56 s baseline) — the extra raw-text
+        // NOT repartitioned before the signature select: a commit probe
+        // (OPTIMIZATION_r21.md "Streaming LSH") A/B'd a per-batch
+        // repartition(defaultParallelism) here and it did NOT pay (staging 3.87 s vs 3.56 s baseline) — the extra raw-text
         // exchange per micro-batch costs more than the parallel signature
         // pass saves at per-trigger batch sizes. The win that did pay is
         // the 8-partition state width (see streamSession below).

@@ -80,7 +80,7 @@ object TextOps {
       explode(Tok.words(col("text")))
         .as("token"))
     val st = toks.groupBy("source", "token").agg(count(lit(1)).as("c"))
-      .transform(CacheRegistry.persist(_)) // three consumers below
+      .transform(QueryScope.persist(_)) // three consumers below
     val tokenTotals = st.groupBy("token").agg(sum(col("c")).as("ct"))
     val sourceTotals = st.groupBy("source").agg(sum(col("c")).as("ns"))
     val corpusTotal = sourceTotals.agg(sum(col("ns")).as("n")) // 1 row
@@ -146,7 +146,7 @@ object TextOps {
     val toks = QueryDef.spread(t(s, dir, "documents")).select(col("doc_id"),
       explode(Tok.words(col("text")))
         .as("token"))
-      .transform(CacheRegistry.persist(_)) // both passes read it
+      .transform(QueryScope.persist(_)) // both passes read it
     val tokRdd = toks.select("token").as[String].rdd
     // empty corpus: treeReduce on a zero-partition RDD throws instead of
     // yielding an empty frame like the exact variant and the oracle do
@@ -210,17 +210,18 @@ object TextOps {
     // law (exactly one Generate materialization).
     // r21: the exchange-reuse discipline this relied on (byte-identical
     // consumer subtrees sharing one ShuffleExchange) proved brittle in the
-    // bench-shaped session — StageProfile measured FOUR separate corpus
-    // scan+tokenize+explode passes (two materializing identical 256,477-
-    // record exchanges side by side), exactly the failure mode the r17
+    // bench-shaped session — a per-stage profile (OPTIMIZATION_r21.md
+    // "text_lm_perplexity: four corpus passes → one") measured FOUR
+    // separate corpus scan+tokenize+explode passes (two materializing
+    // identical 256,477-record exchanges side by side), exactly the failure mode the r17
     // comment feared. The per-doc bigram-count frame is therefore now an
-    // EXPLICIT CacheRegistry persist — the same materialization contract as
+    // EXPLICIT QueryScope persist — the same materialization contract as
     // Dedup.tokensPersisted, strictly smaller than the tokenized corpus —
     // so every consumer (bgCounts → ctx/vocab, and the scoring join) reads
     // one materialization unconditionally instead of depending on plan
     // canonicalization. spread: single-split input would tokenize on one
     // core (QueryDef.spread scaladoc).
-    val docBigrams = CacheRegistry.persist(QueryDef.spread(documents)
+    val docBigrams = QueryScope.persist(QueryDef.spread(documents)
       .select(col("doc_id"), w.as("ws"))
       .where(size(col("ws")) >= 2)
       .select(col("doc_id"), explode(transform(
@@ -735,7 +736,7 @@ object TextOps {
         // persisted: BOTH the doc-frequency and the term-frequency
         // aggregations read the exploded term frame
         // NOT spread (r21 A/B): the widening exchange lost on the board
-        val toks = CacheRegistry.persist(
+        val toks = QueryScope.persist(
           t(s, dir, "documents").select(col("doc_id"), col("source"),
             explode(Tok.words(col("text")))
               .as("term")))
@@ -816,7 +817,7 @@ object TextOps {
           Tok.words(col("text")).as("ws"))
           .select(col("doc_id"), col("ws"),
             size(col("ws")).cast(LongType).as("dl"))
-          .transform(CacheRegistry.persist(_)) // corpus-stats pass + tf pass
+          .transform(QueryScope.persist(_)) // corpus-stats pass + tf pass
         val corpus = docs.agg(count(lit(1)).as("n_docs"),
           sum(col("dl")).as("t_tokens"))
         val qt = docs

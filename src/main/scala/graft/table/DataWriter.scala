@@ -3,6 +3,7 @@ package graft.table
 import java.util.UUID
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -247,6 +248,11 @@ object DataWriter {
       FileIO.ensureApplied(ioSettings)
       val tc = TaskContext.get()
       val hadoopConf = conf.value
+      // per-column bloom settings: reading them walks every property of the
+      // job conf, so once per task rather than once per file
+      val bloomColumns = hadoopConf
+        .getPropsWithPrefix(ParquetOutputFormat.BLOOM_FILTER_ENABLED + "#")
+        .asScala.toSeq.map { case (column, enabled) => column -> enabled.toBoolean }
       val width = fileSchema.size
       val keyOf =
         if (keyTypes.isEmpty) null
@@ -285,7 +291,7 @@ object DataWriter {
           Option.when(!spec.isUnpartitioned)(spec.partitionToPath(tuple, schema)))
         opened += target
         output = new TrackedOutputFile(FileIO.outputFile(target, hadoopConf))
-        writer = newWriter(output, hadoopConf)
+        writer = newWriter(output, hadoopConf, bloomColumns)
         rowsInFile = 0L
         java.util.Arrays.fill(nanCounts, 0L)
       }
@@ -334,9 +340,11 @@ object DataWriter {
   }
 
   /** A Parquet writer set up from a prepared job conf the way
-    * `ParquetOutputFormat.getRecordWriter` reads one.
+    * `ParquetOutputFormat.getRecordWriter` reads one, plus the conf's
+    * per-column bloom settings, read once per task.
     */
-  private def newWriter(file: OutputFile, conf: Configuration): ParquetWriter[InternalRow] = {
+  private def newWriter(file: OutputFile, conf: Configuration,
+      bloomColumns: Seq[(String, Boolean)]): ParquetWriter[InternalRow] = {
     val b = new RowWriterBuilder(file).withConf(conf)
       .withCompressionCodec(ParquetOutputFormat.getCompression(conf))
       .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
@@ -349,8 +357,7 @@ object DataWriter {
       .withMaxBloomFilterBytes(ParquetOutputFormat.getBloomFilterMaxBytes(conf))
       .withBloomFilterEnabled(ParquetOutputFormat.getBloomFilterEnabled(conf))
       .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
-    conf.getPropsWithPrefix(ParquetOutputFormat.BLOOM_FILTER_ENABLED + "#")
-      .forEach { (column, enabled) => b.withBloomFilterEnabled(column, enabled.toBoolean); () }
+    bloomColumns.foreach { case (column, enabled) => b.withBloomFilterEnabled(column, enabled) }
     b.build()
   }
 

@@ -1306,7 +1306,8 @@ final class IceTable private (
       // allows columns beyond `equality_ids` in a delete file — readers
       // project the key fields): one write job per upsert instead of two.
       // For a streaming upsert sink that halves per-trigger write-job
-      // overhead, the dominant commit cost measured by StreamCommitProbe.
+      // overhead, the dominant commit cost (BENCH_NOTES.md
+      // "stream_minhash_lsh commit attribution (round 18)").
       //
       // Delete SCOPE: partition-scoped when provably safe, else global.
       // A partition-scoped equality delete only reaches data files of the

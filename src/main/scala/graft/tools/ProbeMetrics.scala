@@ -5,24 +5,17 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Shared measurement plumbing for the one-off scale probes
-  * ([[ScaleProbe]], [[DedupScaleProbe]], [[PipelineScaleProbe]]).
+/** Listener-bus measurement plumbing for [[graft.Bench]]'s per-query
+  * shuffle attribution and the tests' `graft.JobCount`.
   *
-  * Task-level shuffle-write record counter: an action like count() runs its
-  * own QueryExecution, so plan-node SQL metrics on the probed DataFrame
-  * stay zero — a listener summing what the tasks actually wrote measures
-  * the real exchange volume regardless of which QueryExecution ran.
+  * Task-level shuffle-write counter: an action like count() runs its own
+  * QueryExecution, so plan-node SQL metrics on the measured DataFrame stay
+  * zero — a listener summing what the tasks actually wrote measures the
+  * real exchange volume regardless of which QueryExecution ran.
   */
 object ProbeMetrics {
 
-  final class ShuffleWriteCounter extends SparkListener {
-    val records = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      Option(t.taskMetrics).foreach(m =>
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten): Unit)
-  }
-
-  /** Records + bytes variant for the bench board's per-query attribution
+  /** Records + bytes written, for the bench board's per-query attribution
     * (r19 verdict: task-measured shuffle records are THE noise-vs-signal
     * discriminator — identical counts mean identical plans, so any wall
     * delta is ambient).
@@ -58,19 +51,4 @@ object ProbeMetrics {
       else m.invoke(bus)
       ()
     } catch { case _: Throwable => Thread.sleep(2000) }
-
-  /** Run `body`, returning (result, shuffleRecordsWritten, wallSeconds).
-    * Sleeps briefly after the action so the async listener bus drains.
-    */
-  def measure[A](spark: SparkSession)(body: => A): (A, Long, Double) = {
-    val counter = new ShuffleWriteCounter
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val t0 = System.nanoTime()
-      val out = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      drainListenerBus(spark) // synchronous: the counter sees every task end
-      (out, counter.records.get, wall)
-    } finally spark.sparkContext.removeSparkListener(counter)
-  }
 }

@@ -29,7 +29,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def plan(name: String): String = {
+  private def plan(name: String): String = ops.QueryScope.run {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.queryExecution.executedPlan.toString
   }
@@ -153,17 +153,18 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("incremental embedding dedup: increment ids broadcast, no cartesian, no UDF") {
-    val f = ops.IceQueries.incrementalEmb(spark, sfDir)
-    val df = ops.IncrementalDedup.incrementalEmbeddingPairs(
-      spark, f.emb, f.buckets, f.watermark, 0.2)
-    val p = df.queryExecution.executedPlan.toString
-    // the stored bucket table excludes the increment via a broadcast
-    // anti-join (the id set is Δ-sized); candidates join on bucket keys
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"increment exclusion is not a broadcast anti-join:\n$p")
-    assert(!p.contains("CartesianProduct"), s"cartesian in the candidate join:\n$p")
-    assert(!p.contains("ScalaUDF"), s"per-row UDF in the bucketing pass:\n$p")
-    ops.CacheRegistry.releaseAll()
+    ops.QueryScope.run {
+      val f = ops.IceQueries.incrementalEmb(spark, sfDir)
+      val df = ops.IncrementalDedup.incrementalEmbeddingPairs(
+        spark, f.emb, f.buckets, f.watermark, 0.2)
+      val p = df.queryExecution.executedPlan.toString
+      // the stored bucket table excludes the increment via a broadcast
+      // anti-join (the id set is Δ-sized); candidates join on bucket keys
+      assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
+        s"increment exclusion is not a broadcast anti-join:\n$p")
+      assert(!p.contains("CartesianProduct"), s"cartesian in the candidate join:\n$p")
+      assert(!p.contains("ScalaUDF"), s"per-row UDF in the bucketing pass:\n$p")
+    }
   }
 
   test("kNN graph: no cartesian, no window — candidates dedup before vectors attach") {
@@ -173,7 +174,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (a window would shuffle every scored pair into per-vector partitions)
     assert(!p.contains("Window"), s"kNN ranking fell back to a window:\n$p")
     assert(p.contains("top_k_by_score"), s"partial top-k aggregate missing:\n$p")
-    ops.CacheRegistry.releaseAll()
   }
 
   test("vocabulary top-k is a distributed TakeOrdered — the full vocabulary never globally sorts") {
@@ -254,7 +254,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
       s"candidate filter is not a broadcast semi-join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"top-k not TakeOrdered:\n$p")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("containment pairs: inverted-index join keyed on the token, never cartesian") {
@@ -267,7 +266,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert("(BroadcastHash|SortMerge)Join \\[tok".r.findFirstIn(p).nonEmpty ||
       "hashpartitioning\\([^)]*tok".r.findFirstIn(p).nonEmpty,
       s"pair join not keyed on the token:\n$p")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("ANN re-ranks carry no per-query window — partial top-k aggregate before the exchange") {
@@ -285,7 +283,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert("partial_top_k_by_score|ObjectHashAggregate[^\\n]*partial".r
           .findFirstIn(p).nonEmpty,
         s"$q top-k is not partially aggregated before the exchange:\n$p")
-      graft.ops.CacheRegistry.releaseAll()
     }
   }
 
@@ -294,7 +291,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"query set not broadcast to the corpus code pass:\n$p")
     assert(!p.contains("ScalaUDF"), s"UDF fell into the quantized plan:\n$p")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("mixture weights and source drift keep partial aggregation before the exchange") {
@@ -308,7 +304,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // drift's ONLY cross join is against the 1-row corpus total
     val drift = plan("text_source_drift")
     assert(p2CrossJoinsAreSingleRow(drift), s"drift cross join not 1-row:\n$drift")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   /** The drift plan may contain broadcast nested-loop joins only for the
@@ -328,7 +323,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian:\n$p")
       assert(p.contains("partial_count") || p.contains("partial_sum") ||
         p.contains("partial_min"), s"$q lost map-side combine:\n$p")
-      graft.ops.CacheRegistry.releaseAll()
     }
   }
 
@@ -346,7 +340,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin"),
       s"rank-edge join is not keyed:\n$p")
     assert(!p.contains("CartesianProduct"), s"pagerank has a cartesian:\n$p")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("k-means M-step reduces map-side: the exchange carries k x dims partials") {
@@ -373,7 +366,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = plan("events_incremental_engagement")
     assert(!p.contains("SortMergeJoin"),
       s"something in incremental engagement shuffles a join:\n$p")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("no explicit broadcast hint rides an SF-scaling input — AQE size-gates those joins") {
@@ -418,50 +410,50 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("hybrid RRF: both top-100 cuts are TakeOrdered, never a corpus sort") {
     val p = plan("sim_hybrid_rrf")
     assert(p.contains("TakeOrderedAndProject"), s"top-k fell back to a global sort:\n$p")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("lm perplexity: the corpus is scanned and exploded exactly once") {
-    // the shared docBigrams intermediate must be served to every consumer
-    // from ONE materialization — at 100 TB each un-shared consumer variant
-    // is a full corpus scan + explode. r17 relied on exchange reuse
-    // (byte-identical canonical subtrees), which proved brittle: the r21
-    // bench session measured FOUR corpus passes. The frame is now an
-    // explicit CacheRegistry persist, so the law is: the corpus-scale
-    // Generate lives in exactly ONE distinct cached relation, and no
-    // consumer branch re-runs it outside the cache.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // each consumer holds a FRESH InMemoryRelation instance, but one cached
-    // materialization = one shared CachedRDDBuilder — dedupe on that
-    val cachedBuilders = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
-    def expand(p: SparkPlan): Seq[SparkPlan] = {
-      val nested = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case i: InMemoryTableScanExec =>
-          // expand each DISTINCT cached materialization once: N scans of
-          // one cache are one materialization, not N
-          val b = i.relation.cacheBuilder
-          if (cachedBuilders.exists(_ eq b)) Seq.empty
-          else { cachedBuilders += b; Seq(i.relation.cachedPlan) }
-        case _ => Seq.empty
+    ops.QueryScope.run {
+      // the shared docBigrams intermediate must be served to every consumer
+      // from ONE materialization — at 100 TB each un-shared consumer variant
+      // is a full corpus scan + explode. r17 relied on exchange reuse
+      // (byte-identical canonical subtrees), which proved brittle: the r21
+      // bench session measured FOUR corpus passes. The frame is now an
+      // explicit QueryScope persist, so the law is: the corpus-scale
+      // Generate lives in exactly ONE distinct cached relation, and no
+      // consumer branch re-runs it outside the cache.
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+      // each consumer holds a FRESH InMemoryRelation instance, but one cached
+      // materialization = one shared CachedRDDBuilder — dedupe on that
+      val cachedBuilders = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+      def expand(p: SparkPlan): Seq[SparkPlan] = {
+        val nested = p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+          case q: QueryStageExec => Seq(q.plan)
+          case i: InMemoryTableScanExec =>
+            // expand each DISTINCT cached materialization once: N scans of
+            // one cache are one materialization, not N
+            val b = i.relation.cacheBuilder
+            if (cachedBuilders.exists(_ eq b)) Seq.empty
+            else { cachedBuilders += b; Seq(i.relation.cachedPlan) }
+          case _ => Seq.empty
+        }
+        p +: (p.children ++ nested ++ p.subqueries).flatMap(expand)
       }
-      p +: (p.children ++ nested ++ p.subqueries).flatMap(expand)
+      val df = SparkEntry.queries("text_lm_perplexity")(spark, sfDir)
+      df.collect() // AQE finalizes stages only on execution
+      val nodes = expand(df.queryExecution.executedPlan)
+      val generates = nodes.count(_.nodeName.contains("Generate"))
+      val cacheReads = nodes.count(_.isInstanceOf[InMemoryTableScanExec])
+      assert(generates == 1,
+        s"bigram explode materialized $generates times — a consumer branch fell " +
+          s"off the shared cache:\n${df.queryExecution.executedPlan}")
+      assert(cachedBuilders.size == 1 && cacheReads >= 2,
+        s"expected every consumer to read ONE cached docBigrams materialization, " +
+          s"found ${cachedBuilders.size} caches / $cacheReads cache reads:\n" +
+          s"${df.queryExecution.executedPlan}")
     }
-    val df = SparkEntry.queries("text_lm_perplexity")(spark, sfDir)
-    df.collect() // AQE finalizes stages only on execution
-    val nodes = expand(df.queryExecution.executedPlan)
-    val generates = nodes.count(_.nodeName.contains("Generate"))
-    val cacheReads = nodes.count(_.isInstanceOf[InMemoryTableScanExec])
-    assert(generates == 1,
-      s"bigram explode materialized $generates times — a consumer branch fell " +
-        s"off the shared cache:\n${df.queryExecution.executedPlan}")
-    assert(cachedBuilders.size == 1 && cacheReads >= 2,
-      s"expected every consumer to read ONE cached docBigrams materialization, " +
-        s"found ${cachedBuilders.size} caches / $cacheReads cache reads:\n" +
-        s"${df.queryExecution.executedPlan}")
-    graft.ops.CacheRegistry.releaseAll()
   }
 }

@@ -415,88 +415,91 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("incremental engagement: equals batch, reads no pre-watermark event file") {
     val sfDir = "/root/testdata/sf0.001"
-    val f = IceQueries.incrementalEvents(spark, sfDir)
-    def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    val inc = Analytics.incrementalEngagement(spark, f.events, f.activityIndex, f.watermark)
-    val batch = Analytics.engagement(spark, sfDir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(rows(inc) === rows(batch))
-    // the raw event scan inside the plan is the incremental read only
-    val oldFiles = f.events.newScan(snapshotId = Some(f.watermark)).planFiles()
-      .map(t => norm(t.file.filePath)).toSet
-    assert(oldFiles.nonEmpty)
-    val planInputs = inc.inputFiles.map(norm).toSet
-    assert(planInputs.intersect(oldFiles).isEmpty,
-      s"incremental engagement read pre-watermark event files: ${planInputs.intersect(oldFiles)}")
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incrementalEvents(spark, sfDir)
+      def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+      val inc = Analytics.incrementalEngagement(spark, f.events, f.activityIndex, f.watermark)
+      val batch = Analytics.engagement(spark, sfDir)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(rows(inc) === rows(batch))
+      // the raw event scan inside the plan is the incremental read only
+      val oldFiles = f.events.newScan(snapshotId = Some(f.watermark)).planFiles()
+        .map(t => norm(t.file.filePath)).toSet
+      assert(oldFiles.nonEmpty)
+      val planInputs = inc.inputFiles.map(norm).toSet
+      assert(planInputs.intersect(oldFiles).isEmpty,
+        s"incremental engagement read pre-watermark event files: ${planInputs.intersect(oldFiles)}")
+    }
   }
 
   test("stale-watermark overlap: dedup anti-join materializes as broadcast, result exact") {
-    // increment OVERLAPS the indexed days (the stale-retry scenario): the
-    // boundary-pruned overlap is non-empty, so the anti-join must appear —
-    // and as a broadcast, never a shuffle of the index side
-    import graft.table.IceTable
-    import graft.core.SchemaConv
-    import graft.meta.FileCatalog
-    import org.apache.spark.sql.functions.{col, expr}
-    val wh = Files.createTempDirectory("graft-analytics-stale").toString
-    val catalog = new FileCatalog(wh)
-    val sq = spark
-    import sq.implicits._
-    def ev(ids: Range, dayOf: Int => Int) = ids.map { i =>
-      (i.toLong, new java.sql.Timestamp(86400000L * dayOf(i) + i * 1000L),
-        (i % 5).toLong, "view", 0.0, "{}")
-    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val old = ev(1 to 50, i => i % 8)            // days 0..7
-    val events = IceTable.create(catalog, "ev_stale", SchemaConv.fromSpark(old.schema))
-    val watermark = events.append(old).snapshotId
-    events.refresh()
-    events.append(ev(51 to 80, i => 6 + (i % 4))) // days 6..9 — overlaps 6,7
-    events.refresh()
-    val idx = old.select(col("user_id"),
-      expr(s"unix_micros(ts) div ${Analytics.DayUs}").as("day")).distinct()
-    val index = IceTable.create(catalog, "idx_stale", SchemaConv.fromSpark(idx.schema))
-    index.append(idx)
-    index.refresh()
-    val inc = Analytics.incrementalEngagement(spark, events, index, watermark)
-    val p = inc.queryExecution.executedPlan.toString
-    def deep(sp: org.apache.spark.sql.execution.SparkPlan): String =
-      (sp.toString +: sp.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          deep(s.relation.cachedPlan)
-      }).mkString("\n")
-    val full = deep(inc.queryExecution.executedPlan)
-    assert(full.contains("LeftAnti"), s"overlap did not materialize the anti-join:\n$full")
-    assert(!(full.contains("SortMergeJoin") && full.contains("LeftAnti")) ||
-      "BroadcastHashJoin[^\\n]*LeftAnti".r.findFirstIn(full).isDefined,
-      s"anti-join is not broadcast:\n$full")
-    // and the result still equals engagement over ALL events
-    val allEv = events.scan(spark)
-      .select(col("user_id"), expr(s"unix_micros(ts) div ${Analytics.DayUs}").as("day"))
-      .distinct()
-    val expect = Analytics.engagementFrom(allEv).collect().map(_.toString).sorted
-    assert(inc.collect().map(_.toString).sorted === expect)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      // increment OVERLAPS the indexed days (the stale-retry scenario): the
+      // boundary-pruned overlap is non-empty, so the anti-join must appear —
+      // and as a broadcast, never a shuffle of the index side
+      import graft.table.IceTable
+      import graft.core.SchemaConv
+      import graft.meta.FileCatalog
+      import org.apache.spark.sql.functions.{col, expr}
+      val wh = Files.createTempDirectory("graft-analytics-stale").toString
+      val catalog = new FileCatalog(wh)
+      val sq = spark
+      import sq.implicits._
+      def ev(ids: Range, dayOf: Int => Int) = ids.map { i =>
+        (i.toLong, new java.sql.Timestamp(86400000L * dayOf(i) + i * 1000L),
+          (i % 5).toLong, "view", 0.0, "{}")
+      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      val old = ev(1 to 50, i => i % 8)            // days 0..7
+      val events = IceTable.create(catalog, "ev_stale", SchemaConv.fromSpark(old.schema))
+      val watermark = events.append(old).snapshotId
+      events.refresh()
+      events.append(ev(51 to 80, i => 6 + (i % 4))) // days 6..9 — overlaps 6,7
+      events.refresh()
+      val idx = old.select(col("user_id"),
+        expr(s"unix_micros(ts) div ${Analytics.DayUs}").as("day")).distinct()
+      val index = IceTable.create(catalog, "idx_stale", SchemaConv.fromSpark(idx.schema))
+      index.append(idx)
+      index.refresh()
+      val inc = Analytics.incrementalEngagement(spark, events, index, watermark)
+      val p = inc.queryExecution.executedPlan.toString
+      def deep(sp: org.apache.spark.sql.execution.SparkPlan): String =
+        (sp.toString +: sp.collect {
+          case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+            deep(s.relation.cachedPlan)
+        }).mkString("\n")
+      val full = deep(inc.queryExecution.executedPlan)
+      assert(full.contains("LeftAnti"), s"overlap did not materialize the anti-join:\n$full")
+      assert(!(full.contains("SortMergeJoin") && full.contains("LeftAnti")) ||
+        "BroadcastHashJoin[^\\n]*LeftAnti".r.findFirstIn(full).isDefined,
+        s"anti-join is not broadcast:\n$full")
+      // and the result still equals engagement over ALL events
+      val allEv = events.scan(spark)
+        .select(col("user_id"), expr(s"unix_micros(ts) div ${Analytics.DayUs}").as("day"))
+        .distinct()
+      val expect = Analytics.engagementFrom(allEv).collect().map(_.toString).sorted
+      assert(inc.collect().map(_.toString).sorted === expect)
+    }
   }
 
   test("activity index roll-forward is idempotent under a stale watermark") {
     val sfDir = "/root/testdata/sf0.001"
-    val f = IceQueries.incrementalEvents(spark, sfDir)
-    val before = f.activityIndex.scan(spark).count()
-    Analytics.extendActivityIndex(spark, f.events, f.activityIndex, f.watermark)
-    val after = f.activityIndex.scan(spark).count()
-    assert(after > before, "extend must append the increment's fresh days")
-    // a retry with the SAME (now stale) watermark appends nothing
-    Analytics.extendActivityIndex(spark, f.events, f.activityIndex, f.watermark)
-    assert(f.activityIndex.scan(spark).count() === after)
-    // and the index now equals the full corpus's distinct (user, day)
-    val full = Analytics.engagement(spark, sfDir) // engagement over raw events
-    val fromIndex = Analytics.engagementFrom(
-      f.activityIndex.scan(spark).select("user_id", "day"))
-    assert(fromIndex.collect().map(_.toString).sorted
-      === full.collect().map(_.toString).sorted)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incrementalEvents(spark, sfDir)
+      val before = f.activityIndex.scan(spark).count()
+      Analytics.extendActivityIndex(spark, f.events, f.activityIndex, f.watermark)
+      val after = f.activityIndex.scan(spark).count()
+      assert(after > before, "extend must append the increment's fresh days")
+      // a retry with the SAME (now stale) watermark appends nothing
+      Analytics.extendActivityIndex(spark, f.events, f.activityIndex, f.watermark)
+      assert(f.activityIndex.scan(spark).count() === after)
+      // and the index now equals the full corpus's distinct (user, day)
+      val full = Analytics.engagement(spark, sfDir) // engagement over raw events
+      val fromIndex = Analytics.engagementFrom(
+        f.activityIndex.scan(spark).select("user_id", "day"))
+      assert(fromIndex.collect().map(_.toString).sorted
+        === full.collect().map(_.toString).sorted)
+    }
   }
 
   test("k-means assignment stays in builtin codegen (no UDF, no python eval)") {

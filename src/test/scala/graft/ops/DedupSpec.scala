@@ -45,18 +45,20 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("containment dominates jaccard and catches a planted excerpt jaccard misses") {
     val s = spark
     import s.implicits._
-    try {
+    QueryScope.run {
       // dominance on the real corpus: min(|A|,|B|) <= |A∪B|, so every
       // jaccard>=t pair is a containment>=t pair
-      val jac = Dedup.jaccardPairs(spark, sfDir, 0.5)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      CacheRegistry.releaseAll()
-      val cont = Dedup.containmentPairs(spark, sfDir, 0.5)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val jac = QueryScope.run {
+        Dedup.jaccardPairs(spark, sfDir, 0.5)
+          .select("doc_a", "doc_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+      val cont = QueryScope.run {
+        Dedup.containmentPairs(spark, sfDir, 0.5)
+          .select("doc_a", "doc_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
       assert(jac.nonEmpty && jac.subsetOf(cont))
-      CacheRegistry.releaseAll()
       // planted excerpt: doc 2's word set is fully inside doc 1's, with
       // jaccard 4/12 (well under 0.9) but containment exactly 1.0
       val planted = Seq(
@@ -66,31 +68,33 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       val found = Dedup.containmentPairsOver(planted, 0.9)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
       assert(found == Map((1L, 2L) -> 1.0))
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("containment count-join and prefix-probe plans agree exactly") {
     val docs = QueryDef.t(spark, sfDir, "documents")
-    try {
+    QueryScope.run {
       for (t <- Seq(0.5, 0.9)) {
-        val byCount = Dedup.containmentPairsOver(docs, t)
-          .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-        CacheRegistry.releaseAll()
+        val byCount = QueryScope.run {
+          Dedup.containmentPairsOver(docs, t)
+            .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+        }
         // force the prefix plan regardless of the corpus moment
-        val byPrefix = Dedup.adaptiveContainment(docs, t, statsHint = Some(1e18))
-          .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-        CacheRegistry.releaseAll()
+        val byPrefix = QueryScope.run {
+          Dedup.adaptiveContainment(docs, t, statsHint = Some(1e18))
+            .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+        }
         assert(byCount.nonEmpty, s"no containment pairs at t=$t")
         assert(byPrefix == byCount, s"plans disagree at t=$t")
       }
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("containment prefix-probe plan: doc-keyed ranking window, token-keyed candidate join") {
     // force the prefix plan regardless of the corpus moment and audit the
     // shape the 100 TB path relies on
     val docs = QueryDef.t(spark, sfDir, "documents")
-    try {
+    QueryScope.run {
       val p = Dedup.adaptiveContainment(docs, 0.9, statsHint = Some(1e18))
         .queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -106,7 +110,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rnSpecs.nonEmpty, s"prefix ranking window missing:\n$p")
       assert(rnSpecs.forall(_.contains("doc_id")),
         s"ranking window not keyed per-document: $rnSpecs\n$p")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("containment prefix plan survives the IEEE ceil hazard at the boundary") {
@@ -120,11 +124,11 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, "a b c d e f g h i j", "src"), // {a..j}
       (2L, "a b c d e f g h i k", "src"), // 9 shared of 10
       (3L, "z1 z2 z3 z4 z5", "src")).toDF("doc_id", "text", "source")
-    try {
+    QueryScope.run {
       val viaPrefix = Dedup.adaptiveContainment(planted, 0.9, statsHint = Some(1e18))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(viaPrefix == Set((1L, 2L)), s"boundary pair missed: $viaPrefix")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("a planted high-df token flips the containment chooser to the prefix plan") {
@@ -132,21 +136,21 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     // 21,000 docs sharing one stopword: Σ C(df,2) ≈ 2.2e8 clears the
     // CountJoinMaxPairs quadratic budget (the ONLY flip since r21 — the
-    // high-threshold early flip was removed on ContainmentPlanProbe
-    // evidence), so the SAMPLED estimate (no stats hint) must select the
+    // high-threshold early flip was removed on the evidence recorded in
+    // OPTIMIZATION_r21.md "Containment cost chooser"), so the SAMPLED estimate (no stats hint) must select the
     // prefix plan — the count-join would pay C(21000,2) joined rows for
     // that token alone. Two planted dups prove the result on this corpus.
     val docs = (0L until 21000L).map(i => (i, s"the uniq${i}a uniq${i}b", "src")) ++
       Seq((90000L, "p q r s t u v w x y", "src"), (90001L, "p q r s t u v w x y", "src"))
     val df = docs.toDF("doc_id", "text", "source")
     val beforePrefix = Dedup.containmentPrefixPlans.get()
-    try {
+    QueryScope.run {
       val pairs = Dedup.adaptiveContainment(df, 0.9, statsHint = None)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(Dedup.containmentPrefixPlans.get() == beforePrefix + 1,
         "high-df corpus did not engage the prefix plan")
       assert(pairs == Set((90000L, 90001L)), s"unexpected pair set: $pairs")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("row-capped joined-rows sampler is exact when the corpus fits the cap") {
@@ -279,7 +283,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, "alpha beta gamma zeta", "src"),
       (4L, "totally different words entirely", "src"))
       .toDF("doc_id", "text", "source")
-    try {
+    QueryScope.run {
       val clusters = Dedup.duplicateClusters(
         Dedup.jaccardPairsOverDocs(planted, 0.5))
       val got = Dedup.dedupVerdict(planted, clusters).collect()
@@ -300,7 +304,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
           Dedup.dedupVerdict(planted, clusters))
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(curated == Set(1L, 4L))
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("minhash LSH recall against exact jaccard at high threshold") {
@@ -315,7 +319,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("windowed streaming LSH emits exactly the batch pairs within the window") {
-    try {
+    QueryScope.run {
       val (wdf, batches) = StreamingOps.streamedMinhashLshWindowed(spark, sfDir)
       val windowed = wdf.select("doc_a", "doc_b", "est_jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -332,7 +336,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the window genuinely splits the corpus (distances span 20..480 here):
       // eviction semantics are exercised, not vacuous
       assert(windowed.nonEmpty && windowed.size < batch.size)
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("simhash is deterministic and identical docs collide") {

@@ -89,51 +89,53 @@ final class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("incremental containment equals full-corpus containment restricted to the increment") {
-    val f = IceQueries.incremental(spark, sfDir)
-    val incremental = pairSet(IncrementalDedup.incrementalContainmentPairs(
-      spark, f.docs, f.tokenIndex, f.watermark, 0.9))
-    val full = pairSet(Dedup.containmentPairs(spark, sfDir, 0.9))
-    val expected = full.filter { case (a, b) => a % 10 == 0 || b % 10 == 0 }
-    assert(incremental == expected)
-    assert(incremental.nonEmpty, "fixture should contain excerpt pairs touching new docs")
-    // same structural guarantee as the jaccard variant: tokens come from
-    // the persisted index, never a pre-watermark document file
-    val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
-      .map(t => norm(t.file.filePath)).toSet
-    val planInputs = IncrementalDedup.incrementalContainmentPairs(
-      spark, f.docs, f.tokenIndex, f.watermark, 0.9).inputFiles.map(norm).toSet
-    assert(planInputs.nonEmpty)
-    assert(planInputs.intersect(oldFiles).isEmpty,
-      "containment pair plan scans old document files instead of the token index")
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incremental(spark, sfDir)
+      val incremental = pairSet(IncrementalDedup.incrementalContainmentPairs(
+        spark, f.docs, f.tokenIndex, f.watermark, 0.9))
+      val full = pairSet(Dedup.containmentPairs(spark, sfDir, 0.9))
+      val expected = full.filter { case (a, b) => a % 10 == 0 || b % 10 == 0 }
+      assert(incremental == expected)
+      assert(incremental.nonEmpty, "fixture should contain excerpt pairs touching new docs")
+      // same structural guarantee as the jaccard variant: tokens come from
+      // the persisted index, never a pre-watermark document file
+      val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
+        .map(t => norm(t.file.filePath)).toSet
+      val planInputs = IncrementalDedup.incrementalContainmentPairs(
+        spark, f.docs, f.tokenIndex, f.watermark, 0.9).inputFiles.map(norm).toSet
+      assert(planInputs.nonEmpty)
+      assert(planInputs.intersect(oldFiles).isEmpty,
+        "containment pair plan scans old document files instead of the token index")
+    }
   }
 
   test("incremental span stats equal full-corpus stats restricted to the increment") {
-    val f = IceQueries.incremental(spark, sfDir)
-    val incremental = IncrementalDedup.incrementalSpanStats(
-        spark, f.docs, f.spanIndex, f.watermark, 5)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    // oracle: the FULL corpus pass (df over every doc), restricted to the
-    // increment's docs — a df miss against old docs would show here
-    val full = Dedup.sharedSpanStats(spark, sfDir, 5)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val expected = full.filter { case (id, _) => id % 10 == 0 }
-    assert(incremental == expected)
-    assert(incremental.nonEmpty, "fixture increment should contain spans")
-    assert(incremental.values.exists(_._2 > 0),
-      "increment should share at least one span with the accumulated corpus")
-    // shingles come from the persisted span index, never a pre-watermark
-    // document file
-    val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
-      .map(t => norm(t.file.filePath)).toSet
-    val planInputs = IncrementalDedup.incrementalSpanStats(
-      spark, f.docs, f.spanIndex, f.watermark, 5).inputFiles.map(norm).toSet
-    assert(planInputs.nonEmpty)
-    assert(planInputs.intersect(oldFiles).isEmpty,
-      "span plan scans old document files instead of the span index")
-    // the span-index roll appends ONLY the increment's rows: after
-    // extendSpanIndex the index equals the full corpus's span rows
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incremental(spark, sfDir)
+      val incremental = IncrementalDedup.incrementalSpanStats(
+          spark, f.docs, f.spanIndex, f.watermark, 5)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      // oracle: the FULL corpus pass (df over every doc), restricted to the
+      // increment's docs — a df miss against old docs would show here
+      val full = Dedup.sharedSpanStats(spark, sfDir, 5)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      val expected = full.filter { case (id, _) => id % 10 == 0 }
+      assert(incremental == expected)
+      assert(incremental.nonEmpty, "fixture increment should contain spans")
+      assert(incremental.values.exists(_._2 > 0),
+        "increment should share at least one span with the accumulated corpus")
+      // shingles come from the persisted span index, never a pre-watermark
+      // document file
+      val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
+        .map(t => norm(t.file.filePath)).toSet
+      val planInputs = IncrementalDedup.incrementalSpanStats(
+        spark, f.docs, f.spanIndex, f.watermark, 5).inputFiles.map(norm).toSet
+      assert(planInputs.nonEmpty)
+      assert(planInputs.intersect(oldFiles).isEmpty,
+        "span plan scans old document files instead of the span index")
+      // the span-index roll appends ONLY the increment's rows: after
+      // extendSpanIndex the index equals the full corpus's span rows
+    }
   }
 
   test("incremental minhash: only the increment is signed; recall pinned vs exact pairs") {
@@ -268,182 +270,187 @@ final class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("incremental chunk stats equal full-corpus stats restricted to the increment") {
-    val f = IceQueries.incremental(spark, sfDir)
-    val incremental = IncrementalDedup.incrementalChunkStats(
-        spark, f.docs, f.chunkIndex, f.watermark, 20)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val full = Dedup.chunkDedupStats(docs, 20)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val expected = full.filter { case (id, _) => id % 10 == 0 }
-    assert(incremental == expected)
-    assert(incremental.nonEmpty)
-    // the increment's doc_ids (0, 10, 20…) are often SMALLER than stored
-    // ids, so this equality exercises first-occurrence MOVES, not just
-    // lookups — and the chunk plan reads no pre-watermark document file
-    val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
-      .map(t => norm(t.file.filePath)).toSet
-    val planInputs = IncrementalDedup.incrementalChunkStats(
-      spark, f.docs, f.chunkIndex, f.watermark, 20).inputFiles.map(norm).toSet
-    assert(planInputs.nonEmpty)
-    assert(planInputs.intersect(oldFiles).isEmpty,
-      "chunk stats plan scans old document files instead of the chunk index")
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incremental(spark, sfDir)
+      val incremental = IncrementalDedup.incrementalChunkStats(
+          spark, f.docs, f.chunkIndex, f.watermark, 20)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val full = Dedup.chunkDedupStats(docs, 20)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      val expected = full.filter { case (id, _) => id % 10 == 0 }
+      assert(incremental == expected)
+      assert(incremental.nonEmpty)
+      // the increment's doc_ids (0, 10, 20…) are often SMALLER than stored
+      // ids, so this equality exercises first-occurrence MOVES, not just
+      // lookups — and the chunk plan reads no pre-watermark document file
+      val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
+        .map(t => norm(t.file.filePath)).toSet
+      val planInputs = IncrementalDedup.incrementalChunkStats(
+        spark, f.docs, f.chunkIndex, f.watermark, 20).inputFiles.map(norm).toSet
+      assert(planInputs.nonEmpty)
+      assert(planInputs.intersect(oldFiles).isEmpty,
+        "chunk stats plan scans old document files instead of the chunk index")
+    }
   }
 
   test("incremental chunk scrub equals the full scrub restricted to the increment") {
-    val f = IceQueries.incremental(spark, sfDir)
-    val inc = IncrementalDedup.incrementalChunkScrub(
-        spark, f.docs, f.chunkIndex, f.watermark, 20)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val full = Dedup.chunkScrub(docs, 20)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    val expected = full.filter { case (id, _) => id % 10 == 0 }
-    // fingerprints included: the rebuilt text must be byte-identical, and
-    // increment docs whose every chunk is owned elsewhere must dissolve
-    assert(inc == expected)
-    assert(inc.nonEmpty)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incremental(spark, sfDir)
+      val inc = IncrementalDedup.incrementalChunkScrub(
+          spark, f.docs, f.chunkIndex, f.watermark, 20)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val full = Dedup.chunkScrub(docs, 20)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+      val expected = full.filter { case (id, _) => id % 10 == 0 }
+      // fingerprints included: the rebuilt text must be byte-identical, and
+      // increment docs whose every chunk is owned elsewhere must dissolve
+      assert(inc == expected)
+      assert(inc.nonEmpty)
+    }
   }
 
   test("extendChunkIndex upserts moved first-occurrences; stale retry stays exact") {
-    val s = spark
-    // fresh private fixture (don't mutate the shared memoized one)
-    val wh = java.nio.file.Files.createTempDirectory("graft-chunk-roll").toString
-    val catalog = new graft.meta.FileCatalog(wh)
-    val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
-    val b1 = docsRaw.where("doc_id % 10 != 0")
-    val b2 = docsRaw.where("doc_id % 10 = 0")
-    val dt = graft.table.IceTable.create(catalog, "docs_chunk_roll",
-      graft.core.SchemaConv.fromSpark(docsRaw.schema))
-    val snap1 = dt.append(b1).snapshotId
-    dt.refresh()
-    val reps0 = Dedup.chunkRows(b1, 20).groupBy("h")
-      .agg(org.apache.spark.sql.functions.min(
-        org.apache.spark.sql.functions.struct(
-          org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("chunk_idx"))).as("first"))
-      .select(org.apache.spark.sql.functions.col("h"),
-        org.apache.spark.sql.functions.col("first.doc_id").as("doc_id"),
-        org.apache.spark.sql.functions.col("first.chunk_idx").as("chunk_idx"))
-    val ct = graft.table.IceTable.create(catalog, "chunk_roll",
-      graft.core.SchemaConv.fromSpark(reps0.schema))
-    ct.append(reps0); ct.refresh()
-    dt.append(b2); dt.refresh()
-    val before = IncrementalDedup.incrementalChunkStats(spark, dt, ct, snap1, 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    IncrementalDedup.extendChunkIndex(spark, dt, ct, snap1, 20)
-    // rolled index == the full corpus's first-occurrence representatives —
-    // including hashes whose first MOVED to a smaller increment doc_id
-    val fromFull = Dedup.chunkRows(docsRaw, 20).groupBy("h")
-      .agg(org.apache.spark.sql.functions.min(
-        org.apache.spark.sql.functions.struct(
-          org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("chunk_idx"))).as("first"))
-      .select(org.apache.spark.sql.functions.col("h"),
-        org.apache.spark.sql.functions.col("first.doc_id").as("doc_id"),
-        org.apache.spark.sql.functions.col("first.chunk_idx").as("chunk_idx"))
-    val stored = ct.scan(spark).select("h", "doc_id", "chunk_idx")
-    assert(stored.count() == fromFull.count())
-    assert(stored.exceptAll(fromFull).isEmpty && fromFull.exceptAll(stored).isEmpty)
-    // a retry with a STALE watermark after the roll must not double-merge
-    val staleRerun = IncrementalDedup.incrementalChunkStats(spark, dt, ct, snap1, 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(staleRerun == before)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val s = spark
+      // fresh private fixture (don't mutate the shared memoized one)
+      val wh = java.nio.file.Files.createTempDirectory("graft-chunk-roll").toString
+      val catalog = new graft.meta.FileCatalog(wh)
+      val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
+      val b1 = docsRaw.where("doc_id % 10 != 0")
+      val b2 = docsRaw.where("doc_id % 10 = 0")
+      val dt = graft.table.IceTable.create(catalog, "docs_chunk_roll",
+        graft.core.SchemaConv.fromSpark(docsRaw.schema))
+      val snap1 = dt.append(b1).snapshotId
+      dt.refresh()
+      val reps0 = Dedup.chunkRows(b1, 20).groupBy("h")
+        .agg(org.apache.spark.sql.functions.min(
+          org.apache.spark.sql.functions.struct(
+            org.apache.spark.sql.functions.col("doc_id"),
+            org.apache.spark.sql.functions.col("chunk_idx"))).as("first"))
+        .select(org.apache.spark.sql.functions.col("h"),
+          org.apache.spark.sql.functions.col("first.doc_id").as("doc_id"),
+          org.apache.spark.sql.functions.col("first.chunk_idx").as("chunk_idx"))
+      val ct = graft.table.IceTable.create(catalog, "chunk_roll",
+        graft.core.SchemaConv.fromSpark(reps0.schema))
+      ct.append(reps0); ct.refresh()
+      dt.append(b2); dt.refresh()
+      val before = IncrementalDedup.incrementalChunkStats(spark, dt, ct, snap1, 20)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      IncrementalDedup.extendChunkIndex(spark, dt, ct, snap1, 20)
+      // rolled index == the full corpus's first-occurrence representatives —
+      // including hashes whose first MOVED to a smaller increment doc_id
+      val fromFull = Dedup.chunkRows(docsRaw, 20).groupBy("h")
+        .agg(org.apache.spark.sql.functions.min(
+          org.apache.spark.sql.functions.struct(
+            org.apache.spark.sql.functions.col("doc_id"),
+            org.apache.spark.sql.functions.col("chunk_idx"))).as("first"))
+        .select(org.apache.spark.sql.functions.col("h"),
+          org.apache.spark.sql.functions.col("first.doc_id").as("doc_id"),
+          org.apache.spark.sql.functions.col("first.chunk_idx").as("chunk_idx"))
+      val stored = ct.scan(spark).select("h", "doc_id", "chunk_idx")
+      assert(stored.count() == fromFull.count())
+      assert(stored.exceptAll(fromFull).isEmpty && fromFull.exceptAll(stored).isEmpty)
+      // a retry with a STALE watermark after the roll must not double-merge
+      val staleRerun = IncrementalDedup.incrementalChunkStats(spark, dt, ct, snap1, 20)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(staleRerun == before)
+    }
   }
 
   test("incremental verdict equals the full verdict restricted to the increment") {
-    val f = IceQueries.incremental(spark, sfDir)
-    val inc = IncrementalDedup.incrementalVerdict(spark, f.docs, f.tokenIndex,
-        f.hashIndex, f.pairIndex, f.watermark, 0.5)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val full = Dedup.dedupVerdict(docs, Dedup.duplicateClusters(
-        Dedup.jaccardPairs(spark, sfDir, 0.5).select("doc_a", "doc_b")))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val expected = full.filter { case (id, _) => id % 10 == 0 }
-    assert(inc == expected)
-    assert(inc.nonEmpty)
-    // the verdict plan reads no pre-watermark document file: hashes come
-    // from the hash index, tokens from the token index, old-old pairs from
-    // the pair index
-    val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
-      .map(t => norm(t.file.filePath)).toSet
-    val planInputs = IncrementalDedup.incrementalVerdict(spark, f.docs,
-      f.tokenIndex, f.hashIndex, f.pairIndex, f.watermark, 0.5)
-      .inputFiles.map(norm).toSet
-    assert(planInputs.nonEmpty)
-    assert(planInputs.intersect(oldFiles).isEmpty,
-      "verdict plan scans old document files instead of the persisted indexes")
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incremental(spark, sfDir)
+      val inc = IncrementalDedup.incrementalVerdict(spark, f.docs, f.tokenIndex,
+          f.hashIndex, f.pairIndex, f.watermark, 0.5)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val full = Dedup.dedupVerdict(docs, Dedup.duplicateClusters(
+          Dedup.jaccardPairs(spark, sfDir, 0.5).select("doc_a", "doc_b")))
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+      val expected = full.filter { case (id, _) => id % 10 == 0 }
+      assert(inc == expected)
+      assert(inc.nonEmpty)
+      // the verdict plan reads no pre-watermark document file: hashes come
+      // from the hash index, tokens from the token index, old-old pairs from
+      // the pair index
+      val oldFiles = f.docs.newScan(snapshotId = Some(f.watermark)).planFiles()
+        .map(t => norm(t.file.filePath)).toSet
+      val planInputs = IncrementalDedup.incrementalVerdict(spark, f.docs,
+        f.tokenIndex, f.hashIndex, f.pairIndex, f.watermark, 0.5)
+        .inputFiles.map(norm).toSet
+      assert(planInputs.nonEmpty)
+      assert(planInputs.intersect(oldFiles).isEmpty,
+        "verdict plan scans old document files instead of the persisted indexes")
+    }
   }
 
   test("hash/pair index rolls reproduce full-corpus state; stale verdict retry exact") {
-    import org.apache.spark.sql.functions.{col, md5, min => fmin}
-    val wh = java.nio.file.Files.createTempDirectory("graft-verdict-roll").toString
-    val catalog = new graft.meta.FileCatalog(wh)
-    val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
-    val b1 = docsRaw.where("doc_id % 10 != 0")
-    val b2 = docsRaw.where("doc_id % 10 = 0")
-    val dt = graft.table.IceTable.create(catalog, "docs_verdict_roll",
-      graft.core.SchemaConv.fromSpark(docsRaw.schema))
-    val snap1 = dt.append(b1).snapshotId
-    dt.refresh()
-    val idx0 = IncrementalDedup.tokenIndexOf(b1)
-    val it = graft.table.IceTable.create(catalog, "tok_verdict_roll",
-      graft.core.SchemaConv.fromSpark(idx0.schema))
-    it.append(idx0); it.refresh()
-    val h0 = b1.select(col("doc_id"),
-        md5(col("text").cast(org.apache.spark.sql.types.BinaryType)).as("h"))
-      .groupBy("h").agg(fmin(col("doc_id")).as("doc_id"))
-      .select(col("h"), col("doc_id"))
-    val ht = graft.table.IceTable.create(catalog, "hash_verdict_roll",
-      graft.core.SchemaConv.fromSpark(h0.schema))
-    ht.append(h0); ht.refresh()
-    val p0 = Dedup.countJoinJaccardPersisted(
-      Dedup.tokensPersisted(b1.select(col("doc_id"), col("source"),
-        Dedup.wordSet(col("text")).as("ws"))), 0.5)
-      .select(col("doc_a"), col("doc_b"))
-    val pt = graft.table.IceTable.create(catalog, "pair_verdict_roll",
-      graft.core.SchemaConv.fromSpark(p0.schema))
-    pt.append(p0); pt.refresh()
-    dt.append(b2); dt.refresh()
-    val before = IncrementalDedup.incrementalVerdict(
-        spark, dt, it, ht, pt, snap1, 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-    // roll all three artifacts (pair roll consumes the PRE-roll token index)
-    IncrementalDedup.extendPairIndex(spark, dt, it, pt, snap1, 0.5)
-    IncrementalDedup.extendHashIndex(spark, dt, ht, snap1)
-    IncrementalDedup.extendIndex(spark, dt, it, snap1)
-    // rolled pair index == the FULL corpus pair set (old-old ∪ touching
-    // covers every pair) and rolled hash index == global per-hash minima
-    val fullPairs = pairSet(Dedup.jaccardPairs(spark, sfDir, 0.5))
-    val storedPairs = pt.scan(spark).select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(storedPairs == fullPairs)
-    val fullMins = docsRaw.select(col("doc_id"),
-        md5(col("text").cast(org.apache.spark.sql.types.BinaryType)).as("h"))
-      .groupBy("h").agg(fmin(col("doc_id")).as("doc_id"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val storedMins = ht.scan(spark).select("h", "doc_id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(storedMins == fullMins)
-    // a STALE-watermark retry after all rolls must return the same verdict
-    // (duplicate edges are harmless to the closure; the hash anti-join +
-    // re-union reproduces the same minima)
-    val staleRerun = IncrementalDedup.incrementalVerdict(
-        spark, dt, it, ht, pt, snap1, 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-    assert(staleRerun == before)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      import org.apache.spark.sql.functions.{col, md5, min => fmin}
+      val wh = java.nio.file.Files.createTempDirectory("graft-verdict-roll").toString
+      val catalog = new graft.meta.FileCatalog(wh)
+      val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
+      val b1 = docsRaw.where("doc_id % 10 != 0")
+      val b2 = docsRaw.where("doc_id % 10 = 0")
+      val dt = graft.table.IceTable.create(catalog, "docs_verdict_roll",
+        graft.core.SchemaConv.fromSpark(docsRaw.schema))
+      val snap1 = dt.append(b1).snapshotId
+      dt.refresh()
+      val idx0 = IncrementalDedup.tokenIndexOf(b1)
+      val it = graft.table.IceTable.create(catalog, "tok_verdict_roll",
+        graft.core.SchemaConv.fromSpark(idx0.schema))
+      it.append(idx0); it.refresh()
+      val h0 = b1.select(col("doc_id"),
+          md5(col("text").cast(org.apache.spark.sql.types.BinaryType)).as("h"))
+        .groupBy("h").agg(fmin(col("doc_id")).as("doc_id"))
+        .select(col("h"), col("doc_id"))
+      val ht = graft.table.IceTable.create(catalog, "hash_verdict_roll",
+        graft.core.SchemaConv.fromSpark(h0.schema))
+      ht.append(h0); ht.refresh()
+      val p0 = Dedup.countJoinJaccardPersisted(
+        Dedup.tokensPersisted(b1.select(col("doc_id"), col("source"),
+          Dedup.wordSet(col("text")).as("ws"))), 0.5)
+        .select(col("doc_a"), col("doc_b"))
+      val pt = graft.table.IceTable.create(catalog, "pair_verdict_roll",
+        graft.core.SchemaConv.fromSpark(p0.schema))
+      pt.append(p0); pt.refresh()
+      dt.append(b2); dt.refresh()
+      val before = IncrementalDedup.incrementalVerdict(
+          spark, dt, it, ht, pt, snap1, 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
+      // roll all three artifacts (pair roll consumes the PRE-roll token index)
+      IncrementalDedup.extendPairIndex(spark, dt, it, pt, snap1, 0.5)
+      IncrementalDedup.extendHashIndex(spark, dt, ht, snap1)
+      IncrementalDedup.extendIndex(spark, dt, it, snap1)
+      // rolled pair index == the FULL corpus pair set (old-old ∪ touching
+      // covers every pair) and rolled hash index == global per-hash minima
+      val fullPairs = pairSet(Dedup.jaccardPairs(spark, sfDir, 0.5))
+      val storedPairs = pt.scan(spark).select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(storedPairs == fullPairs)
+      val fullMins = docsRaw.select(col("doc_id"),
+          md5(col("text").cast(org.apache.spark.sql.types.BinaryType)).as("h"))
+        .groupBy("h").agg(fmin(col("doc_id")).as("doc_id"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val storedMins = ht.scan(spark).select("h", "doc_id").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(storedMins == fullMins)
+      // a STALE-watermark retry after all rolls must return the same verdict
+      // (duplicate edges are harmless to the closure; the hash anti-join +
+      // re-union reproduces the same minima)
+      val staleRerun = IncrementalDedup.incrementalVerdict(
+          spark, dt, it, ht, pt, snap1, 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
+      assert(staleRerun == before)
+    }
   }
 
   private def vecPairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -451,78 +458,82 @@ final class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("incremental embedding pairs equal full-corpus LSH restricted to the increment") {
-    val f = IceQueries.incrementalEmb(spark, sfDir)
-    val incremental = vecPairSet(IncrementalDedup.incrementalEmbeddingPairs(
-      spark, f.emb, f.buckets, f.watermark, 0.2))
-    val full = vecPairSet(Similarity.embeddingNearDupLSH(spark, sfDir, 0.2))
-    val expected = full.filter { case (a, b) => a % 10 == 0 || b % 10 == 0 }
-    assert(incremental == expected)
-    assert(incremental.nonEmpty, "fixture should contain near-dup pairs touching new vectors")
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incrementalEmb(spark, sfDir)
+      val incremental = vecPairSet(IncrementalDedup.incrementalEmbeddingPairs(
+        spark, f.emb, f.buckets, f.watermark, 0.2))
+      val full = vecPairSet(Similarity.embeddingNearDupLSH(spark, sfDir, 0.2))
+      val expected = full.filter { case (a, b) => a % 10 == 0 || b % 10 == 0 }
+      assert(incremental == expected)
+      assert(incremental.nonEmpty, "fixture should contain near-dup pairs touching new vectors")
+    }
   }
 
   test("embedding candidate plan buckets only the increment; verify is candidate-keyed") {
-    val f = IceQueries.incrementalEmb(spark, sfDir)
-    val oldFiles = f.emb.newScan(snapshotId = Some(f.watermark)).planFiles()
-      .map(t => norm(t.file.filePath)).toSet
-    assert(oldFiles.nonEmpty)
-    // the CANDIDATE stage (where all per-vector compute lives: int8
-    // quantization + hyperplane projections) must not read a pre-watermark
-    // embedding file — stored vectors arrive as persisted bucket rows
-    val candInputs = IncrementalDedup.incrementalEmbeddingCandidates(
-      spark, f.emb, f.buckets, f.watermark).inputFiles.map(norm).toSet
-    assert(candInputs.nonEmpty)
-    assert(candInputs.intersect(oldFiles).isEmpty,
-      "candidate plan scans old embedding files instead of the bucket table")
-    // the verify join DOES read old vectors, but only candidate-keyed —
-    // its plan must carry the candidate join, not a second bucketing pass
-    val pairs = IncrementalDedup.incrementalEmbeddingPairs(
-      spark, f.emb, f.buckets, f.watermark, 0.2)
-    assert(pairs.count() ==
-      IncrementalDedup.incrementalEmbeddingPairs(
-        spark, f.emb, f.buckets, f.watermark, 0.2).count())
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incrementalEmb(spark, sfDir)
+      val oldFiles = f.emb.newScan(snapshotId = Some(f.watermark)).planFiles()
+        .map(t => norm(t.file.filePath)).toSet
+      assert(oldFiles.nonEmpty)
+      // the CANDIDATE stage (where all per-vector compute lives: int8
+      // quantization + hyperplane projections) must not read a pre-watermark
+      // embedding file — stored vectors arrive as persisted bucket rows
+      val candInputs = IncrementalDedup.incrementalEmbeddingCandidates(
+        spark, f.emb, f.buckets, f.watermark).inputFiles.map(norm).toSet
+      assert(candInputs.nonEmpty)
+      assert(candInputs.intersect(oldFiles).isEmpty,
+        "candidate plan scans old embedding files instead of the bucket table")
+      // the verify join DOES read old vectors, but only candidate-keyed —
+      // its plan must carry the candidate join, not a second bucketing pass
+      val pairs = IncrementalDedup.incrementalEmbeddingPairs(
+        spark, f.emb, f.buckets, f.watermark, 0.2)
+      assert(pairs.count() ==
+        IncrementalDedup.incrementalEmbeddingPairs(
+          spark, f.emb, f.buckets, f.watermark, 0.2).count())
+    }
   }
 
   test("incremental kNN equals the full kNN graph restricted to increment queries") {
-    val f = IceQueries.incrementalEmb(spark, sfDir)
-    val inc = IncrementalDedup.incrementalKnn(spark, f.emb, f.buckets, f.watermark, 5)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val full = Similarity.knnGraph(spark, sfDir, 5)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val expected = full.filter(_._1 % 10 == 0)
-    // bit-identical ranked lists: a stored-bucket miss or a fresh-path
-    // bucketing drift would change a neighbor or a rank
-    assert(inc == expected)
-    assert(inc.nonEmpty)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val f = IceQueries.incrementalEmb(spark, sfDir)
+      val inc = IncrementalDedup.incrementalKnn(spark, f.emb, f.buckets, f.watermark, 5)
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+      val full = Similarity.knnGraph(spark, sfDir, 5)
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+      val expected = full.filter(_._1 % 10 == 0)
+      // bit-identical ranked lists: a stored-bucket miss or a fresh-path
+      // bucketing drift would change a neighbor or a rank
+      assert(inc == expected)
+      assert(inc.nonEmpty)
+    }
   }
 
   test("extendEmbeddingBuckets rolls the bucket table to the full corpus's rows") {
-    val s = spark
-    // fresh private fixture (don't mutate the shared memoized one)
-    val wh = java.nio.file.Files.createTempDirectory("graft-emb-roll").toString
-    val catalog = new graft.meta.FileCatalog(wh)
-    val embRaw = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val b1 = embRaw.where("vec_id % 10 != 0")
-    val b2 = embRaw.where("vec_id % 10 = 0")
-    val et = graft.table.IceTable.create(catalog, "emb_roll",
-      graft.core.SchemaConv.fromSpark(embRaw.schema))
-    val snap1 = et.append(b1).snapshotId
-    et.refresh()
-    val buckets0 = Similarity.bucketRows(b1)
-    val bt = graft.table.IceTable.create(catalog, "emb_buckets_roll",
-      graft.core.SchemaConv.fromSpark(buckets0.schema))
-    bt.append(buckets0); bt.refresh()
-    et.append(b2); et.refresh()
-    IncrementalDedup.extendEmbeddingBuckets(spark, et, bt, snap1)
-    // rolled-forward buckets == bucketing the full corpus fresh
-    val fromFull = Similarity.bucketRows(embRaw)
-    val stored = bt.scan(spark).select("vec_id", "label", "tbl", "bucket")
-    assert(stored.count() == fromFull.count())
-    assert(stored.exceptAll(fromFull).isEmpty && fromFull.exceptAll(stored).isEmpty)
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val s = spark
+      // fresh private fixture (don't mutate the shared memoized one)
+      val wh = java.nio.file.Files.createTempDirectory("graft-emb-roll").toString
+      val catalog = new graft.meta.FileCatalog(wh)
+      val embRaw = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val b1 = embRaw.where("vec_id % 10 != 0")
+      val b2 = embRaw.where("vec_id % 10 = 0")
+      val et = graft.table.IceTable.create(catalog, "emb_roll",
+        graft.core.SchemaConv.fromSpark(embRaw.schema))
+      val snap1 = et.append(b1).snapshotId
+      et.refresh()
+      val buckets0 = Similarity.bucketRows(b1)
+      val bt = graft.table.IceTable.create(catalog, "emb_buckets_roll",
+        graft.core.SchemaConv.fromSpark(buckets0.schema))
+      bt.append(buckets0); bt.refresh()
+      et.append(b2); et.refresh()
+      IncrementalDedup.extendEmbeddingBuckets(spark, et, bt, snap1)
+      // rolled-forward buckets == bucketing the full corpus fresh
+      val fromFull = Similarity.bucketRows(embRaw)
+      val stored = bt.scan(spark).select("vec_id", "label", "tbl", "bucket")
+      assert(stored.count() == fromFull.count())
+      assert(stored.exceptAll(fromFull).isEmpty && fromFull.exceptAll(stored).isEmpty)
+    }
   }
 }

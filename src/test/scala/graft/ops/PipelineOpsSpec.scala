@@ -192,51 +192,52 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bigram LM perplexity matches a hand-built model and is partition-stable") {
-    // corpus: "a b" x3 docs and one outlier "x y" — the outlier's
-    // transitions are rare under the corpus LM, so its nll must be highest
-    val d = docs(
-      (1L, "a b a b", "s"), (2L, "a b", "s"), (3L, "a b a b a b", "s"),
-      (4L, "x y", "s"))
-    val out = graft.ops.TextOps.lmPerplexity(d)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(out.size == 4)
-    // driver-side model: bigram counts over ALL docs, Laplace over V
-    val corpus = Seq("a b a b", "a b", "a b a b a b", "x y").map(_.split(" ").toSeq)
-    val bgs = corpus.flatMap(ws => ws.zip(ws.tail))
-    val bgC = bgs.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val ctxC = bgs.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-    val v = bgs.map(_._2).distinct.size.toLong
-    // mirror the engine's micro-unit rounding (nll values are positive, so
-    // math.round == HALF_UP here) — the comparison stays exact
-    def nllMicro(bg: (String, String)): Long =
-      math.round((math.log(ctxC(bg._1) + v.toDouble) - math.log(bgC(bg) + 1.0)) * 1e4)
-    corpus.zipWithIndex.foreach { case (ws, i) =>
-      val pairs = ws.zip(ws.tail)
-      val expected = pairs.map(nllMicro).sum.toDouble / (pairs.size * 10000.0)
-      val (n, got) = out(i + 1L)
-      assert(n == pairs.size)
-      assert(math.abs(got - expected) < 1e-12, s"doc ${i + 1}: $got vs $expected")
+    QueryScope.run {
+      // corpus: "a b" x3 docs and one outlier "x y" — the outlier's
+      // transitions are rare under the corpus LM, so its nll must be highest
+      val d = docs(
+        (1L, "a b a b", "s"), (2L, "a b", "s"), (3L, "a b a b a b", "s"),
+        (4L, "x y", "s"))
+      val out = graft.ops.TextOps.lmPerplexity(d)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(out.size == 4)
+      // driver-side model: bigram counts over ALL docs, Laplace over V
+      val corpus = Seq("a b a b", "a b", "a b a b a b", "x y").map(_.split(" ").toSeq)
+      val bgs = corpus.flatMap(ws => ws.zip(ws.tail))
+      val bgC = bgs.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+      val ctxC = bgs.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
+      val v = bgs.map(_._2).distinct.size.toLong
+      // mirror the engine's micro-unit rounding (nll values are positive, so
+      // math.round == HALF_UP here) — the comparison stays exact
+      def nllMicro(bg: (String, String)): Long =
+        math.round((math.log(ctxC(bg._1) + v.toDouble) - math.log(bgC(bg) + 1.0)) * 1e4)
+      corpus.zipWithIndex.foreach { case (ws, i) =>
+        val pairs = ws.zip(ws.tail)
+        val expected = pairs.map(nllMicro).sum.toDouble / (pairs.size * 10000.0)
+        val (n, got) = out(i + 1L)
+        assert(n == pairs.size)
+        assert(math.abs(got - expected) < 1e-12, s"doc ${i + 1}: $got vs $expected")
+      }
+      assert(out(4L)._2 == out.values.map(_._2).max, "outlier doc not highest-nll")
+      // partition-stability to the bit (sorted fold)
+      val again = graft.ops.TextOps.lmPerplexity(d.repartition(5))
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(again == out.view.mapValues(_._2).toMap)
+      // scale pin: the consumers of the per-doc bigram-count frame (bigram
+      // counts → ctx/vocab, and the scoring join) must SHARE its
+      // materialization. r21: sharing is an explicit QueryScope persist
+      // (exchange reuse proved brittle — four corpus passes measured in the
+      // bench session), so the executed plan must read the frame through
+      // InMemoryTableScan in ≥ 2 places and run the corpus explode nowhere
+      // outside the single cached subtree (PlanAuditSpec pins that half)
+      val shared = graft.ops.TextOps.lmPerplexity(d)
+      shared.collect()
+      val plan = shared.queryExecution.executedPlan.toString
+      val cacheReads = "InMemoryTableScan".r.findAllMatchIn(plan).size
+      assert(cacheReads >= 2,
+        s"per-doc bigram frame not shared across consumers ($cacheReads cache " +
+          s"reads):\n${plan.take(3000)}")
     }
-    assert(out(4L)._2 == out.values.map(_._2).max, "outlier doc not highest-nll")
-    // partition-stability to the bit (sorted fold)
-    val again = graft.ops.TextOps.lmPerplexity(d.repartition(5))
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(again == out.view.mapValues(_._2).toMap)
-    // scale pin: the consumers of the per-doc bigram-count frame (bigram
-    // counts → ctx/vocab, and the scoring join) must SHARE its
-    // materialization. r21: sharing is an explicit CacheRegistry persist
-    // (exchange reuse proved brittle — four corpus passes measured in the
-    // bench session), so the executed plan must read the frame through
-    // InMemoryTableScan in ≥ 2 places and run the corpus explode nowhere
-    // outside the single cached subtree (PlanAuditSpec pins that half)
-    val shared = graft.ops.TextOps.lmPerplexity(d)
-    shared.collect()
-    val plan = shared.queryExecution.executedPlan.toString
-    val cacheReads = "InMemoryTableScan".r.findAllMatchIn(plan).size
-    assert(cacheReads >= 2,
-      s"per-doc bigram frame not shared across consumers ($cacheReads cache " +
-        s"reads):\n${plan.take(3000)}")
-    graft.ops.CacheRegistry.releaseAll()
   }
 
   test("bloom decontamination has one-sided error against the exact join") {

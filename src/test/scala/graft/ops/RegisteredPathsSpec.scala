@@ -79,23 +79,25 @@ final class RegisteredPathsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("registered LSH clusters consume the materialized candidate set, labels unchanged") {
-    val live = Dedup.minhashCandidates(spark, sfDir, 0.5)
-      .select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    CacheRegistry.releaseAll()
-    val artifact = IceQueries.lshCandidates(spark, sfDir)
-      .select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(artifact == live, "LSH candidate artifact drifted from the live plan")
-    val registered = graft.SparkEntry.queries("dedup_clusters_lsh")(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val direct = Dedup.duplicateClusters(
-        IceQueries.lshCandidates(spark, sfDir)
-          .select(org.apache.spark.sql.functions.col("doc_a"),
-            org.apache.spark.sql.functions.col("doc_b"))).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(registered == direct, "artifact-backed LSH clustering changed the labels")
-    CacheRegistry.releaseAll()
+    QueryScope.run {
+      val live = QueryScope.run {
+        Dedup.minhashCandidates(spark, sfDir, 0.5)
+          .select("doc_a", "doc_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+      val artifact = IceQueries.lshCandidates(spark, sfDir)
+        .select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(artifact == live, "LSH candidate artifact drifted from the live plan")
+      val registered = graft.SparkEntry.queries("dedup_clusters_lsh")(spark, sfDir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val direct = Dedup.duplicateClusters(
+          IceQueries.lshCandidates(spark, sfDir)
+            .select(org.apache.spark.sql.functions.col("doc_a"),
+              org.apache.spark.sql.functions.col("doc_b"))).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(registered == direct, "artifact-backed LSH clustering changed the labels")
+    }
   }
 
   test("registered IVF ANN fits the codebook at most once, then loads the Puffin blob") {

@@ -42,60 +42,62 @@ final class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partial top-k matches an independent ranking on a LARGE query batch") {
-    // the window formulation this aggregate replaced made nQueries
-    // corpus-sized partitions — the failure mode only shows at batch
-    // scale, so rank 200 queries (40% of the sf0.001 corpus) and compare
-    // against a driver-side oracle that mirrors the codegen cosine
-    // bit-for-bit (float→double, index-order accumulation, HALF_UP round)
-    val k = 5
-    val nQ = 200
-    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; nx += x * x; ny += y * y; i += 1
+    QueryScope.run {
+      // the window formulation this aggregate replaced made nQueries
+      // corpus-sized partitions — the failure mode only shows at batch
+      // scale, so rank 200 queries (40% of the sf0.001 corpus) and compare
+      // against a driver-side oracle that mirrors the codegen cosine
+      // bit-for-bit (float→double, index-order accumulation, HALF_UP round)
+      val k = 5
+      val nQ = 200
+      val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+      def cos(a: Array[Float], b: Array[Float]): Double = {
+        var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+        val n = math.min(a.length, b.length)
+        while (i < n) {
+          val x = a(i).toDouble; val y = b(i).toDouble
+          dot += x * y; nx += x * x; ny += y * y; i += 1
+        }
+        BigDecimal(dot / (math.sqrt(nx) * math.sqrt(ny)))
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       }
-      BigDecimal(dot / (math.sqrt(nx) * math.sqrt(ny)))
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val expected = (0L until nQ.toLong).flatMap { q =>
+        vecs.keys.filter(_ != q).toSeq
+          .map(n => (n, cos(vecs(q), vecs(n))))
+          .sortBy { case (n, c) => (-c, n) }
+          .take(k).zipWithIndex
+          .map { case ((n, c), i) => (q, n, c, i + 1) }
+      }.toSet
+      val got = Similarity.bruteForceTopK(spark, sfDir, nQ, k).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+      assert(got == expected, s"batch top-k diverged (${got.size} vs ${expected.size})")
     }
-    val expected = (0L until nQ.toLong).flatMap { q =>
-      vecs.keys.filter(_ != q).toSeq
-        .map(n => (n, cos(vecs(q), vecs(n))))
-        .sortBy { case (n, c) => (-c, n) }
-        .take(k).zipWithIndex
-        .map { case ((n, c), i) => (q, n, c, i + 1) }
-    }.toSet
-    val got = Similarity.bruteForceTopK(spark, sfDir, nQ, k).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(got == expected, s"batch top-k diverged (${got.size} vs ${expected.size})")
-    CacheRegistry.releaseAll()
   }
 
   test("kNN graph: complete ranked per-vector output, recall vs exact on the query slice") {
-    val g = Similarity.knnGraph(spark, sfDir, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val byQ = g.groupBy(_._1)
-    assert(byQ.nonEmpty)
-    // ranks are 1..n gap-free and scores non-increasing per vector
-    byQ.values.foreach { rows =>
-      val sorted = rows.sortBy(_._4)
-      assert(sorted.map(_._4).toSeq == (1 to sorted.length))
-      assert(sorted.toSeq.sliding(2).forall {
-        case Seq(a, b) => a._3 >= b._3
-        case _ => true
-      })
+    QueryScope.run {
+      val g = Similarity.knnGraph(spark, sfDir, 5).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      val byQ = g.groupBy(_._1)
+      assert(byQ.nonEmpty)
+      // ranks are 1..n gap-free and scores non-increasing per vector
+      byQ.values.foreach { rows =>
+        val sorted = rows.sortBy(_._4)
+        assert(sorted.map(_._4).toSeq == (1 to sorted.length))
+        assert(sorted.toSeq.sliding(2).forall {
+          case Seq(a, b) => a._3 >= b._3
+          case _ => true
+        })
+      }
+      // recall vs the exact top-5 on the same query slice the ANN ops pin
+      val exact = Similarity.bruteForceTopK(spark, sfDir, 5, 5).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val got = g.filter(_._1 < 5).map(t => (t._1, t._2)).toSet
+      val recall = exact.count(got.contains).toDouble / exact.size
+      assert(recall >= 0.25, s"kNN graph recall $recall")
     }
-    // recall vs the exact top-5 on the same query slice the ANN ops pin
-    val exact = Similarity.bruteForceTopK(spark, sfDir, 5, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = g.filter(_._1 < 5).map(t => (t._1, t._2)).toSet
-    val recall = exact.count(got.contains).toDouble / exact.size
-    assert(recall >= 0.25, s"kNN graph recall $recall")
-    CacheRegistry.releaseAll()
   }
 
   test("IVF-Flat ANN recall against the exact top-k") {
@@ -113,14 +115,15 @@ final class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("int8-quantized ANN: high recall vs exact top-k, deterministic, bounded reconstruction error") {
-    try {
+    QueryScope.run {
       val exact = Similarity.bruteForceTopK(spark, sfDir, 5, 10)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val quant = Similarity.quantizedTopK(spark, sfDir, 5, 10)
-        .select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      CacheRegistry.releaseAll()
+      val quant = QueryScope.run {
+        Similarity.quantizedTopK(spark, sfDir, 5, 10)
+          .select("query_id", "neighbor_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
       // 255 levels over the per-dimension range perturb cosine far less than
       // the 4x-oversampled candidate margin — near-total recall expected
       val recall = exact.count(quant.contains).toDouble / exact.size
@@ -130,7 +133,7 @@ final class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(again == quant)
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("int8 quantization reconstruction error is within qscale/2 per element") {

@@ -67,7 +67,7 @@ final class SkewStressSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("prefix plan's candidate stage and shuffles stay corpus-linear under the stopword") {
-    try {
+    QueryScope.run {
       val docs = Dedup.tokensPersisted(planted
         .select(col("doc_id"), col("source"), Dedup.wordSet(col("text")).as("ws")))
       // candidate pairs: rarity ranking keeps the stopword out of every
@@ -85,7 +85,7 @@ final class SkewStressSpec extends AnyFunSuite with BeforeAndAfterAll {
       val bound = 10L * N
       assert(counts.max <= bound,
         s"a shuffle carried ${counts.max} rows (> $bound) under the planted stopword")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("chunk dedup under a planted boilerplate chunk: no hash key ever carries the corpus") {
@@ -183,7 +183,7 @@ final class SkewStressSpec extends AnyFunSuite with BeforeAndAfterAll {
       concat(lit("unique"), col("id"), lit(" filler"), col("id") * 7).as("text"))
     dups.unionByName(uniques).coalesce(2)
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    try {
+    QueryScope.run {
       val pairs = Dedup.minhashCandidates(spark, d.toString, 0.5, bucketCap = cap)
       val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // Scala restatement of saltBands: identical docs share every band
@@ -210,23 +210,24 @@ final class SkewStressSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"a shuffle carried ${counts.max} rows (> $bound) under the mass-dup corpus")
       assert(counts.max < M.toLong * (M - 1) / 2,
         "shuffles must stay below the single-bucket quadratic")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("sub-bucketing is a no-op on a corpus with no hot buckets") {
-    try {
+    QueryScope.run {
       val real = "/root/testdata/sf0.001"
-      val a = Dedup.minhashCandidates(spark, real, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      CacheRegistry.releaseAll()
+      val a = QueryScope.run {
+        Dedup.minhashCandidates(spark, real, 0.5)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      }
       val b = Dedup.minhashCandidates(spark, real, 0.5, bucketCap = Int.MaxValue)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(a === b, "default cap must not change cool-corpus candidates")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("containment chooser flips to the prefix-probe plan under the stopword") {
-    try {
+    QueryScope.run {
       val before = Dedup.containmentPrefixPlans.get()
       val out = Dedup.adaptiveContainment(planted, 0.9, statsHint = None)
       assert(out.count() == 0L)
@@ -235,6 +236,6 @@ final class SkewStressSpec extends AnyFunSuite with BeforeAndAfterAll {
       val counts = shuffleRecordCounts(out)
       assert(counts.nonEmpty && counts.max <= 10L * N,
         s"containment prefix-probe shuffle carried ${counts.max} rows")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 }

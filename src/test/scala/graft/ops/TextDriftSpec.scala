@@ -36,34 +36,35 @@ final class TextDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
     // TV(a) = 1/2(|2/3-2/5| + |1/3-2/5| + |0-1/5|) = 4/15
     // TV(b) = 1/2(|0-2/5| + |1/2-2/5| + |1/2-1/5|) = 2/5
     val d = docs((1L, "x x y", "a"), (2L, "y z", "b"))
-    try {
+    QueryScope.run {
       val out = TextOps.sourceDrift(d).collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
       assert(out("a") == ((3L, 8.0 / 30.0)))
       assert(out("b") == ((2L, 8.0 / 20.0)))
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("a source distributed exactly like the corpus has zero drift") {
     val d = docs((1L, "x x y", "a"), (2L, "x x y", "b"))
-    try {
+    QueryScope.run {
       val out = TextOps.sourceDrift(d).collect()
         .map(r => r.getString(0) -> r.getDouble(2)).toMap
       assert(out == Map("a" -> 0.0, "b" -> 0.0))
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("drift is bit-stable under repartitioning") {
     val base = docs(
       (1L, "x x y q r s t u v w", "a"), (2L, "y z z q a b c d", "b"),
       (3L, "m n o p q r", "c"), (4L, "x y z m n o", "a"))
-    try {
-      val once = TextOps.sourceDrift(base).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
-      CacheRegistry.releaseAll()
+    QueryScope.run {
+      val once = QueryScope.run {
+        TextOps.sourceDrift(base).collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+      }
       val again = TextOps.sourceDrift(base.repartition(7)).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
       assert(once == again)
-    } finally CacheRegistry.releaseAll()
+    }
   }
 }

@@ -76,12 +76,12 @@ final class TextSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sketch-then-verify top-k equals the exact full-vocabulary top-k") {
     val exact = graft.SparkEntry.queries("text_vocab_topk")(spark, sfDir)
     val sketched = graft.SparkEntry.queries("text_vocab_sketch_topk")(spark, sfDir)
-    try {
+    QueryScope.run {
       assert(sketched.schema.fieldNames.sameElements(exact.schema.fieldNames))
       val a = exact.collect().map(_.toSeq).toSeq
       val b = sketched.collect().map(_.toSeq).toSeq
       assert(a == b, "sketch-verified top-k diverged from the exact plan")
-    } finally CacheRegistry.releaseAll()
+    }
   }
 
   test("top-k stays exact under a capacity forcing constant eviction (Zipf skew)") {
@@ -96,13 +96,13 @@ final class TextSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (ws, id) => (id.toLong, ws.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("sketch-zipf")
-    try {
+    QueryScope.run {
       corpus.write.parquet(dir.resolve("documents.parquet").toString)
       val k = 5
       val res = TextOps.sketchVocabTopK(spark, dir.toString, k, capacity = 32)
         .select("rank", "token", "occurrences").collect()
       val expected = (1 to k).map(i => (i, s"tok$i", (3000 / i).toLong))
       assert(res.map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq == expected)
-    } finally CacheRegistry.releaseAll()
+    }
   }
 }

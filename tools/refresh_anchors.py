@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Refresh source-line anchors in COVERAGE.md.
 
-Anchors look like `src/main/scala/graft/table/IceTable.scala:129` (`newScan`)
-or `IceTable.scala:2036` (`toDFFor`). The line numbers drift as files are
+Anchors look like `src/main/scala/graft/table/IceTable.scala:129` (`newScan`),
+`IceTable.scala:2036` (`toDFFor`), or symbol first: `IceBucketExpr`
+(`Transforms.scala:373`). The line numbers drift as files are
 edited; the anchor map is the round-over-round audit trail, so stale numbers
 make audits chase the wrong code. This script finds each anchor, locates the
 cited symbol's DEFINITION in the file (def/val/class/object/trait), and
@@ -27,7 +28,8 @@ for p in glob.glob(os.path.join(ROOT, "src/**/*.scala"), recursive=True):
     BASENAMES.setdefault(os.path.basename(p), []).append(rel)
 
 ANCHOR = re.compile(
-    r"`(?P<path>[\w./-]+\.scala):(?P<line>\d+)`"
+    r"`(?P<sym_first>[\w.]+)`\s*\(`(?P<path_after>[\w./-]+\.scala):(?P<line_after>\d+)`\)"
+    r"|`(?P<path>[\w./-]+\.scala):(?P<line>\d+)`"
     r"(?P<symref>\s*\(`(?P<sym>[^`]+)`)?")
 
 DEF = "(?:def|val|lazy val|var|class|object|trait|final class|final case class|case class)"
@@ -67,7 +69,11 @@ def refresh(md_path, check_only):
     drift, unresolved = [], []
 
     def sub(m):
-        path, line, sym = m.group("path"), int(m.group("line")), m.group("sym")
+        if m.group("sym_first"):
+            path, line, sym = (m.group("path_after"), int(m.group("line_after")),
+                               m.group("sym_first"))
+        else:
+            path, line, sym = m.group("path"), int(m.group("line")), m.group("sym")
         rel = resolve_path(path)
         if rel is None:
             unresolved.append(f"{path}:{line} (file not found / ambiguous)")
@@ -80,7 +86,7 @@ def refresh(md_path, check_only):
             return m.group(0)
         if new != line:
             drift.append(f"{path}:{line} -> :{new} ({sym})")
-        return f"`{path}:{new}`" + (m.group("symref") or "")
+        return m.group(0).replace(f"`{path}:{line}`", f"`{path}:{new}`", 1)
 
     out = ANCHOR.sub(sub, text)
     for d in drift:
