@@ -37,6 +37,23 @@ object Bench {
     }
   }
 
+  /** The per-query shuffle-record map of a committed board, or empty
+    * unless that board ran at the same scale factor (`sfLabel`) and core
+    * count (`cpus`). Record counts follow the data and
+    * `spark.sql.shuffle.partitions`, which is the core count, so a map
+    * from another sf or core count would classify queries as "changed
+    * plan" and poison the signal.
+    */
+  def prevRecords(boardText: String, sfLabel: String, cpus: String): Map[String, Long] = {
+    def field(key: String) = ("\"" + key + "\":\"?([^\",}]+)").r
+      .findFirstMatchIn(boardText).map(_.group(1))
+    if (!field("sf").contains(sfLabel) || !field("cpus").contains(cpus)) Map.empty
+    else """"shuffle_records":\{([^}]*)\}""".r.findFirstMatchIn(boardText)
+      .map(m => """"([a-z0-9_]+)":(\d+)""".r.findAllMatchIn(m.group(1))
+        .map(p => p.group(1) -> p.group(2).toLong).toMap)
+      .getOrElse(Map.empty)
+  }
+
   /** Runs one untimed warm-up step. A failure is reported on stderr, as a
     * failed query is, and the run goes on.
     */
@@ -234,9 +251,9 @@ object Bench {
       val total = if (timings.nonEmpty) timings.map(_._2).sum else 0.0
       val sfLabel = sfDir.split('/').lastOption.getOrElse(sfDir)
       if (valueLast)
-        s"""{"metric":"total","unit":"sec","queries":$qs,"sf":"$sfLabel"$extra,"value":${f2(total)}}"""
+        s"""{"metric":"total","unit":"sec","queries":$qs,"sf":"$sfLabel","cpus":$cpus$extra,"value":${f2(total)}}"""
       else
-        s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs,"sf":"$sfLabel"}"""
+        s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs,"sf":"$sfLabel","cpus":$cpus}"""
     }
     // fixed-work ambient calibration (r18 verdict item 4): a constant CPU
     // loop + one tiny fixed Spark job, min-of-3, measured INSIDE this
@@ -317,20 +334,10 @@ object Bench {
     // flat calibration ⇒ any common-subset wall delta is ambient (the
     // r19 noise law), stated by the artifact itself instead of a manual
     // probe session.
-    val prevRecs: Map[String, Long] = try {
-      val prevText = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("BENCH_LOCAL.json"))
-      // record counts are only comparable at the SAME scale factor: a
-      // committed map from another sf would classify every query as
-      // "changed plan" and poison the signal
-      val sameSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(prevText)
-        .exists(_.group(1) == sfDir.split('/').lastOption.getOrElse(sfDir))
-      if (!sameSf) Map.empty
-      else """"shuffle_records":\{([^}]*)\}""".r.findFirstMatchIn(prevText)
-        .map(m => """"([a-z0-9_]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-          .map(p => p.group(1) -> p.group(2).toLong).toMap)
-        .getOrElse(Map.empty)
-    } catch { case _: Throwable => Map.empty }
+    val prevRecs: Map[String, Long] = try prevRecords(
+      java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_LOCAL.json")),
+      sfDir.split('/').lastOption.getOrElse(sfDir), cpus)
+    catch { case _: Throwable => Map.empty }
     val shufCommon = shufRecs.keys.filter(prevRecs.contains).toSeq
     val shufEqual = shufCommon.count(k => prevRecs(k) == shufRecs(k))
     val shufShort =

@@ -14,13 +14,13 @@ import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.graftshim.{BoundLiteralExecution, GraftShim}
 import org.apache.spark.sql.types.{DataType, Decimal, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -57,6 +57,13 @@ import graft.meta.{DataFile, FileIO, PartitionSpec, SortOrder}
   * and its NaN counts are counted as rows pass when
   * `write.metadata.nan-counts.enabled` is set. The partition tuple comes
   * from the row's transform values.
+  *
+  * The job runs through a [[BoundLiteralExecution]]: the literals of its
+  * filters and projections (a commit's key range, an upsert's new value)
+  * are read from the plan's references instead of being inlined into the
+  * generated Java source, so every commit of one shape reuses the classes
+  * the first one compiled. The job's Hadoop conf reaches the tasks as one
+  * broadcast, destroyed when the job ends.
   *
   * A task that gets no rows opens no file. A failed task attempt deletes
   * every file it opened, so only files of attempts that `collect` returns
@@ -213,14 +220,16 @@ object DataWriter {
     ioSettings.foreach { case (k, v) => hadoopConf.set(k, v) }
     val job = Job.getInstance(hadoopConf)
     ParquetUtils.prepareWrite(sqlConf, job, fileSchema, new ParquetOptions(options, sqlConf))
-    val task = WriteTask(new SerializableConfiguration(job.getConfiguration), ioSettings,
+    // the conf carries the whole session conf (~1,100 entries, ~113 KB):
+    // broadcast once per job, not serialized into every task's closure. A
+    // local-mode task reads the driver's object; tasks only read it
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val task = WriteTask(conf, ioSettings,
       fileSchema, clustered.schema.drop(fileColumns).map(_.dataType), spec, schema,
       nameToId, provider, UUID.randomUUID().toString, maxRecords, properties, content,
       fullBoundsFieldIds, nanFields)
-    val qe = clustered.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
-      qe.toRdd.mapPartitions(task.run).collect().toSeq
-    }
+    try BoundLiteralExecution.collect(clustered)(task.run).toSeq
+    finally conf.destroy()
   }
 
   /** A float/double column whose NaNs are counted: ordinal, field id. */
@@ -228,7 +237,7 @@ object DataWriter {
 
   /** Everything one write job's tasks share; [[run]] is the task body. */
   private final case class WriteTask(
-      conf: SerializableConfiguration,
+      conf: Broadcast[SerializableConfiguration],
       ioSettings: Map[String, String],
       fileSchema: StructType,
       keyTypes: Seq[DataType],
@@ -247,7 +256,7 @@ object DataWriter {
       // executors run in JVMs whose FileIO never saw configure()
       FileIO.ensureApplied(ioSettings)
       val tc = TaskContext.get()
-      val hadoopConf = conf.value
+      val hadoopConf = conf.value.value
       // per-column bloom settings: reading them walks every property of the
       // job conf, so once per task rather than once per file
       val bloomColumns = hadoopConf

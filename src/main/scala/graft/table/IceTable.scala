@@ -5,6 +5,7 @@ import scala.collection.parallel.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.BoundLiteralExecution
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.core._
@@ -1099,7 +1100,6 @@ final class IceTable private (
     */
   private def writeDVShards(spark: SparkSession,
       positions: org.apache.spark.sql.DataFrame, p: PendingSnapshot): Seq[DataFile] = {
-    import spark.implicits._
     val loc = location
     // plain locals: the executor closure below must not capture the producer
     val (snapId, seq, commitUuid) = (p.snapId, p.seq, p.commitUuid)
@@ -1107,15 +1107,15 @@ final class IceTable private (
     // driver's settings so property-registered schemes/credentials resolve
     // identically off-driver
     val ioSettings = graft.meta.FileIO.sparkHadoopSettings
-    val shards = positions.toDF("file_path", "pos")
-      .repartition(col("file_path")).as[(String, Long)]
-      .mapPartitions { it =>
+    // bound literals: a delete's key range reuses the compiled scan code
+    val shards = BoundLiteralExecution.collect(
+      positions.toDF("file_path", "pos").repartition(col("file_path"))) { it =>
         graft.meta.FileIO.ensureApplied(ioSettings)
         val bms = scala.collection.mutable.LinkedHashMap
           .empty[String, org.roaringbitmap.longlong.Roaring64NavigableMap]
-        it.foreach { case (p, pos) =>
-          bms.getOrElseUpdate(p,
-            new org.roaringbitmap.longlong.Roaring64NavigableMap()).addLong(pos)
+        it.foreach { row =>
+          bms.getOrElseUpdate(row.getUTF8String(0).toString,
+            new org.roaringbitmap.longlong.Roaring64NavigableMap()).addLong(row.getLong(1))
         }
         if (bms.isEmpty) Iterator.empty
         else {
@@ -1141,7 +1141,7 @@ final class IceTable private (
             (puffinPath, ref, d.offset, d.length, bm.getLongCardinality, fileLen)
           }
         }
-      }.collect()
+      }
     shards.toSeq.sortBy(s => (s._2, s._1)).map {
       case (puffinPath, ref, off, len, card, fileLen) =>
         DataFile(content = 1, filePath = puffinPath, fileFormat = "puffin",

@@ -52,4 +52,18 @@ final class BenchReportingSpec extends AnyFunSuite {
     assert(prev.get("ice_dv_scan").contains(13.8))
     assert(!prev.contains("value"))
   }
+
+  test("prevRecords compares shuffle records only against a board of the same sf and core count") {
+    def board(cpus: String) =
+      s"""{"metric":"total","value":1.00,"unit":"sec","queries":{"q1":0.5},"sf":"sf0.1"$cpus,""" +
+        """"shuffle_records":{"q1":12,"q2":40}}"""
+    assert(Bench.prevRecords(board(""","cpus":4"""), "sf0.1", "4") ===
+      Map("q1" -> 12L, "q2" -> 40L))
+    // another core count shuffles into another partition count
+    assert(Bench.prevRecords(board(""","cpus":8"""), "sf0.1", "4").isEmpty)
+    assert(Bench.prevRecords(board(""","cpus":4"""), "sf0.1", "48").isEmpty)
+    // a board from before the core count was recorded is not comparable
+    assert(Bench.prevRecords(board(""), "sf0.1", "4").isEmpty)
+    assert(Bench.prevRecords(board(""","cpus":4"""), "sf1", "4").isEmpty)
+  }
 }
