@@ -3,10 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 
 import graft.meta.ManifestIO
-import graft.table.{IceScan, IceTable}
+import graft.table.IceTable
 
 /** Streaming surface (reference §2.9: append-stream ingest +
   * incremental snapshot consumption).
@@ -236,13 +236,7 @@ object Ingest {
           }
           .map(_.dataFile)
       }
-    if (newFiles.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        table.schema.toSpark)
-    else {
-      graft.GraftSession.ensurePrepared(spark)
-      IceScan.readFiles(spark, table.schema.toSpark, newFiles)
-    }
+    table.readAdded(spark, newFiles)
   }
 
   /** CDC changelog from `sinceSnapshotId` (exclusive) to the current head:
@@ -259,16 +253,24 @@ object Ingest {
   }
 
   /** CDC changelog over (sinceSeq, untilSeq]: appends surface as 'I' rows
-    * (same manifest diff as [[changesBetween]]); positional-delete
-    * snapshots — parquet delete files AND v3 deletion vectors — surface as
-    * 'D' rows, reconstructed by semi-joining the referenced data files
-    * against the snapshot's (file_path, pos) delete set. The D-side cost
-    * is proportional to the files the delete touched, never the table.
+    * (same manifest diff as [[changesBetween]]); every `delete` snapshot —
+    * parquet position deletes, v3 deletion vectors, equality deletes and
+    * whole-file drops — surfaces as 'D' rows
+    * ([[graft.table.IceTable.removedRows]]). A row is emitted at most once,
+    * at its first deletion: a delete snapshot's D rows are the rows live at
+    * its parent and dead at the snapshot, so a position two overlapping
+    * predicates both record, or one killed before `sinceSeq`, is not
+    * emitted again. Every row reads through the scan's per-file resolution
+    * with the deletes applied in the scan task, and building the frame
+    * submits no Spark job. The D-side cost is proportional to the files
+    * whose deletes the snapshot changed, never the table.
     *
-    * Aborts (like the incremental read) on `overwrite` — equality-delete
-    * upserts record no pre-image to emit — and on `replace`: compaction
-    * inside the range re-homes earlier appends, making the append diff
-    * unreconstructable. A compaction AFTER `untilSeq` is fine as long as
+    * Aborts (like the incremental read) on `overwrite` — an upsert's
+    * equality deletes and its new rows share one snapshot, which records no
+    * pre-image to pair with them — and on `replace`: compaction inside the
+    * range re-homes earlier appends, making the append diff
+    * unreconstructable. A delete snapshot whose parent has expired fails
+    * too, naming both. A compaction AFTER `untilSeq` is fine as long as
     * the superseded files haven't been expired + orphan-cleaned yet; a
     * changelog consumer reads promptly or pins a branch ref.
     */
@@ -276,9 +278,8 @@ object Ingest {
       sinceSeq: Long, untilSeq: Long): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType}
     val meta = table.metadata
-    val sparkSchema = table.schema.toSpark
     def empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      sparkSchema.add("change_type", StringType).add("change_seq", LongType))
+      table.schema.toSpark.add("change_type", StringType).add("change_seq", LongType))
     val ancestry = mainAncestry(meta)
     val ancestryIds = ancestry.map(_.snapshotId).toSet
     val until = ancestry.filter(_.sequenceNumber <= untilSeq)
@@ -293,13 +294,11 @@ object Ingest {
     if (bad.nonEmpty)
       throw new IllegalStateException("changelog cannot represent: " +
         bad.map(s => s"${s.snapshotId}(${opOf(s.snapshotId)})").mkString(", "))
-    graft.GraftSession.ensurePrepared(spark)
-    val parts = Seq.newBuilder[DataFrame]
     // inserts: the until-snapshot's manifest diff, grouped by commit seq.
     // Entry-level seq selection (not Added status) so appends merged away
     // by an in-range merge-append commit — demoted to Existing but keeping
     // their original seq/snapshotId — still surface as 'I' rows
-    ManifestIO.readManifestList(until.manifestList)
+    val inserts = ManifestIO.readManifestList(until.manifestList)
       .filter(m => m.content == 0 && m.sequenceNumber > sinceSeq)
       .flatMap { m =>
         ManifestIO.readManifest(m.path, meta.specs, table.schema)._2
@@ -314,90 +313,12 @@ object Ingest {
           .map(e => (e.sequenceNumber.getOrElse(m.sequenceNumber), e.dataFile))
       }
       .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
-      .foreach { case (seq, files) =>
-        parts += IceScan.readFiles(spark, sparkSchema, files)
-          .withColumn("change_type", lit("I")).withColumn("change_seq", lit(seq))
-      }
-    // deletes: each delete snapshot's added (file_path, pos) set, inverted
-    // into rows via a semi-join on the referenced data files. A position is
-    // emitted at most ONCE, at its FIRST deletion (ADVICE r12):
-    // deleteWhere/deleteWhereDV match against raw parquet without
-    // subtracting already-dead positions, so two overlapping predicates
-    // record the same position in two snapshots — and a position killed
-    // before sinceSeq may reappear in an in-range delete file. Both are
-    // subtracted by anti-joining against the accumulated dead set, seeded
-    // with the pre-range delete files still live in the until manifest list.
-    val priorDeleteFiles = ManifestIO.readManifestList(until.manifestList)
-      .filter(_.content == 1)
-      .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, table.schema)._2
-        .filter(e => e.status != graft.meta.ManifestEntryStatus.Deleted &&
-          e.sequenceNumber.getOrElse(m.sequenceNumber) <= sinceSeq)
-        .map(_.dataFile))
-      .filter(_.content == 1)
-    var dead: Option[DataFrame] =
-      if (priorDeleteFiles.isEmpty) None
-      else {
-        val (dvs, pq) = priorDeleteFiles.partition(_.fileFormat == "puffin")
-        Some(IceScan.positionsOf(spark, pq, dvs))
-      }
-    inRange.filter(s => opOf(s.snapshotId) == "delete")
-      .sortBy(_.sequenceNumber).foreach { s =>
-      // metadata-only drops: data files removed WHOLE by this delete
-      // snapshot (deleteWhere's strict-metrics path) record no (path, pos)
-      // rows — their live rows at drop time ARE the D set. Live = the
-      // file's rows minus every position already dead: pre-range kills sit
-      // in the seeded prior set, in-range kills accumulated below — both in
-      // `dead`. Cost stays proportional to the dropped files, not the table.
-      val dropped = ManifestIO.readManifestList(s.manifestList)
-        .filter(m => m.content == 0 && m.sequenceNumber == s.sequenceNumber)
-        .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, table.schema)._2
-          .filter(e => e.status == graft.meta.ManifestEntryStatus.Deleted &&
-            e.snapshotId == s.snapshotId)
-          .map(_.dataFile))
-      if (dropped.nonEmpty) {
-        val rows = IceScan.readFiles(spark, sparkSchema, dropped)
-          .withColumn("file_path", IceScan.normalizedMetaPath)
-          .withColumn("pos", col("_metadata.row_index"))
-        val live = dead match {
-          case Some(d) => rows.join(d, Seq("file_path", "pos"), "left_anti")
-          case None => rows
-        }
-        parts += live.drop("file_path", "pos")
-          .withColumn("change_type", lit("D"))
-          .withColumn("change_seq", lit(s.sequenceNumber))
-      }
-      val added = ManifestIO.readManifestList(s.manifestList)
-        .filter(m => m.content == 1 && m.sequenceNumber == s.sequenceNumber)
-        .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, table.schema)._2
-          .filter(e => e.status == graft.meta.ManifestEntryStatus.Added &&
-            e.snapshotId == s.snapshotId)
-          .map(_.dataFile))
-        .filter(_.content == 1)
-      if (added.nonEmpty) {
-        val (dvs, pq) = added.partition(_.fileFormat == "puffin")
-        val raw = IceScan.positionsOf(spark, pq, dvs)
-        // first-deletion-only: drop positions already dead (delete sets are
-        // metadata-sized, so the anti-join is never corpus-scale)
-        val pairs = dead match {
-          case Some(d) => raw.join(d, Seq("file_path", "pos"), "left_anti")
-          case None => raw
-        }
-        import spark.implicits._
-        val dataPaths = pairs.select("file_path").distinct().as[String].collect()
-        if (dataPaths.nonEmpty)
-          parts += spark.read.schema(sparkSchema).parquet(dataPaths.toIndexedSeq: _*)
-            .withColumn("file_path", IceScan.normalizedMetaPath)
-            .withColumn("pos", col("_metadata.row_index"))
-            .join(pairs, Seq("file_path", "pos"), "leftsemi")
-            .drop("file_path", "pos")
-            .withColumn("change_type", lit("D"))
-            .withColumn("change_seq", lit(s.sequenceNumber))
-        dead = Some(dead.map(_.unionByName(raw)).getOrElse(raw))
-      }
-    }
-    parts.result() match {
-      case Seq() => empty
-      case ps => ps.reduce(_.unionByName(_))
-    }
+      .map { case (seq, files) => ("I", seq, table.readAdded(spark, files)) }
+    val deletes = inRange.filter(s => opOf(s.snapshotId) == "delete")
+      .sortBy(_.sequenceNumber)
+      .map(s => ("D", s.sequenceNumber, table.removedRows(spark, s.snapshotId)))
+    (inserts ++ deletes).map { case (kind, seq, rows) =>
+      rows.withColumn("change_type", lit(kind)).withColumn("change_seq", lit(seq))
+    }.reduceOption(_.unionByName(_)).getOrElse(empty)
   }
 }

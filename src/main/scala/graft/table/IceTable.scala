@@ -3,7 +3,7 @@ package graft.table
 import java.util.UUID
 import scala.collection.parallel.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.BoundLiteralExecution
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -212,9 +212,9 @@ final class IceTable private (
   /** Write-audit-publish PUBLISH step: fast-forward `main` to `branch`'s
     * head. Requires main's current head to be an ancestor of the branch
     * head (the fast-forward condition — anything else would silently drop
-    * main-only commits; that case needs a cherry-pick, which this engine
-    * doesn't model). Metadata-only: current pointer, main ref, and a
-    * snapshot-log entry; no data or manifest movement.
+    * main-only commits; that case needs a [[cherryPick]]). Metadata-only:
+    * current pointer, main ref, and a snapshot-log entry; no data or
+    * manifest movement.
     */
   def fastForwardMain(branch: String): Unit =
     commitWithRequirements(Seq(AssertTableUUID(meta.tableUuid)), { m =>
@@ -240,56 +240,6 @@ final class IceTable private (
         lastUpdatedMs = now)
     })
 
-  /** Cherry-pick an APPEND snapshot onto the current main head — the
-    * publish path for a WAP branch that [[fastForwardMain]] refuses
-    * because main advanced past the branch point. The staged snapshot's
-    * added files are re-committed as a fresh append at a NEW sequence
-    * number (entries rewritten, not aliased — the files' delete-
-    * applicability horizon must be the publish point, not the stage
-    * point). Only appends are representable: an overwrite/delete snapshot
-    * re-applied onto a moved main could delete rows it never saw.
-    *
-    * Duplicate-publish protection (Iceberg's cherrypick records the staged
-    * id and refuses a second publish): each pick stamps
-    * `source-snapshot-id` on its commit summary, and a pick is refused
-    * when the source is already on main's ancestry (published by
-    * fast-forward) or any main-ancestry commit already records it — a
-    * retried pick would otherwise silently double the rows.
-    */
-  def cherryPickAppend(snapshotId: Long): Snapshot = synchronized {
-    val src = meta.snapshotById(snapshotId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $snapshotId"))
-    require(src.summary.get("operation").forall(_ == "append"),
-      s"only append snapshots cherry-pick; $snapshotId is " +
-        src.summary.getOrElse("operation", "?"))
-    @annotation.tailrec
-    def assertUnpublished(id: Option[Long]): Unit = id match {
-      case None => ()
-      case Some(i) =>
-        require(i != snapshotId,
-          s"snapshot $snapshotId is already on main — refusing duplicate publish")
-        val sn = meta.snapshotById(i)
-        sn.foreach(s => require(
-          !s.summary.get(IceTable.SourceSnapshotIdKey).contains(snapshotId.toString),
-          s"snapshot $snapshotId was already cherry-picked as ${s.snapshotId} — " +
-            "refusing duplicate publish"))
-        assertUnpublished(sn.flatMap(_.parentSnapshotId))
-    }
-    assertUnpublished(meta.currentSnapshotId)
-    val files = ManifestIO.readManifestList(src.manifestList)
-      .filter(m => m.content == 0 && m.addedSnapshotId == snapshotId)
-      .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, schema)._2
-        .filter(e => e.status == ManifestEntryStatus.Added &&
-          e.snapshotId == snapshotId)
-        .map(_.dataFile))
-    require(files.nonEmpty, s"snapshot $snapshotId added no data files")
-    retryOnConflict {
-      val p = newSnapshot()
-      p.commit("append", p.onParent(Seq(p.manifest(files, spec))),
-        extraSummary = Map(IceTable.SourceSnapshotIdKey -> snapshotId.toString))
-    }
-  }
-
   /** Attach the spec's per-ref retention policy (reference
     * `table/refs.go:40-45`): expiry reads these over its call arguments.
     * `None` keeps a field unset — "retain forever" for `maxRefAgeMs`,
@@ -310,6 +260,57 @@ final class IceTable private (
   def scan(spark: SparkSession, filter: IcePredicate = AlwaysTrue,
       selected: Option[Seq[String]] = None): DataFrame =
     newScan(filter, selected).toDF(spark)
+
+  /** The rows `files` hold as the current schema reads them, no delete
+    * applied: what an append added, for incremental reads and the
+    * changelog's inserts. Same per-file resolution as a scan; building the
+    * frame submits no Spark job.
+    */
+  private[graft] def readAdded(spark: SparkSession, files: Seq[DataFile]): DataFrame =
+    newScan().toDFFor(spark, files.map(FileScanTask(_, Nil)))
+
+  /** The rows snapshot `snapshotId` removed: live at its parent and dead at
+    * it (Iceberg's `DeletedRowsScanTask` and `DeletedDataFileScanTask`).
+    * Both snapshots are planned. The files read are those whose matched
+    * deletes changed — position deletes, deletion vectors and equality
+    * deletes alike — and those the snapshot dropped. A kept file passes the
+    * rows its parent's deletes keep and its own deletes kill; a dropped
+    * file passes the rows its parent's deletes keep. The files are read
+    * with the current schema through the scan's per-file resolution, both
+    * delete filters in the task, and building the frame submits no Spark
+    * job. An expired parent fails the call: without its plan, the removed
+    * rows cannot be told from rows dead before.
+    */
+  private[graft] def removedRows(spark: SparkSession, snapshotId: Long): DataFrame = {
+    val snap = meta.snapshotById(snapshotId).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot $snapshotId"))
+    val before = snap.parentSnapshotId.toSeq.flatMap { id =>
+      if (meta.snapshotById(id).isEmpty) throw new IllegalStateException(
+        s"rows removed by snapshot $snapshotId need its parent snapshot $id, which has expired")
+      newScan(snapshotId = Some(id)).planFiles()
+    }
+    val after = newScan(snapshotId = Some(snapshotId)).planFiles()
+      .map(t => t.file.filePath -> t).toMap
+    def deletesOf(t: FileScanTask) = (t.deletes.map(_.filePath).toSet,
+      t.dvDeletes.map(f => (f.filePath, f.contentOffset)).toSet,
+      t.eqDeletes.map(_._1.filePath).toSet)
+    val (kept, dropped) = before
+      .filter(t => after.get(t.file.filePath).forall(a => deletesOf(a) != deletesOf(t)))
+      .partition(t => after.contains(t.file.filePath))
+    val was = DeleteFilter(spark, kept ++ dropped, schema)
+    val now = DeleteFilter(spark, kept.map(t => after(t.file.filePath)), schema)
+    def live(f: Option[DeleteFilter])(key: NestedField => Column): Column =
+      f.fold(lit(true))(_.live(key))
+    val scan = newScan()
+    def read(tasks: Seq[FileScanTask])(keep: (NestedField => Column) => Column) =
+      Option.when(tasks.nonEmpty)(
+        scan.readTasksProjected(spark, tasks, schema, stampPathPos = false, Some(keep)))
+    graft.GraftSession.ensurePrepared(spark)
+    Seq(read(kept)(k => live(was)(k) && !live(now)(k)), read(dropped)(live(was)))
+      .flatten.reduceOption(_.unionByName(_))
+      .getOrElse(spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        schema.toSpark))
+  }
 
   // ---------------------------------------------------------------- append
   /** Fast-append (reference `transaction.go:365-398` +
@@ -855,10 +856,11 @@ final class IceTable private (
 
   /** Shared full-rewrite skeleton for [[compact]] and [[rewriteZOrdered]]:
     * plan the live files, re-cluster their rows with `transform`, write,
-    * swap atomically. The MOR rule lives HERE, once: a raw parquet read
-    * would RESURRECT deleted rows (the rewrite gets a new sequence number,
-    * so old positional/equality/DV deletes stop applying) — rewrite
-    * through the delete-applying scan whenever any deletes exist.
+    * swap atomically. The rows come from the scan itself, so the rewrite
+    * keeps exactly what a read returns: merge-on-read deletes applied (the
+    * rewrite gets a new sequence number, so old deletes stop applying),
+    * name-mapped ID-less files resolved by alias and initial defaults
+    * filled.
     */
   private def rewriteAllFiles(spark: SparkSession)(
       transform: DataFrame => DataFrame): Snapshot = {
@@ -866,21 +868,15 @@ final class IceTable private (
     // ids are read through the lineage scan and MATERIALIZED into the new
     // files' `_row_id` column (Iceberg v3 spec: rewrites must preserve
     // row ids) — the read side prefers the materialized column
-    val preserveLineage = meta.formatVersion >= 3
-    val scan = newScan(withRowId = preserveLineage)
+    val scan = newScan(withRowId = meta.formatVersion >= 3)
     val tasks = scan.planFiles()
     val oldPaths = tasks.map(_.file.filePath).toSet
     graft.GraftSession.ensurePrepared(spark)
-    val hasDeletes = tasks.exists(t =>
-      t.deletes.nonEmpty || t.eqDeletes.nonEmpty || t.dvDeletes.nonEmpty)
-    val source =
-      if (hasDeletes || preserveLineage) scan.toDFFor(spark, tasks)
-      else IceScan.readFiles(spark, schema.toSpark, tasks.map(_.file))
     // the REAL spec, not Unpartitioned: replacement files registered under
     // a partitioned spec with empty tuples would read back as all-null
     // partition values, and partition-filtered scans would silently prune
     // every compacted file
-    val newFiles = DataWriter.write(transform(source),
+    val newFiles = DataWriter.write(transform(scan.toDFFor(spark, tasks)),
       location, rewriteSchema, spec, properties = meta.properties,
       avgRowBytesHint = avgRowBytes)
     replaceDataFiles(oldPaths, newFiles, operation = "replace")
@@ -1023,15 +1019,23 @@ final class IceTable private (
       DataWriter.writePositionDeletes(clustered.sortWithinPartitions("file_path", "pos"),
         "__range", location, meta.properties)
     }
-    val p = newSnapshot()
+    commitDelete(newSnapshot(), fullMatch, files)
+  }
+
+  /** The commit both positional deletes end in: strictly matched files drop
+    * whole through [[replaceDataFiles]], with the new delete files in the
+    * same snapshot; otherwise the delete files append as one delete
+    * manifest. A delete that matched no row commits nothing rather than an
+    * empty delete manifest every later list would carry and every scan
+    * would read.
+    */
+  private def commitDelete(p: PendingSnapshot, fullMatch: Seq[FileScanTask],
+      files: Seq[DataFile]): Option[Snapshot] =
     if (fullMatch.nonEmpty)
       Some(replaceDataFiles(fullMatch.map(_.file.filePath).toSet, Nil, "delete", files, p))
-    // no row matched: commit nothing rather than an empty delete manifest
-    // every later list would carry and every scan would read
     else if (files.isEmpty) None
     else Some(p.commit("delete",
       p.onParent(Seq(p.manifest(files, PartitionSpec.GlobalDeletes, content = 1)))))
-  }
 
   /** The metadata-only split both positional deletes share (reference
     * `strictMetricsEval` `table/evaluators.go:1200-1565`, built for exactly
@@ -1084,12 +1088,7 @@ final class IceTable private (
       // drop as Deleted entries; only partial files earn a deletion vector
       val (fullMatch, _, matches) = splitDelete(spark, filter)
       val p = newSnapshot()
-      val files = matches.toSeq.flatMap(writeDVShards(spark, _, p))
-      if (fullMatch.nonEmpty)
-        Some(replaceDataFiles(fullMatch.map(_.file.filePath).toSet, Nil, "delete", files, p))
-      else if (files.isEmpty) None
-      else Some(p.commit("delete",
-        p.onParent(Seq(p.manifest(files, PartitionSpec.GlobalDeletes, content = 1)))))
+      commitDelete(p, fullMatch, matches.toSeq.flatMap(writeDVShards(spark, _, p)))
     }
 
   /** Distributed deletion-vector materialization: one hash shuffle
@@ -1211,8 +1210,8 @@ final class IceTable private (
     val keyFields = affected.flatMap(_.eqDeletes).flatMap(_._1.equalityIds).distinct
       .map(schemaNow.byId)
     Some(scan.readTasksProjected(spark, affected, IceSchema(-1, keyFields),
-        stampPathPos = true, deletes = DeleteFilter(spark, affected, schemaNow),
-        killed = true)
+        stampPathPos = true,
+        keep = DeleteFilter(spark, affected, schemaNow).map(dl => k => !dl.live(k)))
       .select(col("__path").as("file_path"), col("__pos").as("pos")))
   }
 
@@ -1355,41 +1354,52 @@ final class IceTable private (
     })
   }
 
-  /** Cherry-pick an APPEND snapshot onto the current head: its added files
-    * are re-committed as a new snapshot with a fresh sequence number.
-    * Typical after a rollback orphaned good commits, or to promote a
-    * staged/WAP append. Only `append` snapshots are pickable — overwrite
-    * and delete semantics depend on the sequence position they originally
-    * committed at.
+  /** Cherry-pick an APPEND snapshot onto the current main head: its added
+    * files are re-committed as a fresh append at a NEW sequence number
+    * (entries rewritten, not aliased — the files' delete-applicability
+    * horizon must be the publish point, not the stage point). Typical after
+    * a rollback orphaned good commits, or to publish a WAP branch that
+    * [[fastForwardMain]] refuses because main advanced past the branch
+    * point. Only appends are representable: an overwrite/delete snapshot
+    * re-applied onto a moved main could delete rows it never saw.
+    *
+    * Duplicate-publish protection (Iceberg's cherrypick records the staged
+    * id and refuses a second publish): each pick stamps
+    * `source-snapshot-id` on its commit summary, and a pick is refused
+    * when the source is already on main's ancestry (published by
+    * fast-forward) or any main-ancestry commit already records it — a
+    * retried pick would otherwise silently double the rows.
     */
   def cherryPick(snapshotId: Long): Snapshot = synchronized {
     val src = meta.snapshotById(snapshotId).getOrElse(
       throw new IllegalArgumentException(s"no snapshot $snapshotId"))
-    // picking a snapshot already in the head's ancestry would re-commit its
-    // data files and duplicate every row it added (Iceberg cherrypick check)
-    val ancestry = Iterator.iterate(meta.currentSnapshotId.flatMap(meta.snapshotById))(
-        _.flatMap(s => s.parentSnapshotId.flatMap(meta.snapshotById)))
-      .takeWhile(_.isDefined).flatten.toSeq
-    require(!ancestry.exists(_.snapshotId == snapshotId),
-      s"snapshot $snapshotId is already an ancestor of the current head")
-    // duplicate-publish guard (same as cherryPickAppend): the PICK commit is
-    // a NEW snapshot id, so the ancestor check alone cannot see that X was
-    // already picked — the stamped source-snapshot-id can
-    require(!ancestry.exists(
-        _.summary.get(IceTable.SourceSnapshotIdKey).contains(snapshotId.toString)),
-      s"snapshot $snapshotId was already cherry-picked onto this branch")
-    require(src.summary.get("operation").contains("append"),
-      s"only append snapshots can be cherry-picked, " +
-        s"got ${src.summary.getOrElse("operation", "?")}")
-    val added = ManifestIO.readManifestList(src.manifestList)
+    require(src.summary.get("operation").forall(_ == "append"),
+      s"only append snapshots cherry-pick; $snapshotId is " +
+        src.summary.getOrElse("operation", "?"))
+    @annotation.tailrec
+    def assertUnpublished(id: Option[Long]): Unit = id match {
+      case None => ()
+      case Some(i) =>
+        require(i != snapshotId,
+          s"snapshot $snapshotId is already on main — refusing duplicate publish")
+        val sn = meta.snapshotById(i)
+        sn.foreach(s => require(
+          !s.summary.get(IceTable.SourceSnapshotIdKey).contains(snapshotId.toString),
+          s"snapshot $snapshotId was already cherry-picked as ${s.snapshotId} — " +
+            "refusing duplicate publish"))
+        assertUnpublished(sn.flatMap(_.parentSnapshotId))
+    }
+    assertUnpublished(meta.currentSnapshotId)
+    val files = ManifestIO.readManifestList(src.manifestList)
       .filter(m => m.content == 0 && m.addedSnapshotId == snapshotId)
-      .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, schema)._2)
-      .filter(e => e.status == ManifestEntryStatus.Added && e.snapshotId == snapshotId)
-      .map(_.dataFile)
-    require(added.nonEmpty, s"snapshot $snapshotId added no data files")
+      .flatMap(m => ManifestIO.readManifest(m.path, meta.specs, schema)._2
+        .filter(e => e.status == ManifestEntryStatus.Added &&
+          e.snapshotId == snapshotId)
+        .map(_.dataFile))
+    require(files.nonEmpty, s"snapshot $snapshotId added no data files")
     retryOnConflict {
       val p = newSnapshot()
-      p.commit("append", p.onParent(Seq(p.manifest(added, spec))),
+      p.commit("append", p.onParent(Seq(p.manifest(files, spec))),
         extraSummary = Map(IceTable.SourceSnapshotIdKey -> snapshotId.toString))
     }
   }
@@ -1565,8 +1575,8 @@ final class IceTable private (
       cols.map(f => Seq(f.id)).toSet)
     if (!appendOnly || !fieldsMatch) return analyzeTable(spark)
     val (prevSnap, prevSf) = prev.get
-    val newTasks = newScan(snapshotId = Some(snap.snapshotId)).planFiles()
-      .filter(_.dataSeq > prevSnap.sequenceNumber)
+    val scan = newScan(snapshotId = Some(snap.snapshotId), selected = Some(cols.map(_.name)))
+    val newTasks = scan.planFiles().filter(_.dataSeq > prevSnap.sequenceNumber)
     val prevBlobs = Puffin.readFooter(prevSf.statisticsPath)
       .filter(_.blobType == ThetaBlobType)
       .map(d => d.fields.head -> d).toMap
@@ -1579,11 +1589,7 @@ final class IceTable private (
             d.properties.getOrElse("null-count", "0").toLong)
         }
       } else {
-        val df = IceScan.readFiles(spark,
-            StructType(schema.toSpark.fields.filter(f => cols.exists(_.name == f.name))),
-            newTasks.map(_.file))
-          .select(cols.map(f => col(f.name)): _*)
-        val (fresh, _) = ThetaStats.sketchColumns(df)
+        val (fresh, _) = ThetaStats.sketchColumns(scan.toDFFor(spark, newTasks))
         cols.zip(fresh).map { case (f, st) =>
           val d = prevBlobs(f.id)
           val prevBytes = Puffin.readBlob(prevSf.statisticsPath, d.offset, d.length)
@@ -2272,7 +2278,7 @@ object IceTable {
 
   /** Summary key a cherry-picked commit stamps with the staged snapshot it
     * published (Iceberg's cherrypick records `source-snapshot-id` the same
-    * way) — the duplicate-publish guard in [[IceTable.cherryPickAppend]]
+    * way) — the duplicate-publish guard in [[IceTable.cherryPick]]
     * scans main's ancestry for it.
     */
   val SourceSnapshotIdKey = "source-snapshot-id"
@@ -2591,7 +2597,7 @@ final class IceScan(
 
     graft.GraftSession.ensurePrepared(spark)
     var df = readTasksProjected(spark, tasks, readSchema, stampPathPos = withRowId,
-      deletes = DeleteFilter(spark, tasks, schema))
+      keep = DeleteFilter(spark, tasks, schema).map(dl => dl.live _))
     if (withRowId) {
       // per-file (first_row_id, data sequence) via ONE metadata-sized
       // broadcast map; the materialized columns (rewrite-preserved) win
@@ -2628,19 +2634,22 @@ final class IceScan(
     * mapped aliases (a field-ID schema would silently null-fill them) and
     * cast-renamed back to the canonical schema; columns added with an
     * initial-default fill with the default, not null, in files that
-    * predate them. `deletes` applies the tasks' merge-on-read deletes in
-    * each branch, directly over its file relation, with the key columns
-    * cast to their canonical types; `killed` keeps the rows the deletes
-    * kill instead of the live ones. `stampPathPos` adds `__path`/`__pos`
-    * (normalized file path + row index) BEFORE the branch union hides the
-    * per-file _metadata column. Shared by the MOR scan ([[toDFFor]]) and
-    * the delete→DV conversion read ([[IceTable.rewritePositionDeletes]])
-    * so name-mapped tables convert under exactly the resolution rules
-    * scans read with.
+    * predate them. `keep` is the row condition, built from
+    * [[DeleteFilter.live]] predicates: it applies in each branch, directly
+    * over its file relation where `_metadata` resolves, and is handed the
+    * branch's key-column mapping (a field's value as the branch reads it,
+    * cast to its canonical type, or its initial default where the file
+    * predates it). `stampPathPos` adds `__path`/`__pos` (normalized file
+    * path + row index) BEFORE the branch union hides the per-file
+    * _metadata column. Every read of table data files goes through here:
+    * the scan and every rewrite ([[toDFFor]]), the rows a delete snapshot
+    * removed ([[IceTable.removedRows]]), the positional-delete match and
+    * the delete→DV conversion read, so name-mapped, ID-less and
+    * initial-default files resolve under one set of rules.
     */
   private[table] def readTasksProjected(spark: SparkSession, tasks: Seq[FileScanTask],
-      readSchema: IceSchema, stampPathPos: Boolean, deletes: Option[DeleteFilter] = None,
-      killed: Boolean = false): DataFrame = {
+      readSchema: IceSchema, stampPathPos: Boolean,
+      keep: Option[(NestedField => Column) => Column] = None): DataFrame = {
     val schema = scanSchema
     val aliasOf: Map[Int, String] = meta.properties.get(NameMapping.PropertyKey)
       .map(j => NameMapping.aliasById(NameMapping.parse(j))).getOrElse(Map.empty)
@@ -2689,16 +2698,15 @@ final class IceScan(
         renames: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]])
         : DataFrame = {
       var d = IceScan.readFiles(spark, schema, fs)
-      // deletes and per-file row positions apply before any union hides
-      // the per-file _metadata column
-      deletes.foreach { dl =>
-        val live = dl.live { f =>
+      // the row condition and per-file row positions apply before any
+      // union hides the per-file _metadata column
+      keep.foreach { k =>
+        d = d.where(k { f =>
           val tpe = IceType.toSpark(f.tpe)
           if (absentDefaulted.contains(f.id)) lit(f.initialDefault.get).cast(tpe)
           else if (renames.isDefined) col(aliasName(f)).cast(tpe)
           else col(f.name)
-        }
-        d = d.where(if (killed) !live else live)
+        })
       }
       if (stampPathPos) d = d
         .withColumn("__path", IceScan.normalizedMetaPath)
@@ -2706,10 +2714,10 @@ final class IceScan(
       renames.foreach { rs =>
         // cast to the canonical type: struct casts rename NESTED aliased
         // fields back positionally (same tree shape by construction)
-        val keep = rs.map { case (alias, canon, tpe) =>
+        val canonical = rs.map { case (alias, canon, tpe) =>
           col(alias).cast(tpe).as(canon)
         } ++ (if (stampPathPos) Seq(col("__path"), col("__pos")) else Nil)
-        d = d.select(keep: _*)
+        d = d.select(canonical: _*)
       }
       d
     }
@@ -2759,7 +2767,7 @@ object IceScan {
     * per row: decoding only paths that hold a `%` keeps the common case at
     * the cost of the scheme strip (an unconditional decode doubled it).
     */
-  def normalizedMetaPath: org.apache.spark.sql.Column = {
+  private[table] def normalizedMetaPath: Column = {
     val bare = regexp_replace(col("_metadata.file_path"),
       "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
     when(bare.contains("%"), url_decode(regexp_replace(bare, "\\+", "%2B")))
@@ -2785,7 +2793,7 @@ object IceScan {
     * touches no storage and submits no Spark job. The schema is made
     * nullable, as Spark's own reader does with a user schema.
     */
-  def readFiles(spark: SparkSession, schema: StructType,
+  private[table] def readFiles(spark: SparkSession, schema: StructType,
       files: Seq[DataFile]): DataFrame = {
     val qualify = qualifier(spark.sessionState.newHadoopConf())
     val statuses = files.distinctBy(_.filePath).map { f =>
@@ -2814,37 +2822,6 @@ object IceScan {
       fsByRoot.getOrElseUpdate((u.getScheme, u.getAuthority), p.getFileSystem(hadoopConf))
         .makeQualified(p)
     }
-  }
-
-  /** (file_path, pos) rows of parquet positional-delete files plus
-    * deletion-vector blobs — for the streaming changelog, which emits
-    * positions as rows (scans and rewrites apply deletes in the scan task,
-    * [[DeleteFilter]]). The parquet files are read in ONE
-    * manifest-backed scan ([[readFiles]]) with the fixed delete schema, so
-    * no listing or schema-inference job runs. DV bitmaps decode
-    * EXECUTOR-side — the driver ships only (puffin, offset, length, ref)
-    * pointers, so a multi-GB accumulated delete set never materializes on
-    * the driver.
-    */
-  def positionsOf(spark: SparkSession, parquetDeletes: Seq[DataFile],
-      dvs: Seq[DataFile]): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val parts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-    if (parquetDeletes.nonEmpty)
-      parts += readFiles(spark, DeleteFilter.PositionDeleteSchema, parquetDeletes)
-    if (dvs.nonEmpty) {
-      val refs = dvs.map(f => (f.filePath, f.contentOffset.getOrElse(0L),
-        f.contentSizeInBytes.getOrElse(0L), f.referencedDataFile.getOrElse("")))
-      parts += spark.createDataset(refs)
-        .repartition(math.min(refs.size, spark.sparkContext.defaultParallelism))
-        .flatMap { case (puffin, off, len, ref) =>
-          val bm = Puffin.decodeDV(Puffin.readBlob(puffin, off, len))
-          val out = Seq.newBuilder[(String, Long)]
-          bm.forEach(pos => out += ((ref, pos)))
-          out.result()
-        }.toDF("file_path", "pos")
-    }
-    parts.result().reduce(_.unionByName(_))
   }
 }
 

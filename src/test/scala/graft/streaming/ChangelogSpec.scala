@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,6 +37,26 @@ class ChangelogSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def nation = spark.read.parquet(s"$sfDir/nation.parquet")
+
+  /** A name-mapped table whose data comes from one file of `rows` written
+    * without field ids under `f_`-prefixed names.
+    */
+  private def mappedTable(name: String, rows: DataFrame): (IceTable, String) = {
+    val canonical = SchemaConv.fromSpark(nation.schema)
+    val dir = Files.createTempDirectory(s"graft-$name").toString
+    rows.select(rows.columns.map(c => col(c).as(s"f_$c")).toSeq: _*)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val t = IceTable.create(catalog, name, canonical)
+    t.updateProperties(set = Map(NameMapping.PropertyKey -> NameMapping.toJson(
+      canonical.fields.map(f => MappedField(Some(f.id), Seq(s"f_${f.name}"))))))
+    (t, DataWriter.listParquet(dir).head._1)
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private def rowsOf(df: DataFrame, kind: String) =
+    df.where(s"change_type = '$kind'").drop("change_type", "change_seq")
 
   private def changes(t: IceTable, since: Long) =
     Ingest.changelogSince(spark, t, since)
@@ -221,5 +242,80 @@ class ChangelogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Ingest.changelogSince(spark, t, s1.snapshotId)
     assert(df.count() === 0)
     assert(df.columns.takeRight(2) === Array("change_type", "change_seq"))
+  }
+
+  test("inserts from an ID-less file carry their values, in the changelog and changesSince") {
+    val (t, foreign) = mappedTable("cdc_idless_insert", nation.where("n_nationkey >= 10"))
+    val s1 = t.append(nation.where("n_nationkey < 10"))
+    t.addFiles(Seq(foreign))
+    t.refresh()
+    assert(changes(t, s1.snapshotId) === (10L until 25L).map(k => (k, "I", 2L)).toSet)
+    val expect = nation.where("n_nationkey >= 10")
+    assert(sameRows(rowsOf(Ingest.changelogSince(spark, t, s1.snapshotId), "I"), expect))
+    assert(sameRows(Ingest.changesSince(spark, t, s1.snapshotId), expect))
+  }
+
+  test("deletes from an ID-less file carry their values") {
+    val (t, foreign) = mappedTable("cdc_idless_delete", nation)
+    val s1 = t.addFiles(Seq(foreign))
+    t.deleteWhere(spark, P.lt("n_nationkey", 3L))
+    t.refresh()
+    assert(changes(t, s1.snapshotId) === (0L until 3L).map(k => (k, "D", 2L)).toSet)
+    assert(sameRows(rowsOf(Ingest.changelogSince(spark, t, s1.snapshotId), "D"),
+      nation.where("n_nationkey < 3")))
+  }
+
+  test("an equality delete surfaces as D rows at its sequence number") {
+    val t = IceTable.create(catalog, "cdc_eq", SchemaConv.fromSpark(nation.schema))
+    val s1 = t.append(nation.where("n_nationkey < 10"))
+    t.equalityDelete(spark, nation.where("n_nationkey IN (2, 5)").select("n_nationkey"),
+      Seq("n_nationkey"))
+    t.refresh()
+    assert(t.scan(spark).count() == 8)
+    assert(changes(t, s1.snapshotId) === Set((2L, "D", 2L), (5L, "D", 2L)))
+  }
+
+  test("building a changelog over parquet and DV deletes submits no Spark job") {
+    val t = IceTable.create(catalog, "cdc_jobs", SchemaConv.fromSpark(nation.schema),
+      properties = Map("format-version" -> "3"))
+    val s1 = t.append(nation.where("n_nationkey < 10"))
+    t.deleteWhere(spark, P.lt("n_nationkey", 3L))
+    t.deleteWhereDV(spark, P.and(P.gtEq("n_nationkey", 5L), P.lt("n_nationkey", 7L)))
+    t.refresh()
+    val (df, jobs) =
+      graft.JobCount.during(spark)(Ingest.changelogSince(spark, t, s1.snapshotId))
+    assert(jobs == 0, s"$jobs jobs while building the changelog")
+    assert(df.select("n_nationkey", "change_type", "change_seq").collect()
+      .map(r => (r.getAs[Number](0).longValue(), r.getString(1), r.getLong(2))).toSet ===
+      (0L until 3L).map(k => (k, "D", 2L)).toSet ++ (5L until 7L).map(k => (k, "D", 3L)))
+  }
+
+  test("a delete snapshot whose parent expired fails the changelog, naming it") {
+    val t = IceTable.create(catalog, "cdc_expired_parent", SchemaConv.fromSpark(nation.schema))
+    val s1 = t.append(nation.where("n_nationkey < 10"))
+    t.createTag("start", s1.snapshotId)
+    val s2 = t.append(nation.where("n_nationkey >= 10"))
+    t.deleteWhere(spark, P.lt("n_nationkey", 3L))
+    t.refresh()
+    val s3 = t.metadata.currentSnapshot.get
+    t.expireSnapshots(olderThanMs = System.currentTimeMillis() + 1000000L)
+    t.refresh()
+    assert(t.metadata.snapshotById(s2.snapshotId).isEmpty, "fixture must expire the parent")
+    val e = intercept[IllegalStateException](
+      Ingest.changelogSince(spark, t, s1.snapshotId).collect())
+    assert(e.getMessage.contains(s3.snapshotId.toString) &&
+      e.getMessage.contains(s2.snapshotId.toString), e.getMessage)
+  }
+
+  test("changesSince fills a v3 column's initial default in files that predate it") {
+    val t = IceTable.create(catalog, "cdc_default", SchemaConv.fromSpark(nation.schema),
+      properties = Map("format-version" -> "3"))
+    val s1 = t.append(nation.where("n_nationkey < 10"))
+    t.append(nation.where("n_nationkey >= 10"))
+    t.updateSchema().addColumnWithDefault("score", IceInt, 7).commit()
+    assert(t.scan(spark).where("score = 7").count() == 25)
+    val scores = Ingest.changesSince(spark, t, s1.snapshotId).select("score")
+      .collect().map(r => Option(r.get(0)))
+    assert(scores.length == 15 && scores.forall(_.contains(7)), scores.mkString(","))
   }
 }

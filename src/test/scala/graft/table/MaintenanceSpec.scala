@@ -125,6 +125,28 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(_.get(0).toString).distinct.length == got.length)
   }
 
+  test("compaction of name-mapped ID-less files with no deletes keeps every value") {
+    val region = spark.read.parquet(s"$sfDir/region.parquet")
+    val canonical = SchemaConv.fromSpark(region.schema)
+    val foreignDir = Files.createTempDirectory("graft-mapped-compact").toString
+    region.select(region.columns.map(c =>
+        org.apache.spark.sql.functions.col(c).as(s"f_$c")).toSeq: _*)
+      .coalesce(2).write.mode("overwrite").parquet(foreignDir)
+    val t = IceTable.create(catalog, "region_mapped_compact", canonical)
+    t.updateProperties(set = Map(NameMapping.PropertyKey -> NameMapping.toJson(
+      canonical.fields.map(f => MappedField(Some(f.id), Seq(s"f_${f.name}"))))))
+    t.addFiles(DataWriter.listParquet(foreignDir).map(_._1))
+    t.refresh()
+    assert(t.newScan().planFiles().forall(t =>
+      t.file.hasFieldIds.contains(false) && t.deletes.isEmpty))
+    def same = { val s = t.scan(spark); s.exceptAll(region).isEmpty && region.exceptAll(s).isEmpty }
+    assert(same)
+    t.compact(spark, 1)
+    t.refresh()
+    assert(t.newScan().planFiles().forall(_.file.hasFieldIds.contains(true)))
+    assert(same, "compaction changed the rows of a name-mapped table")
+  }
+
   test("artifact GC: expired-snapshot artifacts deleted, live ones untouchable") {
     val region = spark.read.parquet(s"$sfDir/region.parquet")
     val t = IceTable.create(catalog, "li_artifact_gc",

@@ -89,7 +89,7 @@ class WapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val staged = t.appendToBranch(region.where("r_regionkey = 1"), "audit")
     t.append(region.where("r_regionkey = 2")) // main moves on — ff refused
     intercept[IllegalArgumentException](t.fastForwardMain("audit"))
-    val picked = t.cherryPickAppend(staged.snapshotId)
+    val picked = t.cherryPick(staged.snapshotId)
     t.refresh()
     assert(t.scan(spark).count() === 3)
     assert(t.metadata.currentSnapshotId === Some(picked.snapshotId))
@@ -99,7 +99,7 @@ class WapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[IllegalArgumentException] {
       t.deleteWhere(spark, graft.core.Predicates.equalTo("r_regionkey", 0L))
       t.refresh()
-      t.cherryPickAppend(t.metadata.currentSnapshotId.get)
+      t.cherryPick(t.metadata.currentSnapshotId.get)
     }
     assert(e.getMessage.contains("only append snapshots"))
   }
@@ -109,14 +109,14 @@ class WapSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.append(region.where("r_regionkey = 0"))
     val staged = t.appendToBranch(region.where("r_regionkey = 1"), "audit")
     t.append(region.where("r_regionkey = 2"))
-    val picked = t.cherryPickAppend(staged.snapshotId)
+    val picked = t.cherryPick(staged.snapshotId)
     t.refresh()
     assert(picked.summary.get(IceTable.SourceSnapshotIdKey)
       === Some(staged.snapshotId.toString),
       "cherry-picked commit must record its source snapshot")
     assert(t.scan(spark).count() === 3)
     // a retried/repeated pick of the same stage must refuse, not double rows
-    val e = intercept[IllegalArgumentException](t.cherryPickAppend(staged.snapshotId))
+    val e = intercept[IllegalArgumentException](t.cherryPick(staged.snapshotId))
     assert(e.getMessage.contains("refusing duplicate publish"))
     assert(t.scan(spark).count() === 3, "refused pick must not change main")
   }
@@ -128,7 +128,7 @@ class WapSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.fastForwardMain("audit")
     t.refresh()
     assert(t.scan(spark).count() === 2)
-    val e = intercept[IllegalArgumentException](t.cherryPickAppend(staged.snapshotId))
+    val e = intercept[IllegalArgumentException](t.cherryPick(staged.snapshotId))
     assert(e.getMessage.contains("already on main"))
     assert(t.scan(spark).count() === 2)
   }
