@@ -30,8 +30,9 @@ import graft.meta.{FileIO, Puffin}
   * deletes, deletion vectors and equality deletes that [[DeleteIndex]]
   * matched to it at planning, sequence rules and partition scope already
   * resolved. The scan's rows then pass [[ApplyDeletes]], a Catalyst
-  * predicate over the raw `_metadata.file_path`, `_metadata.row_index` and
-  * the equality key columns. It resolves the file's deletes once per file,
+  * predicate over `_metadata.data_file` (the data file path as the
+  * manifest records it), `_metadata.row_index` and the equality key
+  * columns. It resolves the file's deletes once per file,
   * drops a row whose position is deleted and a row whose key is in an
   * applicable equality-delete set, and decodes every delete file through
   * the JVM-wide [[DeleteCache]]. So a merge-on-read read or rewrite is one
@@ -46,7 +47,7 @@ private[table] final class DeleteFilter private (
     */
   def live(keyOf: NestedField => Column): Column =
     GraftShim.column(ApplyDeletes(
-      (Seq(col("_metadata.file_path"), col("_metadata.row_index")) ++
+      (Seq(col("_metadata.data_file"), col("_metadata.row_index")) ++
         keyFields.map(keyOf)).map(GraftShim.expression).toIndexedSeq, table))
 }
 
@@ -212,10 +213,9 @@ private[table] final case class EqGroup(keyOrdinals: Array[Int], types: Array[Da
   */
 private[table] final case class FileDeletes(pos: Array[Int], dvs: Array[Int], eqList: Int)
 
-/** What a scan ships to its tasks, keyed by the data file paths the
-  * manifests record (bare and decoded: the form `IceScan.pathOnly` gives
-  * for a row's `_metadata.file_path`, and the form position-delete files
-  * record).
+/** What a scan ships to its tasks, keyed by the data file path strings
+  * the manifests record: the form a row's `_metadata.data_file` carries
+  * and position-delete files record.
   */
 private[table] final case class DeleteTable(
     files: Map[String, FileDeletes],
@@ -250,7 +250,7 @@ private[table] final class DeleteFilterState(t: DeleteTable) {
   private def open(path: UTF8String): Unit = {
     lastPath = path.clone()
     cursor = 0
-    val dataPath = IceScan.pathOnly(path.toString)
+    val dataPath = path.toString
     t.files.get(dataPath) match {
       case None =>
         positions = null
@@ -322,7 +322,7 @@ private[table] final class DeleteFilterState(t: DeleteTable) {
 }
 
 /** The scan-task delete predicate: true when no delete applicable to the
-  * row's data file kills it. Children are the raw `_metadata.file_path`,
+  * row's data file kills it. Children are `_metadata.data_file`,
   * `_metadata.row_index` and the equality key columns. Generated code
   * evaluates the children, packs the keys into one reused row and calls the
   * task's [[DeleteFilterState]]; no value is converted to a Scala type.

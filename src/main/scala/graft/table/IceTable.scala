@@ -1511,8 +1511,10 @@ final class IceTable private (
       throw new IllegalStateException("cannot analyze an empty table"))
     val cols = schema.fields.filter(_.tpe.isPrimitive)
     require(cols.nonEmpty, "no primitive columns to analyze")
-    val df = newScan(snapshotId = Some(snap.snapshotId),
-      selected = Some(cols.map(_.name))).toDF(spark)
+    // the current snapshot through the current schema: a time-travel scan
+    // would bind the snapshot's schema, which predates a later rename or
+    // added column
+    val df = newScan(selected = Some(cols.map(_.name))).toDF(spark)
     val (stats, _) = ThetaStats.sketchColumns(df.select(cols.map(f => col(f.name)): _*))
     val tokenBlobs = tokenStats.map { ts =>
       val fieldId = schema.idByName.getOrElse(ts.column,
@@ -1575,7 +1577,7 @@ final class IceTable private (
       cols.map(f => Seq(f.id)).toSet)
     if (!appendOnly || !fieldsMatch) return analyzeTable(spark)
     val (prevSnap, prevSf) = prev.get
-    val scan = newScan(snapshotId = Some(snap.snapshotId), selected = Some(cols.map(_.name)))
+    val scan = newScan(selected = Some(cols.map(_.name)))
     val newTasks = scan.planFiles().filter(_.dataSeq > prevSnap.sequenceNumber)
     val prevBlobs = Puffin.readFooter(prevSf.statisticsPath)
       .filter(_.blobType == ThetaBlobType)
@@ -2588,34 +2590,16 @@ final class IceScan(
     val readBase = schema.select(readNames, caseSensitive)
     // lineage reads add the materialized `_row_id` and
     // `_last_updated_sequence_number` columns (reserved field ids):
-    // present in rewrite-preserved files, null-filled elsewhere — the
-    // inheritance fallback fills those from first_row_id + position and
-    // the entry's data sequence number respectively
+    // present in rewrite-preserved files, null elsewhere, where
+    // readTasksProjected inherits them from the file's first_row_id +
+    // position and its data sequence number
     val readSchema =
       if (withRowId) IceSchema(readBase.schemaId, readBase.fields ++ IceTable.LineageFields)
       else readBase
 
     graft.GraftSession.ensurePrepared(spark)
-    var df = readTasksProjected(spark, tasks, readSchema, stampPathPos = withRowId,
+    var df = readTasksProjected(spark, tasks, readSchema, stampPathPos = false,
       keep = DeleteFilter(spark, tasks, schema).map(dl => dl.live _))
-    if (withRowId) {
-      // per-file (first_row_id, data sequence) via ONE metadata-sized
-      // broadcast map; the materialized columns (rewrite-preserved) win
-      // over inheritance
-      val ridRows = new java.util.ArrayList[org.apache.spark.sql.Row](tasks.size)
-      tasks.foreach(t => ridRows.add(org.apache.spark.sql.Row(
-        t.file.filePath, t.firstRowId.map(Long.box).orNull, Long.box(t.dataSeq))))
-      val ridMap = spark.createDataFrame(ridRows, StructType(Seq(
-        StructField("__rp", StringType, nullable = false),
-        StructField("__frid", LongType, nullable = true),
-        StructField("__fseq", LongType, nullable = false))))
-      df = df.join(broadcast(ridMap), col("__path") === col("__rp"), "left")
-        .withColumn("_row_id",
-          coalesce(col("_row_id"), col("__frid") + col("__pos")))
-        .withColumn(IceTable.LastUpdatedSeqCol,
-          coalesce(col(IceTable.LastUpdatedSeqCol), col("__fseq")))
-        .drop("__rp", "__frid", "__fseq", "__path", "__pos")
-    }
     if (bound != AlwaysTrue) df = df.where(Predicates.toColumn(bound))
     df = df.select(projected.fields.map(f => col(f.name)) ++
       (if (withRowId) Seq(col("_row_id"), col(IceTable.LastUpdatedSeqCol))
@@ -2639,13 +2623,18 @@ final class IceScan(
     * over its file relation where `_metadata` resolves, and is handed the
     * branch's key-column mapping (a field's value as the branch reads it,
     * cast to its canonical type, or its initial default where the file
-    * predates it). `stampPathPos` adds `__path`/`__pos` (normalized file
-    * path + row index) BEFORE the branch union hides the per-file
-    * _metadata column. Every read of table data files goes through here:
-    * the scan and every rewrite ([[toDFFor]]), the rows a delete snapshot
-    * removed ([[IceTable.removedRows]]), the positional-delete match and
-    * the delete→DV conversion read, so name-mapped, ID-less and
-    * initial-default files resolve under one set of rules.
+    * predates it). A `readSchema` with the lineage columns fills a null
+    * `_row_id` with the file's `first_row_id` + row index and a null last
+    * updated sequence with the file's data sequence number.
+    * `stampPathPos` adds `__path`/`__pos`: the data file path as the
+    * manifest records it (the key of its deletes) and the row index. All
+    * of these read file-constant `_metadata` fields ([[IceScan.readFiles]])
+    * before the branch union hides them. Every read of table data files
+    * goes through here: the scan and every rewrite ([[toDFFor]]), the
+    * rows a delete snapshot removed ([[IceTable.removedRows]]), the
+    * positional-delete match and the delete→DV conversion read, so
+    * name-mapped, ID-less and initial-default files resolve under one set
+    * of rules.
     */
   private[table] def readTasksProjected(spark: SparkSession, tasks: Seq[FileScanTask],
       readSchema: IceSchema, stampPathPos: Boolean,
@@ -2657,6 +2646,7 @@ final class IceScan(
     val mayHaveIdLess = aliasOf.nonEmpty ||
       meta.properties.get(IceTable.HasIdLessFilesProp).contains("true")
     val defaultedFields = readSchema.fields.filter(_.initialDefault.isDefined)
+    val lineage = readSchema.fields.exists(_.id == IceTable.RowIdFieldId)
     val needSplit = mayHaveIdLess || defaultedFields.nonEmpty
     val defaultedIds = defaultedFields.map(_.id).toSet
     // groups: (file carries IDs, defaulted IDs absent). Both facts come
@@ -2664,8 +2654,8 @@ final class IceScan(
     // column presence from the per-column stats keys — so planning opens
     // ZERO data files. Only legacy entries written before the stamp (or
     // stat-less files under defaulted columns) pay a footer sniff.
-    val groups: Seq[((Boolean, Set[Int]), Seq[DataFile])] =
-      if (!needSplit) Seq((true, Set.empty[Int]) -> tasks.map(_.file))
+    val groups: Seq[((Boolean, Set[Int]), Seq[FileScanTask])] =
+      if (!needSplit) Seq((true, Set.empty[Int]) -> tasks)
       else {
         val nameToId = NameMapping.index(table.nameMapping)
         // the stats-key shortcut infers "column absent from file" from
@@ -2687,14 +2677,14 @@ final class IceScan(
               Some((ids, statsIds))
             case _ => None
           }
-          Seq(f -> fromManifest.getOrElse(
+          Seq(t -> fromManifest.getOrElse(
             ParquetStats.fileColumns(f.filePath, nameToId)))
         }
           .groupBy { case (_, (hasIds, present)) => (hasIds, defaultedIds -- present) }
           .view.mapValues(_.map(_._1).toSeq).toSeq
       }
 
-    def readBranch(fs: Seq[DataFile], schema: StructType, absentDefaulted: Set[Int],
+    def readBranch(fs: Seq[FileScanTask], schema: StructType, absentDefaulted: Set[Int],
         renames: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]])
         : DataFrame = {
       var d = IceScan.readFiles(spark, schema, fs)
@@ -2708,8 +2698,15 @@ final class IceScan(
           else col(f.name)
         })
       }
+      // v3 lineage: a materialized value (rewrite-preserved) wins over
+      // inheritance from the file's manifest entry
+      if (lineage) d = d
+        .withColumn("_row_id", coalesce(col("_row_id"),
+          col("_metadata.first_row_id") + col("_metadata.row_index")))
+        .withColumn(IceTable.LastUpdatedSeqCol, coalesce(col(IceTable.LastUpdatedSeqCol),
+          col("_metadata.data_sequence_number")))
       if (stampPathPos) d = d
-        .withColumn("__path", IceScan.normalizedMetaPath)
+        .withColumn("__path", col("_metadata.data_file"))
         .withColumn("__pos", col("_metadata.row_index"))
       renames.foreach { rs =>
         // cast to the canonical type: struct casts rename NESTED aliased
@@ -2753,59 +2750,34 @@ object IceScan {
     */
   def deleteCacheStats: (Long, Long) = (DeleteCache.hits.get, DeleteCache.misses.get)
 
-  /** `_metadata.file_path` is a URI; normalize to a bare absolute path so
-    * it compares equal to the paths recorded in manifests (which
-    * listParquet records scheme- and authority-less via toUri.getPath).
-    * Stripping only `file:` made every MOR delete stop applying on
-    * warehouses with a scheme+authority (hdfs://nn:8020, s3a://bucket):
-    * the manifest side is bare, the delete side kept the full URI, and
-    * the path equi-joins never matched. The URI is also percent-encoded
-    * while manifests hold the decoded path: a partition directory whose
-    * name carries a `%` (escaped string partition values) never matched
-    * either, so the path is percent-decoded too. `+` is a literal in a URI
-    * path, not a space, so it is protected from the form decoder. This runs
-    * per row: decoding only paths that hold a `%` keeps the common case at
-    * the cost of the scheme strip (an unconditional decode doubled it).
-    */
-  private[table] def normalizedMetaPath: Column = {
-    val bare = regexp_replace(col("_metadata.file_path"),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
-    when(bare.contains("%"), url_decode(regexp_replace(bare, "\\+", "%2B")))
-      .otherwise(bare)
-  }
-
-  /** Scala-side twin of [[normalizedMetaPath]]: URI → bare, decoded
-    * absolute path. For Hadoop path strings (already decoded) use
-    * [[graft.meta.FileIO.pathOnly]] instead.
-    */
-  def pathOnly(p: String): String =
-    java.net.URLDecoder.decode(
-      p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "").replace("+", "%2B"),
-      java.nio.charset.StandardCharsets.UTF_8)
-
   /** Parquet read of files the manifests already describe. Spark's
     * path-based reader rediscovers what the entries record: it stats every
     * path (a listing JOB past 32 paths) and infers a schema when none is
-    * given. Here the relation's file index is the entries themselves —
-    * qualified path and `fileSizeInBytes`, one partition directory, and a
-    * `sizeInBytes` equal to the summed file sizes, so broadcast and join
-    * choices see exactly what a listed read would. Building the frame
-    * touches no storage and submits no Spark job. The schema is made
-    * nullable, as Spark's own reader does with a user schema.
+    * given. Here the relation's file index is the tasks' entries
+    * themselves — qualified path and `fileSizeInBytes`, one partition
+    * directory, and a `sizeInBytes` equal to the summed file sizes, so
+    * broadcast and join choices see exactly what a listed read would.
+    * Each entry also carries its task's facts as file-constant `_metadata`
+    * fields: `_metadata.data_file` is the manifest's own path string (the
+    * key of the file's deletes, and what position deletes record), beside
+    * `first_row_id` and `data_sequence_number` for v3 lineage. Building
+    * the frame touches no storage and submits no Spark job. The schema is
+    * made nullable, as Spark's own reader does with a user schema.
     */
   private[table] def readFiles(spark: SparkSession, schema: StructType,
-      files: Seq[DataFile]): DataFrame = {
+      tasks: Seq[FileScanTask]): DataFrame = {
     val qualify = qualifier(spark.sessionState.newHadoopConf())
-    val statuses = files.distinctBy(_.filePath).map { f =>
+    val statuses = tasks.distinctBy(_.file.filePath).map { t =>
       org.apache.spark.sql.execution.datasources.FileStatusWithMetadata(
-        new org.apache.hadoop.fs.FileStatus(f.fileSizeInBytes, false, 0, 0L, 0L,
-          qualify(f.filePath)))
+        new org.apache.hadoop.fs.FileStatus(t.file.fileSizeInBytes, false, 0, 0L, 0L,
+          qualify(t.file.filePath)),
+        Map("data_file" -> t.file.filePath, "data_sequence_number" -> t.dataSeq) ++
+          t.firstRowId.map("first_row_id" -> _))
     }
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       ManifestFileIndex(statuses), new StructType(),
       org.apache.spark.sql.graftshim.GraftShim.asNullable(schema), None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      Map.empty)(spark)
+      new ManifestParquetFormat, Map.empty)(spark)
     spark.baseRelationToDataFrame(relation)
   }
 
@@ -2844,6 +2816,22 @@ private[table] final case class ManifestFileIndex(
   override def refresh(): Unit = ()
   override val sizeInBytes: Long = files.map(_.getLen).sum
   override def partitionSchema: StructType = new StructType()
+}
+
+/** Parquet whose `_metadata` also holds the facts [[IceScan.readFiles]]
+  * attaches to each file from its manifest entry, beside Parquet's own
+  * `row_index`: `data_file` (the path exactly as the manifest records
+  * it), `first_row_id` (null for files without lineage) and
+  * `data_sequence_number`. The scan fills them once per file, so a row's
+  * delete key and lineage need no per-row path parsing and no join.
+  */
+private[table] final class ManifestParquetFormat
+    extends org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat {
+  import org.apache.spark.sql.catalyst.expressions.FileSourceConstantMetadataStructField
+  override def metadataSchemaFields: Seq[StructField] = super.metadataSchemaFields ++ Seq(
+    FileSourceConstantMetadataStructField("data_file", StringType, nullable = false),
+    FileSourceConstantMetadataStructField("first_row_id", LongType, nullable = true),
+    FileSourceConstantMetadataStructField("data_sequence_number", LongType, nullable = false))
 }
 
 /** A create-table staged client-side (reference `StagedTable`,

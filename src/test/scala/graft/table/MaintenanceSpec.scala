@@ -85,6 +85,29 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a v3 compactSmallFiles of 12 single-file appends is one Spark job and keeps lineage") {
+    val s = spark
+    import s.implicits._
+    val t = IceTable.create(catalog, "small_compact_v3",
+      SchemaConv.fromSpark(Seq((0L, 0L)).toDF("k", "v").schema),
+      properties = Map("format-version" -> "3"))
+    (0 until 12).foreach { i =>
+      t.append((i * 500L until (i + 1) * 500L).map(k => (k, k * 2)).toDF("k", "v").coalesce(1))
+    }
+    t.refresh()
+    def lineage(): Seq[(Long, Long, Long)] = IceTable.load(catalog, t.name)
+      .newScan(withRowId = true).toDF(spark)
+      .select($"k", $"_row_id", $"_last_updated_sequence_number")
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    val before = lineage()
+    assert(before.map(_._2).distinct.size == 6000)
+    val (snap, jobs) = graft.JobCount.during(spark)(t.compactSmallFiles(spark, Long.MaxValue))
+    assert(snap.isDefined)
+    assert(jobs == 1, s"$jobs Spark jobs for the v3 compaction")
+    assert(IceTable.load(catalog, t.name).newScan().planFiles().size < 12)
+    assert(lineage() == before)
+  }
+
   test("eq->DV conversion resolves key columns through the name mapping") {
     // an UPSERTED name-mapped table: foreign id-less files under aliased
     // names + our id-ful upsert files, equality debt across both — the
@@ -563,6 +586,42 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val afterDelete = t.analyzeIncrementally(spark)
     val distinctAfter = t.scan(spark).select("o_orderstatus").distinct().count()
     assert(ndv(afterDelete, statusId) == distinctAfter)
+  }
+
+  /** `ndv` and `null-count` of one column's theta blob. */
+  private def thetaOf(sf: StatisticsFile, fieldId: Int): (Long, Long) = {
+    val b = sf.blobMetadata.find(_.fields == Seq(fieldId)).getOrElse(
+      fail(s"no blob for field $fieldId in ${sf.blobMetadata}"))
+    (b.properties("ndv").toLong, b.properties("null-count").toLong)
+  }
+
+  test("statistics: analyze after renameColumn, with no snapshot since, reads the new name") {
+    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+    val t = IceTable.create(catalog, "stat_renamed", SchemaConv.fromSpark(nation.schema))
+    t.append(nation.where("n_nationkey < 10"))
+    t.analyzeTable(spark)
+    t.append(nation.where("n_nationkey >= 10"))
+    t.updateSchema().renameColumn("n_name", "name").commit()
+    t.refresh()
+    val nameId = t.schema.idByName("name")
+    // append-only since the analyzed snapshot, same field ids: the
+    // incremental path itself scans the new files
+    assert(thetaOf(t.analyzeIncrementally(spark), nameId) == ((25L, 0L)))
+    assert(thetaOf(t.analyzeTable(spark), nameId) == ((25L, 0L)))
+  }
+
+  test("statistics: analyze after addColumn, with no snapshot since, covers the new column") {
+    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+    val t = IceTable.create(catalog, "stat_added", SchemaConv.fromSpark(nation.schema))
+    t.append(nation.where("n_nationkey < 10"))
+    t.analyzeTable(spark)
+    t.append(nation.where("n_nationkey >= 10"))
+    t.updateSchema().addColumn("extra", IceLong).commit()
+    t.refresh()
+    val extraId = t.schema.idByName("extra")
+    // the column set changed: incremental ANALYZE falls back to a full one
+    assert(thetaOf(t.analyzeIncrementally(spark), extraId) == ((0L, 25L)))
+    assert(thetaOf(t.analyzeTable(spark), extraId) == ((0L, 25L)))
   }
 
   test("statistics: token-moment blobs drive jaccard plan choice without a corpus scan") {

@@ -87,8 +87,9 @@ class ManifestReadSpec extends AnyFunSuite with BeforeAndAfterAll
     val t = IceTable.create(catalog, "sized", SchemaConv.fromSpark(df.schema))
     t.updateProperties(set = Map("write.max-records-per-file" -> "25"))
     t.append(df.coalesce(1))
-    val files = t.newScan().planFiles().map(_.file)
-    val mine = IceScan.readFiles(spark, t.schema.toSpark, files)
+    val tasks = t.newScan().planFiles()
+    val files = tasks.map(_.file)
+    val mine = IceScan.readFiles(spark, t.schema.toSpark, tasks)
     val listed = spark.read.schema(t.schema.toSpark).parquet(files.map(_.filePath): _*)
     assert(mine.queryExecution.optimizedPlan.stats.sizeInBytes ==
       listed.queryExecution.optimizedPlan.stats.sizeInBytes)
